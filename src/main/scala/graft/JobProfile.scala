@@ -23,6 +23,8 @@ object JobProfile {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val order = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Int]())
+    // stage → owning job, from the job's declared stage ids
+    val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val desc = Option(js.properties)
@@ -32,19 +34,15 @@ object JobProfile {
           .getOrElse("")
         jobs.put(js.jobId, Job(js.jobId, desc, js.time))
         order.add(js.jobId)
+        js.stageIds.foreach(stageJob.put(_, js.jobId))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(jobs.get(je.jobId)).foreach(j => j.wallMs = je.time - j.t0)
       }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val m = sc.stageInfo.taskMetrics
-        // attribute the stage to the most recent unfinished job (jobId
-        // mapping via stageInfos is not exposed here; good enough for
-        // sequential query profiling)
-        val jid = sc.stageInfo.details // unused; keep simple
-        val _ = jid
-        val last = if (order.isEmpty) -1 else order.get(order.size - 1)
-        Option(jobs.get(last)).foreach { j =>
+        stageJob.get(sc.stageInfo.stageId).flatMap(id =>
+          Option(jobs.get(id))).foreach { j =>
           j.stages += 1
           j.tasks += sc.stageInfo.numTasks
           j.shuffleReadMb += m.shuffleReadMetrics.totalBytesRead / 1e6
@@ -59,7 +57,7 @@ object JobProfile {
     exec() // warm
     GraftSession.sweep(spark)
     (1 to reps).foreach { r =>
-      jobs.clear(); order.clear()
+      jobs.clear(); order.clear(); stageJob.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       exec()

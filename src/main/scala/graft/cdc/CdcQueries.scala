@@ -4214,6 +4214,10 @@ object CdcQueries {
       |FROM changelog""".stripMargin))
 
   // -------------------------------------------------------------- cdc43
+  /** The typed DDL table cdc43 declares over `dir`'s subscription. */
+  private[graft] def cdc43Table(dir: String): String =
+    s"cdc43_sub_${math.abs(dir.hashCode)}"
+
   /** THE REFERENCE'S HEADLINE DDL END TO END (round 17 — closing the
     * last SQL-surface asymmetry): `CREATE TABLE t (business columns)`
     * over the subscription, row images projected into the DECLARED
@@ -4299,7 +4303,7 @@ object CdcQueries {
       val sub = graft.sources.CdcSubscription(
         server = server, topic = "dts-events", group = Some("g-cdc43"),
         user = Some("subscriber"), password = Some("s3cr3t"))
-      val tblName = s"cdc43_sub_${math.abs(dir.hashCode)}"
+      val tblName = cdc43Table(dir)
       s.sql(s"DROP TABLE IF EXISTS $tblName")
       val opts = (sub.toKafkaOptions ++ Map(
         "wire" -> "dts-avro", "table" -> "app.events"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
 /** WRITE side of the `graft-cdc` transport: a DataSourceV2 batch +
@@ -22,7 +22,12 @@ import scala.collection.mutable.ArrayBuffer
   *     "name order = arrival order" contract): a zero-padded
   *     millisecond prefix + epoch + partition id
   *   - a chunk appears atomically (write to a dot-temp file, then
-  *     rename) so a concurrent reader never sees a torn footer
+  *     hard-link it to its name) so a concurrent reader never sees a
+  *     torn footer
+  *   - a published chunk is never replaced: two writes that pick the
+  *     same name (same `jobMillis` and partition) fail the second with
+  *     `FileAlreadyExistsException` instead of silently losing the
+  *     first (a rename would replace it)
   *   - empty partitions write nothing (no empty segments)
   *
   * Each task writes its own chunk — writers never coordinate, so the
@@ -75,7 +80,7 @@ private class CdcWriterFactory(path: String, jobMillis: Long)
 
 private case class CdcCommit(chunk: Option[String]) extends WriterCommitMessage
 
-private class CdcDataWriter(
+private[graft] class CdcDataWriter(
     path: String, epochId: Long, partitionId: Int, taskId: Long,
     jobMillis: Long)
   extends DataWriter[InternalRow] {
@@ -91,9 +96,11 @@ private class CdcDataWriter(
     val name =
       f"chunk-$jobMillis%013d-$e" +
         f"p$partitionId%05d${CdcChunkFile.Extension}"
-    val tmp = Paths.get(path, s".$name.tmp")
+    val tmp = Paths.get(path, s".$name.$taskId.tmp")
     CdcChunkFile.write(tmp.toString, buf.toSeq)
-    Files.move(tmp, Paths.get(path, name), StandardCopyOption.ATOMIC_MOVE)
+    // link(2) is atomic and, unlike rename(2), refuses an existing target
+    try Files.createLink(Paths.get(path, name), tmp)
+    finally Files.delete(tmp)
     CdcCommit(Some(name))
   }
 

@@ -55,4 +55,27 @@ class DeterminismSpec extends AnyFunSuite {
       assert(p1 == p17)
     } finally spark.conf.set(conf, old)
   }
+
+  test("cdc43's DOUBLE projection is exact: every unscaled value of " +
+      "its DECIMAL(18,4) column is below 2^53") {
+    // DOUBLE holds every integer below 2^53 exactly, so a DECIMAL(18,4)
+    // whose unscaled value stays under it converts to the same DOUBLE
+    // in every engine; checked at the smoke SF and the oracle's SF
+    val limit = java.math.BigInteger.ONE.shiftLeft(53)
+    for (dir <- Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01")
+        .toString)) {
+      graft.cdc.CdcQueries.defs.find(_.name == "cdc43_sql_typed_changelog")
+        .get.run(spark, dir)
+      // the table holds every emitted row, -U's before-image included
+      val r = spark.table(graft.cdc.CdcQueries.cdc43Table(dir))
+        .agg(count(col("val")), max(abs(col("val")))).head()
+      withClue(dir) {
+        assert(r.getLong(0) > 0, "no non-null val: the bound is vacuous")
+        val unscaled = r.getDecimal(1).setScale(4).unscaledValue()
+        assert(unscaled.compareTo(limit) < 0,
+          s"max |unscaled val| $unscaled is not below 2^53")
+      }
+      graft.sources.KafkaSimBroker.clear()
+    }
+  }
 }

@@ -54,8 +54,10 @@ class PerfSpec extends AnyFunSuite {
       // round-8 additions: ann03's oracle graduation moved its trainer
       // to integer-sum updates — the driver-side loop and the assign
       // Dataset.map must both stay monomorphic; cdc11 drives the full
-      // streaming retract topology (3 DSv2 writes + 6 micro-batches +
-      // two stateful operators), guarded like cdc10's real I/O
+      // streaming retract topology (3 DSv2 writes + 2 micro-batches +
+      // two stateful operators: at sf0.01 on local[4] each write is one
+      // chunk, and the cap-2 admission takes them as 2 + 1), guarded
+      // like cdc10's real I/O
       "ann03_knn_ivf"       -> 15.0,
       "cdc11_stream_retract_agg" -> 30.0,
       "cdc12_stream_windowed_live" -> 30.0,

@@ -117,6 +117,8 @@ class SinkSpec extends AnyFunSuite {
       tableDir, 2L, nBuckets = 4, maxDeltas = 2)
     val m2 = CdcParquetSink.latestManifest(tableDir).get
     assert(m2(hot).size == 1, s"chain should fold to a base, got ${m2(hot)}")
+    assert(SinkSpec.partFiles(tableDir, m2(hot).head) == 1,
+      s"the fresh base ${m2(hot).head} should be a single file")
     assert((m2 - hot) == (m1 - hot))
 
     // merged read is still last-DML-wins with tombstones honored: the
@@ -149,6 +151,59 @@ class SinkSpec extends AnyFunSuite {
     // manifests are the replay short-circuit: all four survive
     (0L to 3L).foreach { b =>
       assert(Files.exists(Paths.get(tableDir, f"manifest-v$b%012d.tsv"))) }
+  }
+
+  test("every bucket dir a write produces holds one file: delta, " +
+      "inline fold and compact") {
+    // AQE off, as in every micro-batch: with AQE on, a small batch's
+    // shuffle coalesces to one partition and would hide a write in
+    // which several tasks each open a file in the same bucket
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val dir = Files.createTempDirectory("gcl").toString
+    val tableDir = Files.createTempDirectory("tbl").toString
+    val ckpt = Files.createTempDirectory("ck").toString
+    // 200 keys over 4 buckets: ~50 keys a bucket, so a key-clustered
+    // merge would spread each bucket over all 4 shuffle tasks
+    val keys = 0 until 200
+    CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}",
+      keys.map(i => CdcFixtures.rec(i.toLong, 1000000L, Op.Insert, s"k$i", "a")))
+    CdcChunkFile.write(s"$dir/chunk-00001${CdcChunkFile.Extension}",
+      keys.map(i => CdcFixtures.rec(1000L + i, 2000000L, Op.Update, s"k$i", "b")))
+    // maxDeltas = 1: trigger 0 appends deltas, trigger 1 folds every bucket
+    val q = CdcParquetSink.start(
+      CdcStreaming.readStream(s, dir, maxChunksPerTrigger = Some(1)),
+      tableDir, ckpt, nBuckets = 4, maxDeltas = 1)
+    try q.processAllAvailable() finally q.stop()
+    def assertOneFileEach(m: Map[Int, Seq[String]], what: String): Unit = {
+      assert(m.size == 4, s"$what should touch all 4 buckets: $m")
+      m.values.flatten.foreach { rel =>
+        assert(SinkSpec.partFiles(tableDir, rel) == 1,
+          s"$what dir $rel holds ${SinkSpec.partFiles(tableDir, rel)} files")
+      }
+    }
+    val deltas = CdcParquetSink.manifestAsOf(tableDir, 0L).get
+    assert(deltas.values.forall(_.size == 1))
+    assertOneFileEach(deltas, "delta")
+    // ONE exchange, on bucket: the (bucket, key) window reuses it
+    val plan = CdcParquetSink.mergeByBucket(
+      s.read.schema(CdcParquetSink.StoreSchema)
+        .parquet(deltas.values.flatten.map(r => s"$tableDir/$r").toSeq: _*), 4)
+      .queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllIn(plan).size == 1 &&
+      plan.contains("Exchange hashpartitioning(bucket"), plan)
+    val folded = CdcParquetSink.latestManifest(tableDir).get
+    assert(folded.values.forall(_.head.contains("-base/")), folded)
+    assertOneFileEach(folded, "fold")
+    CdcParquetSink.compact(s, tableDir, nBuckets = 4)
+    val compacted = CdcParquetSink.latestManifest(tableDir).get
+    assert(compacted.values.forall(_.head.startsWith("compact-")), compacted)
+    assertOneFileEach(compacted, "compact")
+    // the clustered merge is still last-DML-wins per key
+    val table = CdcParquetSink.readTable(s, tableDir).get
+    assert(table.count() == keys.size)
+    assert(table.filter(element_at(col("after"), "v") =!= "b").count() == 0)
   }
 
   test("time travel: as-of reads pin snapshots; aged-out reads are None") {
@@ -604,6 +659,28 @@ class SinkSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("graft-cdc write: a chunk-name collision fails, never replaces") {
+    val src = Files.createTempDirectory("gcl").toString
+    val dst = Files.createTempDirectory("gcl").toString
+    CdcFixtures.writeChunks(src)
+    val rows = CdcStreaming.readBatch(spark, src)
+      .queryExecution.toRdd.map(_.copy()).collect()
+    // same jobMillis and partition id => the same chunk name
+    def writer() = new graft.sources.CdcDataWriter(dst, -1L, 0, 0L, 1234L)
+    val first = writer()
+    rows.take(10).foreach(first.write)
+    first.commit()
+    val second = writer()
+    rows.drop(10).foreach(second.write)
+    intercept[java.nio.file.FileAlreadyExistsException](second.commit())
+    // the first chunk survives intact, and no temp file is left behind
+    val chunks = CdcChunkFile.listChunks(dst)
+    assert(chunks.size == 1)
+    assert(CdcChunkFile.readRecords(chunks.head).map(_.id).toSeq ==
+      rows.take(10).map(_.getLong(0)).toSeq)
+    assert(Fs.listDir(Paths.get(dst)).size == 1)
+  }
+
   test("randomized model check: any DML sequence folds to the map model") {
     // deterministic fuzz: random insert/update/delete streams over a
     // small key space, random timestamps WITH ties (exercising the
@@ -745,4 +822,13 @@ class SinkSpec extends AnyFunSuite {
       assert(got.select("id").distinct().count() == recs.size)
     } finally q.stop()
   }
+}
+
+object SinkSpec {
+  /** Parquet data files in one bucket dir of a table. */
+  def partFiles(tableDir: String, rel: String): Int =
+    Fs.listDir(Paths.get(tableDir, rel)).count { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }
 }

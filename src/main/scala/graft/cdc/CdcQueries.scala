@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import graft.streaming.StreamGate
+import graft.streaming.StreamGate.{outSchema, runToParquetAndRead}
 
 /** §2.2 CDC / changelog queries — the reference's core domain
   * (change-data-capture subscription) re-expressed as declarative
@@ -17,6 +19,34 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * connectors/dts/formats/internal/record/OperationType.java), the
   * JSON `props` payload plays the row image (lazily parsed, ref:
   * LazyParseRecordImpl.java), user_id is the primary key.
+  *
+  * STREAMING and SINK gates share one harness
+  * ([[graft.streaming.StreamGate]]) and keep only their own semantics:
+  *
+  *  - records: the changelog through [[asRecords]] — the one
+  *    events → ChangeRecord projection (column overrides for a gate's
+  *    variant) — plus [[wireRecord]] for hand-built heartbeats,
+  *    sentinels and markers;
+  *  - ring: every scratch dir comes from `StreamGate.ring(tag, dir)`,
+  *    two slots per (gate, input dir) — the previous call's lazy frame
+  *    stays readable;
+  *  - write: the fixture is materialized once and dealt into ordered
+  *    batch writes ([[chunkDirOf]] / `StreamGate.writeBatches`); each
+  *    write publishes ONE chunk at every repo SF, and the harness
+  *    asserts that count, so an admission cap counts writes. Sink
+  *    gates apply the same records through [[builtSinkTable]];
+  *  - session: streams run in `StreamGate.gateSession(s)` (8 shuffle
+  *    partitions, no-data micro-batches off);
+  *  - run: `StreamGate.runToEnd` / `runToParquetAndRead` drain the
+  *    bounded stream, record its state telemetry and read the result
+  *    back on the OUTER session ([[sinkRows]] for sink tables).
+  *
+  * Admission cap = 2 on most gates (optimization r18, VERDICT r17 #5):
+  * the per-trigger planning + WAL + state-commit cycle is the gates'
+  * dominant cost and gains nothing from cores, so two one-chunk writes
+  * share a trigger — three writes run as triggers [2,1]. Each gate's
+  * comment states its layout and why merging writes cannot change its
+  * result.
   */
 object CdcQueries {
 
@@ -65,103 +95,110 @@ object CdcQueries {
   private def dataOps(s: SparkSession, dir: String): DataFrame =
     dataOpsOf(changelog(s, dir))
 
-  /** Streaming-gate FILE sink + read-back (round 11, VERDICT r10 #1 —
-    * the ing01/cdc10 pattern applied to every remaining streaming
-    * harness): no `format("memory")` whose row count scales with the
-    * corpus anywhere in the query path. Append-mode topologies write
-    * straight to a parquet FILE sink; complete-mode aggregates write
-    * each trigger's full snapshot through `foreachBatch` overwrite —
-    * the storage analogue of a complete-mode sink (a real deployment
-    * lands the snapshot in a table store; the result is the final
-    * trigger's). The read-back runs on the OUTER session with an
-    * explicit schema (a zero-row stream leaves nothing to infer from,
-    * and the child session's shuffle-partition override must not leak
-    * into how consumers execute the result — ADVICE r10 on ing01). */
-  private def runToParquetAndRead(
-      outer: SparkSession, frame: DataFrame, outDir: String,
-      complete: Boolean,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    graft.Fs.deleteRecursively(java.nio.file.Paths.get(outDir))
-    graft.Fs.deleteRecursively(java.nio.file.Paths.get(outDir + "_ck"))
-    val q =
-      if (complete)
-        frame.writeStream.outputMode("complete")
-          .option("checkpointLocation", outDir + "_ck")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(outDir)
-          }
-          .start()
-      else
-        frame.writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", outDir + "_ck")
-          .start()
-    try q.processAllAvailable()
-    finally { graft.StreamStats.record(q.recentProgress); q.stop() }
-    outer.read.schema(schema).parquet(outDir)
+  /** The one events → ChangeRecord projection every wire and sink gate
+    * writes: the `graft-cdc` transport schema in column order
+    * (CdcScan.schema — the batch WRITE reads it by position). The txn
+    * is `record_id div 100` (statement order within it rides record
+    * id; v4 fixtures carry it as `transSeq`), the key is `pk`, and the
+    * row image maps `image`'s fields to strings — before-image on a
+    * DELETE, after-image on an INSERT/UPDATE, none on a heartbeat or
+    * marker. `cols` replace a transport column by name or append one
+    * (v4's `transSeq`/`fkParents`, a gate's routing column). The sink
+    * reads the same rows by name, so sink gates feed it a projection
+    * of this frame ([[builtSinkTable]]). */
+  private def asRecords(log: DataFrame,
+      image: Seq[(String, Column)] = fullImage,
+      cols: Seq[(String, Column)] = Nil): DataFrame = {
+    val base = Seq(
+      "id" -> col("record_id"),
+      "transactionId" ->
+        concat(lit("tx-"), expr("record_id div 100").cast("string")),
+      "tsUs" -> col("ts_us"),
+      "bornUs" -> (col("ts_us") - 500L),
+      "op" -> col("op"),
+      "db" -> lit("app"), "tbl" -> lit("users"),
+      "pkNames" -> array(lit("pk")),
+      "before" -> when(col("op") === Op.Delete,
+        map(lit("pk"), col("pk").cast("string"))),
+      "after" -> when(col("op").isin(Op.Insert, Op.Update),
+        map_filter(
+          map(image.flatMap { case (n, c) => Seq(lit(n), c.cast("string")) }: _*),
+          (_, v) => v.isNotNull)),
+      "props" -> nullMap,
+      "sourceType" -> lit("MySQL"), "sourceVersion" -> lit("5.7"),
+      "ukNames" -> lit(null).cast("array<string>"))
+    val names = base.map(_._1).toSet
+    val over = cols.toMap
+    log.select((base.map { case (n, c) => over.getOrElse(n, c).as(n) } ++
+      cols.filterNot(c => names(c._1)).map { case (n, c) => c.as(n) }): _*)
   }
 
-  private def streamOutSchema(fields: (String, org.apache.spark.sql.types.DataType)*)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
-      org.apache.spark.sql.types.StructField(n, t)
-    })
+  /** The default row image: the changelog's pk, val and k. */
+  private def fullImage: Seq[(String, Column)] =
+    Seq("pk", "val", "k").map(n => n -> col(n))
 
-  /** Eagerly materialize a fixture frame (optimization round 17, guide
-    * §1.2 step 1: don't recompute what the job already computed): every
-    * streaming gate derives its wire fixture from the events scan +
-    * JSON projection and then runs 3-5 SEPARATE actions over it (a
-    * bounds/count aggregate plus one chunk-encode write per batch) —
-    * measured via JobProfile, each action re-paid the full scan+parse
-    * as a single-task job (~0.5-1.2 s each at sf0.1 on this box).
-    * localCheckpoint(eager) pays the scan ONCE; the batch writes then
-    * read cached blocks. Chunk BYTES are unchanged: localCheckpoint
-    * preserves partition layout and row order, so the coalesce /
-    * repartitionByRange deals see identical input and the ordered-
-    * arrival contract is untouched. Callers free the pinned blocks
-    * with [[freeFixture]] right after the last fixture action — before
-    * the streaming section runs — so nothing stays non-evictable. */
-  private def matFixture(df: DataFrame): DataFrame = df.localCheckpoint(true)
+  private def nullMap: Column = lit(null).cast("map<string,string>")
 
-  /** Release [[matFixture]]'s pinned blocks (the Similarity
-    * freeCheckpoint recipe: localCheckpoint blocks are non-evictable
-    * until explicitly unpersisted). */
-  private def freeFixture(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  private def noFk: Column =
+    lit(null).cast(org.apache.spark.sql.types.ArrayType(
+      graft.sources.CdcSource.fkParentType))
 
-  /** Per-segment row target for the parallel fixture chunk encode
-    * (round 13, VERDICT r12 #5): every streaming gate's 16× ScaleProbe
-    * sweep was dominated by single-task coalesce(1) encodes of 1.5M+
-    * records per batch (cdc12 92 s / cdc24 84.5 s at 16× — adjudicated
-    * harness floor, not operator cost). */
-  private val SegTargetRows = 262144L
+  /** One hand-built record in the transport schema (heartbeats,
+    * liveness sentinels, rollback closers, protocol markers), as the
+    * select list over a frame that supplies one row per record.
+    * `v4` appends the absent `transSeq`/`fkParents` sentinels. */
+  private def wireRecord(id: Column, txn: Column, tsUs: Column,
+      bornUs: Column, op: Column, tbl: String = "users",
+      after: Column = nullMap, props: Column = nullMap,
+      v4: Boolean = false): Seq[Column] =
+    Seq(id.as("id"), txn.as("transactionId"), tsUs.as("tsUs"),
+      bornUs.as("bornUs"), op.as("op"), lit("app").as("db"),
+      lit(tbl).as("tbl"), array(lit("pk")).as("pkNames"),
+      nullMap.as("before"), after.as("after"), props.as("props"),
+      lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
+      lit(null).cast("array<string>").as("ukNames")) ++
+      (if (v4) Seq(lit(Long.MaxValue).as("transSeq"), noFk.as("fkParents"))
+       else Nil)
 
-  /** Writes one time-contiguous fixture batch as ceil(rows/target)
-    * chunk segments encoded by that many TASKS, preserving the
-    * ordered-arrival contract: the range deal on (tsUs, id) puts
-    * earlier event times in lower partition ids, and the write path
-    * names all of one job's segments with a shared job-level time
-    * prefix + the partition id (CdcWrite's round-13 note), so the
-    * name-ordered admission replays them in event-time order — a
-    * key's later record can never precede its earlier one. At the
-    * gate SFs every batch fits one segment and the layout is the old
-    * coalesce(1) layout exactly. `approxRows` is a cheap driver-side
-    * estimate (an upper bound is fine — [[graft.sources.CdcWrite]]
-    * writes nothing for an empty partition). */
-  private def writeOrderedBatch(
-      df: org.apache.spark.sql.DataFrame, chunkDir: String,
-      approxRows: Long): Unit = {
-    val nSeg =
-      math.max(1L, (approxRows + SegTargetRows - 1) / SegTargetRows).toInt
-    val dealt =
-      if (nSeg == 1) df.coalesce(1)
-      else df.repartitionByRange(nSeg, col("tsUs"), col("id"))
-    dealt.write.format("graft-cdc").mode("append")
-      .option("path", chunkDir).save()
+  /** A sink read-back as the oracle's row: `lead` columns, then the
+    * key, winning record, op (when `op`) and image. */
+  private def sinkRows(df: DataFrame, lead: Seq[String] = Nil,
+      op: Boolean = true): DataFrame =
+    df.select(lead.map(col) ++ Seq(
+      expr("after['pk']").cast("bigint").as("pk"),
+      col("recordId").as("record_id"),
+      col("tsUs").as("ts_us")) ++
+      (if (op) Seq(col("op")) else Nil) ++ Seq(
+      expr("after['val']").cast("double").as("val"),
+      expr("after['k']").cast("int").as("k")): _*)
+
+  /** The id-mod-3 deal: three batches that interleave in event time,
+    * so arrival is deliberately out of timestamp order. */
+  private def byIdMod3(fix: DataFrame): Seq[DataFrame] =
+    (0L until 3L).map(b => fix.filter(pmod(col("id"), lit(3)) === b))
+
+  /** Three TIME-ordered thirds at fixed calendar cuts (the events
+    * fixture spans Jan 2024): arrival order preserves per-key event
+    * order, the contract that makes windowed results declarative. */
+  private def byCalendarThirds(fix: DataFrame): Seq[DataFrame] = {
+    val cut1 = unix_micros(lit("2024-01-11 00:00:00").cast("timestamp"))
+    val cut2 = unix_micros(lit("2024-01-21 00:00:00").cast("timestamp"))
+    Seq(fix.filter(col("tsUs") < cut1),
+      fix.filter(col("tsUs") >= cut1 && col("tsUs") < cut2),
+      fix.filter(col("tsUs") >= cut2))
+  }
+
+  /** A gate's chunk dir holding `batches(fix)` written in order (one
+    * chunk per batch at every repo SF, asserted), with the fixture
+    * materialized for the writes and freed after them. */
+  private def chunkDirOf(s: SparkSession, dir: String, tag: String,
+      records: DataFrame)(batches: DataFrame => Seq[DataFrame]): String = {
+    val chunkDir = StreamGate.ring(tag, dir)
+    val fix = StreamGate.fixture(records)
+    StreamGate.writeBatches(chunkDir,
+      graft.Tables.rowCount(s, dir, "events") / 3, batches(fix): _*)
+    StreamGate.free(fix)
+    chunkDir
   }
 
   // -------------------------------------------------------------- cdc01
@@ -326,7 +363,7 @@ object CdcQueries {
   private object Cdc08Transport {
     def ensure(s: SparkSession, dir: String): String = synchronized {
       val out = java.nio.file.Paths.get(
-        graft.Scratch.root, s"graft_cdc08_v1_${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}")
+        graft.Scratch.root, s"graft_cdc08_${math.abs(dir.hashCode)}")
       val done = out.resolve("_DONE")
       if (!java.nio.file.Files.exists(done)) {
         java.nio.file.Files.createDirectories(out)
@@ -479,70 +516,11 @@ object CdcQueries {
     * DuckDB, not just against example-based specs. Values survive a
     * string detour through the row image (double→string→double is
     * exact by the JLS shortest-repr contract). */
-  // parity counter PER INPUT DIR: a single global counter would let
-  // two interleaved calls for different sf dirs land consecutive
-  // same-dir calls on the same parity and delete files the previous
-  // invocation's returned DataFrame still reads.
-  // CONTRACT (ADVICE r4): the two-slot ring protects exactly ONE
-  // prior invocation per dir — the Nth call deletes the tree backing
-  // the (N-2)th call's still-lazy frame, and the harnesses honor that
-  // (DeterminismSpec holds at most two frames; Bench/Verify consume
-  // each frame before the next call). A caller that must hold >2
-  // results materializes them first (localCheckpoint/collect).
-  private val cdc10Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc10 = QueryDef(
     "cdc10_sink_materialize",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        col("ts_us").as("tsUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("array<string>").as("ukNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"))
-      // bounded per-input table dirs, NOT a fresh temp dir per call:
-      // bench/verify/specs invoke queries repeatedly, and a new sink
-      // tree per invocation grows /tmp without bound. Each call
-      // rebuilds from scratch (so a timed run measures the real write
-      // path, not the sink's idempotent-replay short-circuit) in one
-      // of TWO alternating dirs — the previous invocation's returned
-      // DataFrame still reads its own files (DeterminismSpec holds two
-      // frames and compares them), while growth stays bounded at two
-      // trees per input dir.
-      val parity = cdc10Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement() % 2
-      val tablePath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc10_b3x4m2_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + parity)
-      graft.Fs.deleteRecursively(tablePath)
-      val tableDir = tablePath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        graft.sinks.CdcParquetSink.applyBatch(
-          s, fix.filter(pmod(col("id"), lit(3)) === b),
-          tableDir, b, nBuckets = 4, maxDeltas = 2)
-      }
-      freeFixture(fix)
-      graft.sinks.CdcParquetSink.readTable(s, tableDir).get
-        .select(
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          col("op"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+      val tableDir = builtSinkTable(s, dir, "cdc10")
+      sinkRows(graft.sinks.CdcParquetSink.readTable(s, tableDir).get)
     },
     // the sink must agree with the declarative last-wins materialization
     Some(s"""$changelogSql
@@ -559,8 +537,8 @@ object CdcQueries {
     * out-of-timestamp-order batches, each written through the DSv2
     * `graft-cdc` BATCH WRITE (codec → atomic chunk segments), then ONE
     * Structured Streaming query consumes the chunk dir micro-batch by
-    * micro-batch (admission-capped; one time-batch per trigger since
-    * optimization r18) and runs the REAL retract
+    * micro-batch (admission-capped at two chunks per trigger) and
+    * runs the REAL retract
     * pipeline: flatMapGroupsWithState emits −1(old value)/+1(new
     * value) transitions per key, a second stateful operator sign-sums
     * them per value — the Flink `toRetractStream → GROUP BY` topology
@@ -571,95 +549,24 @@ object CdcQueries {
     * proven against DuckDB instead of example specs. Values whose adds
     * were all retracted sum to 0 and are dropped (the declarative side
     * has no such groups). */
-  private val cdc11Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc11 = QueryDef(
     "cdc11_stream_retract_agg",
     (s, dir) => {
-      import org.apache.spark.sql.functions.pmod
-      // full graft-cdc transport schema (CdcScan.schema) — the batch
-      // WRITE validates against it
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      // two-slot dir ring per input dir, the cdc10 contract: bounded
-      // /tmp growth, and the PREVIOUS invocation's lazy frame stays
-      // readable (the result below is checkpointed anyway)
-      val n = cdc11Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc11_k9w2r7_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      // coalesce(2): two chunk segments per batch write, independent
-      // of the input's partition count (unbounded task-chunks would
-      // turn into one micro-batch each — pure per-batch overhead);
-      // with the cap-2 admission below each batch is ONE trigger
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        fix.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
-      // THROWAWAY child session scopes the 8-state-partition override
-      // (both stateful operators spawn shuffle-partitions state tasks
-      // per micro-batch, and at this volume 32 of them are pure
-      // scheduler overhead; a real deployment sizes this to its key
-      // volume) — the cdc12/ing01 pattern, replacing the outer-session
-      // set/restore that could leak into a concurrent query. Round 13
-      // (VERDICT r12 watch item): the last `format("memory")` sink in
-      // the tree becomes the uniform FILE sink + outer read-back —
-      // the result was value-bounded (distinct k), so this is
-      // uniformity, not a scale fix.
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sp: SparkSession = child
-      // admission cap = 2 (optimization r18, VERDICT r17 #5 — the
-      // per-trigger planning+WAL+state-commit cycle is the gates'
-      // dominant cost and gains nothing from cores): each written
-      // batch is exactly TWO chunk segments, so cap 2 admits one
-      // whole time-contiguous batch per trigger — 3 triggers instead
-      // of 6. Batch boundaries, name-ordered arrival and the
-      // out-of-order delivery the gate proves are all unchanged; the
-      // stateful operators sort per key within a trigger
-      // (CdcStreaming sortBy(tsUs, recordId)), so merging a batch's
-      // two chunks into one trigger is order-deterministic and the
-      // final state is identical (oracle re-proven at both SFs).
+      val chunkDir =
+        chunkDirOf(s, dir, "cdc11", asRecords(dataOps(s, dir)))(byIdMod3)
+      // admission cap = 2 over three one-chunk writes: triggers [2,1]
+      // (the cap rationale in the object header). The stateful
+      // operators sort per key within a trigger (CdcStreaming
+      // sortBy(tsUs, recordId)), so merging two out-of-order batches
+      // into one trigger is order-deterministic and the final state is
+      // identical (oracle re-proven at both SFs)
+      val child = StreamGate.gateSession(s)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val counts = graft.streaming.CdcStreaming
-        .liveCountByValue(stream, expr("element_at(after, 'k')"))
+        .liveCountByValue(stream, expr("element_at(after, 'k')"))(child)
       runToParquetAndRead(s, counts, chunkDir + "_out", complete = true,
-        streamOutSchema("value" -> StringType, "live_rows" -> LongType))
+        outSchema("value" -> StringType, "live_rows" -> LongType))
         .filter(col("live_rows") =!= 0L)
         .select(col("value").cast("int").as("k"), col("live_rows"))
     },
@@ -687,89 +594,28 @@ object CdcQueries {
     * the window of the record that caused it — which DuckDB replays
     * with a per-key LAG over the ordered changelog. Cells whose adds
     * and retracts cancel (sum 0) are dropped on both sides. */
-  private val cdc12Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc12 = QueryDef(
     "cdc12_stream_windowed_live",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc12Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc12_t5p8q1_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      // TIME-ordered thirds (fixed calendar cuts; the events fixture
-      // spans Jan 2024) — arrival order preserves per-key event order,
-      // the contract that makes the windowed sums declarative
-      val cut1 = unix_micros(lit("2024-01-11 00:00:00").cast("timestamp"))
-      val cut2 = unix_micros(lit("2024-01-21 00:00:00").cast("timestamp"))
-      val batches = Seq(
-        col("tsUs") < cut1,
-        col("tsUs") >= cut1 && col("tsUs") < cut2,
-        col("tsUs") >= cut2)
-      // chunk names embed a job-level millis prefix and the source
-      // lists name-sorted, so three sequential writes into ONE dir
-      // arrive in write (= event-time) order; within a write the
-      // range-dealt segments arrive in partition-id (= event-time)
-      // order (writeOrderedBatch), so the ordered-arrival contract
-      // holds while big sweeps encode with N tasks. cdc11 keeps the
-      // multi-chunk out-of-order stress.
-      val fix = matFixture(asRecords)
-      val totalRows = fix.count()
-      batches.foreach { pred =>
-        writeOrderedBatch(fix.filter(pred), chunkDir, totalRows / 3)
-      }
-      freeFixture(fix)
-      // THROWAWAY child session scopes the 8-state-partition override
-      // (cdc11's sizing note) so it is invisible to concurrent queries
-      // (the ing01/ADVICE r9 pattern); the read-back below runs on the
-      // outer session
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sp: SparkSession = child
-      // admission cap = 2 (the cdc11 rationale): batches are ONE chunk
-      // each here, so cap 2 merges the first two time-contiguous
-      // batches into one trigger ([2,1]) — the final batch (whose
-      // heartbeats advance the terminal watermark) still admits ALONE,
-      // so the flush contract is untouched, and complete-mode output
-      // is the final snapshot either way (oracle re-proven at both SFs)
+      // time-ordered thirds, one chunk each: chunk names embed a
+      // job-level millis prefix and the source lists name-sorted, so
+      // the three writes arrive in write (= event-time) order — the
+      // ordered-arrival contract the windowed sums rely on. cdc11 keeps
+      // the out-of-order stress.
+      val chunkDir = chunkDirOf(s, dir, "cdc12",
+        asRecords(dataOps(s, dir)))(byCalendarThirds)
+      // admission cap = 2 over three one-chunk writes: triggers [2,1] —
+      // the final batch (whose heartbeats advance the terminal
+      // watermark) still admits ALONE, so the flush contract is
+      // untouched, and complete-mode output is the final snapshot
+      // either way (oracle re-proven at both SFs)
+      val child = StreamGate.gateSession(s)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val counts = graft.streaming.CdcStreaming
-        .windowedLiveCounts(stream, expr("element_at(after, 'k')"))
+        .windowedLiveCounts(stream, expr("element_at(after, 'k')"))(child)
       runToParquetAndRead(s, counts, chunkDir + "_out", complete = true,
-        streamOutSchema("win_us" -> LongType, "value" -> StringType,
+        outSchema("win_us" -> LongType, "value" -> StringType,
           "live_rows" -> LongType))
         .filter(col("live_rows") =!= 0L)
         .select(col("win_us"), col("value").cast("int").as("k"),
@@ -805,78 +651,24 @@ object CdcQueries {
     * is ≥ 12 h (Spark merges on strict overlap: an event at exactly
     * prev+gap starts a new session), start = first event, end = last
     * event + gap, n_changes = events in the island. */
-  private val cdc13Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc13 = QueryDef(
     "cdc13_stream_sessions",
     (s, dir) => {
-      val gapUs = 12L * 3600 * 1000000
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc13Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc13_w7h3m9_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      // time-contiguous batches, one chunk each (cdc12's contract)
-      val cut1 = unix_micros(lit("2024-01-11 00:00:00").cast("timestamp"))
-      val cut2 = unix_micros(lit("2024-01-21 00:00:00").cast("timestamp"))
-      val batches = Seq(
-        col("tsUs") < cut1,
-        col("tsUs") >= cut1 && col("tsUs") < cut2,
-        col("tsUs") >= cut2)
-      val fix = matFixture(asRecords)
-      batches.foreach { pred =>
-        fix.filter(pred).coalesce(1)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
-      // child-scoped conf + parquet snapshot sink + outer read-back
-      // (VERDICT r10 #1: the session table scales with the keyspace —
-      // it belongs on storage, not in a driver-memory sink)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sp: SparkSession = child
-      // admission cap = 2 ([2,1] split, the cdc12 note): final batch
-      // alone, complete-mode snapshot — trigger-granularity-free
-      // (oracle re-proven at both SFs)
+      // time-ordered thirds, one chunk each (cdc12's contract)
+      val chunkDir = chunkDirOf(s, dir, "cdc13",
+        asRecords(dataOps(s, dir)))(byCalendarThirds)
+      // parquet snapshot sink + outer read-back (VERDICT r10 #1: the
+      // session table scales with the keyspace — it belongs on
+      // storage, not in a driver-memory sink); admission cap = 2:
+      // triggers [2,1], final batch alone, complete-mode snapshot —
+      // trigger-granularity-free (oracle re-proven at both SFs)
+      val child = StreamGate.gateSession(s)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val sessions = graft.streaming.CdcStreaming
         .sessionizedActivity(stream, gap = "12 hours", watermark = "30 days")
       runToParquetAndRead(s, sessions, chunkDir + "_out", complete = true,
-        streamOutSchema("key" -> StringType, "start_us" -> LongType,
+        outSchema("key" -> StringType, "start_us" -> LongType,
           "end_us" -> LongType, "n_changes" -> LongType))
     },
     Some(s"""$changelogSql,
@@ -910,72 +702,25 @@ object CdcQueries {
     * pair arrived first. (A production deployment sets the watermark
     * to its real disorder bound and accepts eviction; the oracle gate
     * pins the no-eviction semantics.) */
-  private val cdc14Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc14 = QueryDef(
     "cdc14_stream_interval_join",
     (s, dir) => {
       val tolUs = 48L * 3600 * 1000000
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc14Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc14_z2f6k4_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        fix.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
-      // child-scoped conf + append-mode parquet FILE sink + outer
-      // read-back (VERDICT r10 #1: the joined pair set is 16× at 16×
-      // input — a stream-stream join's output belongs on storage)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sp: SparkSession = child
-      // admission cap = 2: one written batch (two chunks) per trigger
-      // — the cdc11 rationale; the 30-day watermark means no state
-      // eviction either way and the joined pair set is trigger-
-      // granularity-independent (oracle re-proven at both SFs)
+      val chunkDir =
+        chunkDirOf(s, dir, "cdc14", asRecords(dataOps(s, dir)))(byIdMod3)
+      // append-mode parquet FILE sink + outer read-back (VERDICT r10
+      // #1: the joined pair set is 16× at 16× input — a stream-stream
+      // join's output belongs on storage); admission cap = 2 over
+      // three one-chunk writes: triggers [2,1]. The 30-day watermark
+      // means no state eviction either way and the joined pair set is
+      // trigger-granularity-independent (oracle re-proven at both SFs)
+      val child = StreamGate.gateSession(s)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val joined = graft.streaming.CdcStreaming
         .intervalJoin(stream, "INSERT", "UPDATE", tolUs, watermark = "30 days")
       runToParquetAndRead(s, joined, chunkDir + "_out", complete = false,
-        streamOutSchema("l_id" -> LongType, "r_id" -> LongType,
+        outSchema("l_id" -> LongType, "r_id" -> LongType,
           "key" -> StringType, "delta_us" -> LongType))
     },
     Some(s"""$changelogSql
@@ -1004,76 +749,29 @@ object CdcQueries {
     * duplication-free declarative changelog fails. 30-day watermark
     * keeps dedup state across the replay horizon (a production
     * deployment sizes it to its reseek window). */
-  private val cdc15Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc15 = QueryDef(
     "cdc15_stream_redelivery",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc15Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc15_r4n8s2_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
       val cut1 = unix_micros(lit("2024-01-11 00:00:00").cast("timestamp"))
       val cut2 = unix_micros(lit("2024-01-21 00:00:00").cast("timestamp"))
       val replayUs = 3L * 86400 * 1000000
       // batch 1 and 2 each REPLAY the previous batch's tail — the
-      // post-reseek re-read
-      val batches = Seq(
-        col("tsUs") < cut1,
-        (col("tsUs") >= cut1 - replayUs) && col("tsUs") < cut2,
-        col("tsUs") >= cut2 - replayUs)
-      val fix = matFixture(asRecords)
-      batches.foreach { pred =>
-        fix.filter(pred).coalesce(1)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
+      // post-reseek re-read; one chunk per write
+      val chunkDir = chunkDirOf(s, dir, "cdc15",
+          asRecords(dataOps(s, dir))) { fix =>
+        Seq(fix.filter(col("tsUs") < cut1),
+          fix.filter(col("tsUs") >= cut1 - replayUs && col("tsUs") < cut2),
+          fix.filter(col("tsUs") >= cut2 - replayUs))
       }
-      freeFixture(fix)
-      // child-scoped conf + parquet snapshot sink + outer read-back
-      // (VERDICT r10 #1: per-key counts scale with the keyspace)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sp: SparkSession = child
-      // admission cap = 2 ([2,1] split, the cdc12 note): batch 2's
-      // replay of batch 1's tail now arrives in the SAME trigger —
-      // dropDuplicatesWithinWatermark dedups within a batch exactly
-      // like across batches (state insert + probe), the 30-day
-      // watermark spans the whole horizon so no id evicts early, and
-      // complete-mode output is the final snapshot (oracle re-proven
-      // at both SFs)
+      // parquet snapshot sink + outer read-back (VERDICT r10 #1:
+      // per-key counts scale with the keyspace); admission cap = 2:
+      // triggers [2,1], so batch 2's replay of batch 1's tail arrives
+      // in the SAME trigger — dropDuplicatesWithinWatermark dedups
+      // within a batch exactly like across batches (state insert +
+      // probe), the 30-day watermark spans the whole horizon so no id
+      // evicts early, and complete-mode output is the final snapshot
+      // (oracle re-proven at both SFs)
+      val child = StreamGate.gateSession(s)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val deduped = graft.streaming.CdcStreaming
@@ -1083,7 +781,7 @@ object CdcQueries {
         .groupBy(col("key"))
         .agg(count(lit(1)).as("n_records"), max(col("tsUs")).as("last_us"))
       runToParquetAndRead(s, counts, chunkDir + "_out", complete = true,
-        streamOutSchema("key" -> StringType, "n_records" -> LongType,
+        outSchema("key" -> StringType, "n_records" -> LongType,
           "last_us" -> LongType))
     },
     Some(s"""$changelogSql
@@ -1106,51 +804,11 @@ object CdcQueries {
     * declarative last-DML-wins over ONLY the records of batches 0-1 —
     * rows arriving in batch 2, including deletes of batch-0/1 keys,
     * must be invisible. */
-  private val cdc16Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc16 = QueryDef(
     "cdc16_sink_time_travel",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        col("ts_us").as("tsUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("array<string>").as("ukNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"))
-      val parity = cdc16Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement() % 2
-      val tablePath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc16_b3x4m2_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + parity)
-      graft.Fs.deleteRecursively(tablePath)
-      val tableDir = tablePath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        graft.sinks.CdcParquetSink.applyBatch(
-          s, fix.filter(pmod(col("id"), lit(3)) === b),
-          tableDir, b, nBuckets = 4, maxDeltas = 2)
-      }
-      freeFixture(fix)
-      graft.sinks.CdcParquetSink.readTableAsOf(s, tableDir, 1L).get
-        .select(
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          col("op"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+      val tableDir = builtSinkTable(s, dir, "cdc16")
+      sinkRows(graft.sinks.CdcParquetSink.readTableAsOf(s, tableDir, 1L).get)
     },
     // the snapshot must equal the declarative last-wins over batches
     // 0-1 only (id mod 3 <= 1) — batch 2 invisible
@@ -1174,43 +832,10 @@ object CdcQueries {
     * `insert`s, keys live only in v0 are `delete`s (post-v0 DELETEs),
     * keys whose winning record changed are `update`s (post-image
     * row); unchanged keys appear on neither side. */
-  private val cdc17Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc17 = QueryDef(
     "cdc17_sink_diff",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        col("ts_us").as("tsUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("array<string>").as("ukNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"))
-      val parity = cdc17Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement() % 2
-      val tablePath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc17_d5v1q8_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + parity)
-      graft.Fs.deleteRecursively(tablePath)
-      val tableDir = tablePath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        graft.sinks.CdcParquetSink.applyBatch(
-          s, fix.filter(pmod(col("id"), lit(3)) === b),
-          tableDir, b, nBuckets = 4, maxDeltas = 2)
-      }
-      freeFixture(fix)
+      val tableDir = builtSinkTable(s, dir, "cdc17")
       // retention arithmetic this diff DEPENDS on (ADVICE r11): with
       // maxDeltas=2 and 3 batches, v1 folds nothing and its chains
       // still reference v0's delta dirs, so RetainVersions=2 (v1,v2 +
@@ -1218,19 +843,13 @@ object CdcQueries {
       // manifestAsOf(0) resolves. Growing maxDeltas, shrinking
       // RetainVersions, or adding batches can age v0 out — fail with
       // the snapshot named instead of an opaque NoSuchElementException.
-      graft.sinks.CdcParquetSink.tableChanges(s, tableDir, 0L, 2L)
+      sinkRows(graft.sinks.CdcParquetSink.tableChanges(s, tableDir, 0L, 2L)
         .getOrElse(sys.error(
           s"cdc17: snapshot v0 of $tableDir aged out of GC retention " +
             s"(RetainVersions=${graft.sinks.CdcParquetSink.RetainVersions})" +
             " — the maxDeltas=2 / 3-batch / RetainVersions=2 arithmetic" +
-            " this query pins no longer holds"))
-        .select(
-          col("change_type"),
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+            " this query pins no longer holds")),
+        lead = Seq("change_type"), op = false)
     },
     // declarative difference of the two as-of states: v0 = last-wins
     // over batch 0 (id mod 3 = 0), v2 = over all three batches
@@ -1269,89 +888,33 @@ object CdcQueries {
     * cdc10 gates `applyBatch` batch-by-batch from driver code; THIS
     * gates the STREAMING entry point end-to-end — the changelog is
     * dealt into three out-of-timestamp-order batches (the cdc11
-    * id-mod-3 deal, two chunk segments each → one micro-batch per
-    * batch under the cap-2 admission), each micro-batch lands as a delta with
-    * mid-run chain folds at maxDeltas=2, and the final table must
+    * id-mod-3 deal, one chunk each → triggers [2,1] under the cap-2
+    * admission), each micro-batch lands as a delta (maxDeltas=2), and
+    * the final table must
     * hash-match the declarative last-DML-wins — out-of-order arrival,
     * UPDATE last-wins and DELETE tombstones proven through the wire
     * decode + micro-batch boundaries + sink fold machinery in one
     * comparison. The subscription-to-analytics-store pipeline the
     * reference exists to feed (README: land the subscription into the
     * big-data platform), as one oracle-gated query. */
-  private val cdc18Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc18 = QueryDef(
     "cdc18_stream_to_sink",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc18Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc18_f7j2p5_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        fix.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
+      val chunkDir =
+        chunkDirOf(s, dir, "cdc18", asRecords(dataOps(s, dir)))(byIdMod3)
       val tableDir = chunkDir + "_tbl"
       val ckptDir = chunkDir + "_tblck"
       Seq(tableDir, ckptDir).foreach(d =>
         graft.Fs.deleteRecursively(java.nio.file.Paths.get(d)))
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // admission cap = 2: one written batch (two chunks) per trigger
-      // — the cdc11 rationale; the sink's per-epoch applyBatch runs 3×
-      // instead of 6× and the last-wins table state is identical
-      // (oracle re-proven at both SFs)
-      val stream = graft.streaming.CdcStreaming
-        .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
-      val q = graft.sinks.CdcParquetSink.start(
-        stream, tableDir, ckptDir, nBuckets = 4, maxDeltas = 2)
-      try q.processAllAvailable()
-      finally { graft.StreamStats.record(q.recentProgress); q.stop() }
-      // read back on the OUTER session (ADVICE r10 pattern)
-      graft.sinks.CdcParquetSink.readTable(s, tableDir).get
-        .select(
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          col("op"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+      // admission cap = 2 over three one-chunk writes: triggers [2,1],
+      // so the sink's per-epoch applyBatch runs twice and the
+      // last-wins table state is identical (oracle re-proven at both
+      // SFs)
+      val stream = graft.streaming.CdcStreaming.readStream(
+        StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(2))
+      StreamGate.runToEnd(graft.sinks.CdcParquetSink.start(
+        stream, tableDir, ckptDir, nBuckets = 4, maxDeltas = 2))
+      sinkRows(graft.sinks.CdcParquetSink.readTable(s, tableDir).get)
     },
     // the streamed sink must agree with the declarative last-wins
     // materialization — cdc10's oracle, reached through the wire +
@@ -1464,11 +1027,7 @@ object CdcQueries {
           sum(col("dv")).cast("double").as("sum_val"))
         .filter(col("n_live") > 0)
         .localCheckpoint(true)
-      state0.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      StreamGate.free(state0)
       out
     },
     // the declarative view at t₁ — the state the incremental algebra
@@ -1536,51 +1095,25 @@ object CdcQueries {
       |WHERE rn = 1 AND op <> 'DELETE'""".stripMargin))
 
   // -------------------------------------------------------------- cdc22
-  private val cdc22Calls =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-
-  /** Build the 3-batch sink table the round-12 sink-lifecycle gates
-    * read: the changelog's data ops as ChangeRecord-shaped rows,
-    * split `pmod(record_id, 3)` into three applied batches (batches
+  /** Build the 3-batch sink table the sink gates (cdc10, cdc16,
+    * cdc17, cdc22, cdc23, cdc25) read: the changelog's data ops as
+    * records, dealt id-mod-3 into three applied batches (batches
     * interleave in ts — out-of-order arrival exercised), nBuckets=4 /
-    * maxDeltas=2 so inline folds fire mid-run. Table dir is
-    * per-(process, dir, call-parity) — the two-slot ring lets a
-    * concurrent reader on the previous invocation finish. */
+    * maxDeltas=2 so inline folds fire mid-run, in the gate's ring dir.
+    * `image` is the after-image the records carry. */
   private def builtSinkTable(s: SparkSession, dir: String, tag: String,
-      calls: java.util.concurrent.ConcurrentHashMap[String,
-        java.util.concurrent.atomic.AtomicLong]): String = {
-    val asRecords = dataOps(s, dir).select(
-      col("record_id").as("id"),
-      col("ts_us").as("tsUs"),
-      col("op"),
-      lit("app").as("db"), lit("users").as("tbl"),
-      array(lit("pk")).as("pkNames"),
-      lit(null).cast("array<string>").as("ukNames"),
-      when(col("op") === "DELETE",
-        map(lit("pk"), col("pk").cast("string"))).as("before"),
-      when(col("op") =!= "DELETE",
-        map_filter(
-          map(lit("pk"), col("pk").cast("string"),
-            lit("val"), col("val").cast("string"),
-            lit("k"), col("k").cast("string")),
-          (_, v) => v.isNotNull)).as("after"))
-    val parity = calls
-      .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-      .getAndIncrement() % 2
-    val tablePath = java.nio.file.Paths.get(
-      graft.Scratch.root,
-      "graft_" + tag + "_k9p2w6_" + ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + parity)
-    graft.Fs.deleteRecursively(tablePath)
-    val tableDir = tablePath.toString
-    val fix = matFixture(asRecords)
-    (0L until 3L).foreach { b =>
+      image: Seq[(String, Column)] = fullImage): String = {
+    val tableDir = StreamGate.ring(tag, dir)
+    // pin only the columns the sink reads: at the full transport width
+    // cdc16/cdc17 ran ~10% slower in interleaved Timeit pairs (sf0.1)
+    val fix = StreamGate.fixture(asRecords(dataOps(s, dir), image)
+      .select("id", "tsUs", "op", "db", "tbl", "pkNames", "ukNames",
+        "before", "after"))
+    byIdMod3(fix).zipWithIndex.foreach { case (b, i) =>
       graft.sinks.CdcParquetSink.applyBatch(
-        s, fix.filter(pmod(col("id"), lit(3)) === b),
-        tableDir, b, nBuckets = 4, maxDeltas = 2)
+        s, b, tableDir, i.toLong, nBuckets = 4, maxDeltas = 2)
     }
-    freeFixture(fix)
+    StreamGate.free(fix)
     tableDir
   }
 
@@ -1601,16 +1134,9 @@ object CdcQueries {
   private val cdc22 = QueryDef(
     "cdc22_sink_compact",
     (s, dir) => {
-      val tableDir = builtSinkTable(s, dir, "cdc22", cdc22Calls)
+      val tableDir = builtSinkTable(s, dir, "cdc22")
       graft.sinks.CdcParquetSink.compact(s, tableDir, nBuckets = 4)
-      graft.sinks.CdcParquetSink.readTable(s, tableDir).get
-        .select(
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          col("op"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+      sinkRows(graft.sinks.CdcParquetSink.readTable(s, tableDir).get)
     },
     // compaction must be state-invisible: the oracle is the same
     // declarative last-wins materialization the UNcompacted sink
@@ -1623,10 +1149,6 @@ object CdcQueries {
       |WHERE rn = 1 AND op <> 'DELETE'""".stripMargin))
 
   // -------------------------------------------------------------- cdc23
-  private val cdc23Calls =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-
   /** CHANGE-DATA-FEED over the sink (round 12) — the row-level change
     * SUBSCRIPTION an incremental consumer runs against the landed
     * table (Delta CDF / `table_changes` over every published version):
@@ -1650,18 +1172,11 @@ object CdcQueries {
   private val cdc23 = QueryDef(
     "cdc23_change_feed",
     (s, dir) => {
-      val tableDir = builtSinkTable(s, dir, "cdc23", cdc23Calls)
-      graft.sinks.CdcParquetSink.changeFeed(s, tableDir)
+      val tableDir = builtSinkTable(s, dir, "cdc23")
+      sinkRows(graft.sinks.CdcParquetSink.changeFeed(s, tableDir)
         .getOrElse(sys.error(
-          s"change feed unavailable (no published versions) at $tableDir"))
-        .select(
-          col("version"),
-          col("change_type"),
-          expr("after['pk']").cast("bigint").as("pk"),
-          col("recordId").as("record_id"),
-          col("tsUs").as("ts_us"),
-          expr("after['val']").cast("double").as("val"),
-          expr("after['k']").cast("int").as("k"))
+          s"change feed unavailable (no published versions) at $tableDir")),
+        lead = Seq("version", "change_type"), op = false)
     },
     // per-version states s0/s1/s2 (last-wins over batches ≤ v, batch =
     // record_id % 3), diffed pairwise; the image is the b-side row when
@@ -1744,8 +1259,6 @@ object CdcQueries {
     * Scale: everything rides the changelog scan; the only shuffle is
     * the windowed count's, state is bounded by open windows ×
     * values. */
-  private val cdc24Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   private val Cdc24WinUs = 10000000L
   private val Cdc24DelayMs = 5L * 86400 * 1000 // 5 days
 
@@ -1754,65 +1267,18 @@ object CdcQueries {
     (s, dir) => {
       val isData = col("op") =!= "HEARTBEAT"
       val straggler = isData && col("record_id") % 11 === 7
-      val asRecords = changelog(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op").isin("INSERT", "UPDATE"),
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"),
-        straggler.as("straggler"))
-      val n = cdc24Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc24_j6r2d8_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
+      val chunkDir = StreamGate.ring("cdc24", dir)
       // two time-contiguous on-time batches, then the stragglers
       val cut1 = unix_micros(lit("2024-01-16 00:00:00").cast("timestamp"))
-      val onTimeBatches = Seq(
-        !col("straggler") && col("tsUs") < cut1,
-        !col("straggler") && col("tsUs") >= cut1)
-      val fix = matFixture(asRecords)
+      // heartbeats stay IN (they advance the watermark in-band)
+      val fix = StreamGate.fixture(
+        asRecords(changelog(s, dir), cols = Seq("straggler" -> straggler)))
       val wire = fix.drop("straggler")
-      def writeHeartbeat(id: Long, tsUs: Column): Unit =
-        wire.limit(1).select(
-          lit(id).as("id"), lit("tx-hb").as("transactionId"),
-          tsUs.as("tsUs"), tsUs.as("bornUs"),
-          lit("HEARTBEAT").as("op"),
-          lit("app").as("db"), lit("users").as("tbl"),
-          array(lit("pk")).as("pkNames"),
-          lit(null).cast("map<string,string>").as("before"),
-          lit(null).cast("map<string,string>").as("after"),
-          lit(null).cast("map<string,string>").as("props"),
-          lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-          lit(null).cast("array<string>").as("ukNames"))
-          .coalesce(1)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      // parallel encode, arrival stays event-time-ordered per batch
-      // (writeOrderedBatch); ~5/11 of the records per on-time batch
-      val totalRows = fix.count()
-      def writeBatch(pred: Column): Unit =
-        writeOrderedBatch(fix.filter(pred).drop("straggler"),
-          chunkDir, totalRows / 2)
-      onTimeBatches.foreach(writeBatch)
+      val onTime = fix.filter(!col("straggler")).drop("straggler")
+      val totalRows = graft.Tables.rowCount(s, dir, "events")
+      def heartbeat(id: Long, tsUs: Column): DataFrame =
+        wire.limit(1).select(wireRecord(lit(id), lit("tx-hb"), tsUs, tsUs,
+          lit(Op.Heartbeat)): _*)
       // liveness heartbeat carrying the subscription's on-time
       // high-water event time, BEFORE the replayed stragglers (the
       // reference's idle-partition liveness record): it pins the
@@ -1821,37 +1287,29 @@ object CdcQueries {
       // by (measured: Spark 4 filters batch n with stats from batch
       // n−2 on this path; with this record batches n−1 and n−2 carry
       // the SAME max, so a 1- or 2-batch lag yields one watermark)
-      // read from the materialized fixture (same rows: asRecords keeps
-      // heartbeats, straggler = isData && id % 11 == 7) — one less
-      // events scan
-      val maxOnUs = fix.filter(!col("straggler"))
-        .agg(max(col("tsUs"))).head.getLong(0)
-      writeHeartbeat(999999998L, lit(maxOnUs))
-      writeBatch(col("straggler"))
+      val maxOnUs = onTime.agg(max(col("tsUs"))).head.getLong(0)
       // final liveness heartbeats: flush every still-open window (a
       // fixed calendar instant far past the fixture's Jan-2024 span,
       // so wm_final clears every window end; written twice so the
       // flushing watermark lands whatever the stats lag is)
       val flushTs = unix_micros(lit("2024-06-01 00:00:00").cast("timestamp"))
-      writeHeartbeat(999999999L, flushTs)
-      writeHeartbeat(1000000000L, flushTs)
-      freeFixture(fix)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val stream = graft.streaming.CdcStreaming
-        .readStream(child, chunkDir, maxChunksPerTrigger = Some(1))
+      // six one-chunk writes (~5/11 of the records per on-time batch),
+      // each admitted ALONE (cap 1): six triggers
+      StreamGate.writeBatches(chunkDir, totalRows / 2,
+        onTime.filter(col("tsUs") < cut1), onTime.filter(col("tsUs") >= cut1))
+      StreamGate.writeBatches(chunkDir, 1L, heartbeat(999999998L, lit(maxOnUs)))
+      StreamGate.writeBatches(chunkDir, totalRows / 2,
+        fix.filter(col("straggler")).drop("straggler"))
+      StreamGate.writeBatches(chunkDir, 1L,
+        heartbeat(999999999L, flushTs), heartbeat(1000000000L, flushTs))
+      StreamGate.free(fix)
+      val stream = graft.streaming.CdcStreaming.readStream(
+        StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(1))
       val counts = graft.streaming.CdcStreaming.windowedOnTimeCounts(
         stream, expr("element_at(after, 'k')"), "10 seconds", "5 days")
       val ontime = runToParquetAndRead(s, counts, chunkDir + "_out",
         complete = false,
-        streamOutSchema("win_us" -> LongType, "value" -> StringType,
+        outSchema("win_us" -> LongType, "value" -> StringType,
           "n" -> LongType))
         .select(lit("ontime").as("leg"), col("win_us"),
           col("value").cast("int").as("k"), col("n"))
@@ -1937,49 +1395,16 @@ object CdcQueries {
     * 11/86/957 post-cut live keys at the three SFs). Oracle = the
     * declarative last-wins states at both cuts with the column rule
     * applied literally — hash-match at all three SFs. */
-  private val cdc25Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   private val Cdc25CutTs = "2024-01-30 00:00:00"
 
   private val cdc25 = QueryDef(
     "cdc25_evolved_snapshots",
     (s, dir) => {
       val cut = unix_micros(lit(Cdc25CutTs).cast("timestamp"))
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        col("ts_us").as("tsUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("array<string>").as("ukNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string"),
-              // the ADD COLUMN point: records from the cut on carry
-              // the new field (upstream started emitting it)
-              lit("v2"), when(col("ts_us") >= cut,
-                (col("k").cast("long") * 2).cast("string"))),
-            (_, v) => v.isNotNull)).as("after"))
-      val parity = cdc25Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement() % 2
-      val tablePath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc25_h4t7n1_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + parity)
-      graft.Fs.deleteRecursively(tablePath)
-      val tableDir = tablePath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        graft.sinks.CdcParquetSink.applyBatch(
-          s, fix.filter(pmod(col("id"), lit(3)) === b),
-          tableDir, b, nBuckets = 4, maxDeltas = 2)
-      }
-      freeFixture(fix)
+      // the ADD COLUMN point: records from the cut on carry the new
+      // field (upstream started emitting it)
+      val tableDir = builtSinkTable(s, dir, "cdc25", fullImage :+
+        ("v2" -> when(col("ts_us") >= cut, col("k").cast("long") * 2)))
       val v1 = TypedSchema.TableSchema(
         db = "app", tbl = "users", pkNames = Seq("pk"),
         fields = Seq(
@@ -2052,53 +1477,15 @@ object CdcQueries {
     * row duplicates) and completeness (an unflushed one goes
     * missing). Scale: same bounded join state as cdc14 (watermark +
     * tolerance); the liveness record is O(1) per epoch. */
-  private val cdc26Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc26 = QueryDef(
     "cdc26_outer_interval_join",
     (s, dir) => {
       val tolUs = 48L * 3600 * 1000000
       val sentinelTsUs = 1709251200000000L // 2024-03-01, past horizon+tol+delay
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
       def sentinel(id: Long, op: String, tsUs: Long) = s.range(1).select(
-        lit(id).as("id"), lit("tx-liveness").as("transactionId"),
-        lit(tsUs).as("tsUs"), lit(tsUs - 500L).as("bornUs"),
-        lit(op).as("op"), lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("map<string,string>").as("before"),
-        map(lit("pk"), lit("-1")).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val n = cdc26Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc26_h3m9t1_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
+        wireRecord(lit(id), lit("tx-liveness"), lit(tsUs), lit(tsUs - 500L),
+          lit(op), after = map(lit("pk"), lit("-1"))): _*)
+      val chunkDir = StreamGate.ring("cdc26", dir)
       // event-time terciles: one chunk per third of the data's day
       // span — the arrival order outer emission needs (see docstring).
       // Pure integer µs arithmetic on tsUs (ADVICE r12: dayofmonth()
@@ -2107,7 +1494,7 @@ object CdcQueries {
       // the 24h watermark, dropping those inserts; q39's day-boundary
       // recipe). Span endpoints are 1-row driver scalars.
       val dayUs = 86400000000L
-      val fix = matFixture(asRecords)
+      val fix = StreamGate.fixture(asRecords(dataOps(s, dir)))
       val (minDay, maxDay) = {
         val r = fix.agg(min(col("tsUs")), max(col("tsUs"))).head()
         (r.getLong(0) / dayUs, r.getLong(1) / dayUs)
@@ -2115,35 +1502,22 @@ object CdcQueries {
       val daySpan = maxDay - minDay + 1
       val tercile =
         expr(s"CAST((((tsUs div $dayUs) - $minDay) * 3) div $daySpan AS INT)")
-      (0 until 3).foreach { b =>
-        fix.filter(tercile === b).coalesce(1)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
+      StreamGate.writeBatches(chunkDir,
+        graft.Tables.rowCount(s, dir, "events") / 3,
+        (0 until 3).map(b => fix.filter(tercile === b)): _*)
+      StreamGate.free(fix)
       // TWO liveness batches: the first advances the watermark past
       // every `l_ts + tolerance`; the second makes the flush happen
       // inside a DATA batch (state removal applies the watermark set
       // by the PREVIOUS batch — relying on a trailing no-data
       // micro-batch instead loses a processAllAvailable race: the
       // tail's unmatched INSERTs went missing until this, measured)
-      Seq(0L, 1L).foreach { i =>
+      StreamGate.writeBatches(chunkDir, 1L, Seq(0L, 1L).map { i =>
         val ts = sentinelTsUs + i * 86400000000L
         sentinel(-1L - 2 * i, "INSERT", ts)
           .unionByName(sentinel(-2L - 2 * i, "UPDATE", ts))
-          .coalesce(1)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      }: _*)
+      val child = StreamGate.gateSession(s)
       // admission cap = 2 (optimization r18): 5 chunks admit as
       // [t0,t1], [t2,hb1], [hb2] — outer-emission thresholds are
       // crossed in coarser watermark jumps but each outer row still
@@ -2165,7 +1539,7 @@ object CdcQueries {
       // then never advances (min policy) and the tail's unmatched
       // rows never flush. Measured, not hypothetical.
       runToParquetAndRead(s, joined, chunkDir + "_out", complete = false,
-        streamOutSchema("l_id" -> LongType, "r_id" -> LongType,
+        outSchema("l_id" -> LongType, "r_id" -> LongType,
           "key" -> StringType, "delta_us" -> LongType))
         .filter(col("l_id") >= 0) // liveness records are not data
     },
@@ -2202,67 +1576,21 @@ object CdcQueries {
     * emb05 sanctioned pattern). Oracle = the declarative join of the
     * changelog against the dim — the hash proves per-record lookup
     * correctness through the wire + micro-batch machinery. */
-  private val cdc27Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc27 = QueryDef(
     "cdc27_lookup_join",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
       val nCust = graft.Tables.load(s, dir, "customer")
         .agg(max("c_custkey")).head().getLong(0) + 1
       val dim = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"),
           col("c_nationkey").cast("int").as("nation"))
-      val n = cdc27Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val chunkPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_cdc27_k5w8d2_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + (n % 2))
-      graft.Fs.deleteRecursively(chunkPath)
-      val chunkDir = chunkPath.toString
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        fix.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // admission cap = 2: one written batch (two chunks) per trigger
-      // — the cdc11 rationale; the per-record broadcast lookup join is
-      // stateless across triggers (oracle re-proven at both SFs)
-      val stream = graft.streaming.CdcStreaming
-        .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
+      val chunkDir =
+        chunkDirOf(s, dir, "cdc27", asRecords(dataOps(s, dir)))(byIdMod3)
+      // admission cap = 2 over three one-chunk writes: triggers [2,1];
+      // the per-record broadcast lookup join is stateless across
+      // triggers (oracle re-proven at both SFs)
+      val stream = graft.streaming.CdcStreaming.readStream(
+        StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(2))
       // LEFT join (ADVICE r12): with non-dense dim keys (e.g. 1-based
       // TPC-H custkeys) an inner join would silently drop every record
       // whose ck misses — a lookup join must SURFACE unmatched records
@@ -2277,7 +1605,7 @@ object CdcQueries {
         .join(broadcast(dim), col("ck") === col("c_custkey"), "left")
         .select("record_id", "pk", "ck", "segment", "nation")
       runToParquetAndRead(s, enriched, chunkDir + "_out", complete = false,
-        streamOutSchema("record_id" -> LongType, "pk" -> LongType,
+        outSchema("record_id" -> LongType, "pk" -> LongType,
           "ck" -> LongType, "segment" -> StringType,
           "nation" -> IntegerType))
     },
@@ -2315,8 +1643,6 @@ object CdcQueries {
     * the eviction mechanics are identical.) Oracle: the same join on
     * integer-µs day buckets ((ts div 86.4e9)·86.4e9 — window() aligns
     * at the epoch, so the buckets agree by construction). */
-  private val cdc28Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   // the changelog's event-time span per fixture dir is constant —
   // memoized so the watermark guard costs one aggregate per dir, not
   // one corpus scan per bench rep (round-14 review). Keyed on
@@ -2338,54 +1664,18 @@ object CdcQueries {
   private val cdc28 = QueryDef(
     "cdc28_window_join",
     (s, dir) => {
-      val asRecords = dataOps(s, dir).select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), (col("record_id") / 100).cast("long").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"), lit("users").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE",
-          map_filter(
-            map(lit("pk"), col("pk").cast("string"),
-              lit("val"), col("val").cast("string"),
-              lit("k"), col("k").cast("string")),
-            (_, v) => v.isNotNull)).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val chunkDir = ringDir("cdc28_w7t3n9", cdc28Calls, dir)
-      val fix = matFixture(asRecords)
-      (0L until 3L).foreach { b =>
-        fix.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(fix)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // admission cap = 2: one written batch (two chunks) per trigger
-      // — the cdc11 rationale; the 400-day watermark already spans the
-      // whole changelog so no pair can drop either way (oracle
-      // re-proven at both SFs)
-      val stream = graft.streaming.CdcStreaming
-        .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
+      val records = asRecords(dataOps(s, dir))
+      val chunkDir = chunkDirOf(s, dir, "cdc28", records)(byIdMod3)
+      // admission cap = 2 over three one-chunk writes: triggers [2,1];
+      // the 400-day watermark already spans the whole changelog so no
+      // pair can drop either way (oracle re-proven at both SFs)
+      val stream = graft.streaming.CdcStreaming.readStream(
+        StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(2))
       // the gate replays history, so the watermark delay must exceed
       // the changelog's full event-time span (out-of-order dealing
       // means the first batch can carry max_ts) — enforced, not hoped
       val span: Long = cdc28Spans.computeIfAbsent(spanKey(dir), _ =>
-        asRecords.agg(
+        records.agg(
           (max(col("tsUs")) - min(col("tsUs"))).as("span"))
           .head.getLong(0))
       val wmDays = 400L
@@ -2396,7 +1686,7 @@ object CdcQueries {
         .windowJoin(stream, "INSERT", "UPDATE", "24 hours",
           watermark = s"$wmDays days")
       runToParquetAndRead(s, joined, chunkDir + "_out", complete = false,
-        streamOutSchema("l_id" -> LongType, "r_id" -> LongType,
+        outSchema("l_id" -> LongType, "r_id" -> LongType,
           "key" -> StringType, "win_us" -> LongType))
     },
     Some(s"""$changelogSql
@@ -2435,9 +1725,6 @@ object CdcQueries {
     * hashes stay comparable; the spec pins the case where they
     * differ. Scale: two keyed shuffles (txn, pk), no driver state —
     * cdc21's shape plus one boolean per txn. */
-  private val cdc29Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   /** The rollback-aware transaction-consistent apply rule over
     * wire-shaped records (id, transactionId, tsUs, op, before, after,
     * transSeq): a record is visible iff its whole txn committed at or
@@ -2470,66 +1757,21 @@ object CdcQueries {
         col("txn"), col("commit_us"))
   }
 
-  /** ChangeRecord-shaped frame from the changelog with the v4 fields:
-    * txn = record_id div 100 (cdc18's wire convention), transSeq =
-    * record_id mod 100. `fkFor(pkCol)` optionally attaches FK
-    * metadata per record. */
+  /** [[asRecords]] with the codec-v4 fields over the data ops: image
+    * (pk, k), transSeq = record_id mod 100 (intra-txn statement
+    * order), and `fkFor(pkCol)`'s optional FK metadata per record. */
   private def asV4Records(s: SparkSession, dir: String,
-      fkFor: Column => Column = _ =>
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          graft.sources.CdcSource.fkParentType))): DataFrame =
-    dataOps(s, dir).select(
-      col("record_id").as("id"),
-      concat(lit("tx-"), expr("record_id div 100").cast("string"))
-        .as("transactionId"),
-      col("ts_us").as("tsUs"),
-      (col("ts_us") - 500L).as("bornUs"),
-      col("op"),
-      lit("app").as("db"), lit("users").as("tbl"),
-      array(lit("pk")).as("pkNames"),
-      when(col("op") === "DELETE",
-        map(lit("pk"), col("pk").cast("string"))).as("before"),
-      when(col("op") =!= "DELETE",
-        map_filter(
-          map(lit("pk"), col("pk").cast("string"),
-            lit("k"), col("k").cast("string")),
-          (_, v) => v.isNotNull)).as("after"),
-      lit(null).cast("map<string,string>").as("props"),
-      lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-      lit(null).cast("array<string>").as("ukNames"),
-      pmod(col("record_id"), lit(100)).cast("long").as("transSeq"),
-      fkFor(col("pk")).as("fkParents"))
+      fkFor: Column => Column = _ => noFk): DataFrame =
+    asRecords(dataOps(s, dir), Seq("pk", "k").map(n => n -> col(n)), Seq(
+      "transSeq" -> pmod(col("record_id"), lit(100)).cast("long"),
+      "fkParents" -> fkFor(col("pk"))))
 
-  /** Two-slot tmp RING dir per (tag, fixture dir) — the shared
-    * fixture-isolation scheme (cdc22's pattern): parity alternates
-    * per call so a fresh write never races a reader of the previous
-    * invocation's output, the pid discriminates concurrent suites,
-    * and the previous slot is wiped before reuse. One definition
-    * (round-14 review) — writeV4Fixture, cdc28 and cdc32 each carried
-    * an inline copy before. */
-  private def ringDir(tag: String,
-      calls: java.util.concurrent.ConcurrentHashMap[String,
-        java.util.concurrent.atomic.AtomicLong],
-      dir: String): String = {
-    val parity = calls
-      .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-      .getAndIncrement() % 2
-    val p = java.nio.file.Paths.get(
-      graft.Scratch.root,
-      "graft_" + tag + "_" + ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + parity)
-    graft.Fs.deleteRecursively(p)
-    p.toString
-  }
-
-  /** Write a v4 fixture chunk dir (two-slot ring, the cdc22 pattern). */
+  /** A batch-read v4 fixture: `frame` written as one batch (one chunk
+    * at every repo SF) into the gate's ring dir. */
   private def writeV4Fixture(s: SparkSession, dir: String, tag: String,
-      calls: java.util.concurrent.ConcurrentHashMap[String,
-        java.util.concurrent.atomic.AtomicLong],
       frame: DataFrame): String = {
-    val p = ringDir(tag + "_v4x7q", calls, dir)
-    frame.coalesce(2).write.format("graft-cdc").mode("append")
-      .option("path", p).save()
+    val p = StreamGate.ring(tag, dir)
+    StreamGate.writeBatches(p, graft.Tables.rowCount(s, dir, "events"), frame)
     p
   }
 
@@ -2545,24 +1787,10 @@ object CdcQueries {
         .filter(pmod(col("txn"), lit(7)) === 3)
         .groupBy(col("txn"))
         .agg(max(col("ts_us")).as("maxTs"))
-        .select(
-          (-col("txn") - 1L).as("id"),
-          concat(lit("tx-"), col("txn").cast("string")).as("transactionId"),
-          (col("maxTs") + 1L).as("tsUs"),
-          col("maxTs").as("bornUs"),
-          lit(graft.cdc.Op.Rollback).as("op"),
-          lit("app").as("db"), lit("users").as("tbl"),
-          array(lit("pk")).as("pkNames"),
-          lit(null).cast("map<string,string>").as("before"),
-          lit(null).cast("map<string,string>").as("after"),
-          lit(null).cast("map<string,string>").as("props"),
-          lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-          lit(null).cast("array<string>").as("ukNames"),
-          lit(Long.MaxValue).as("transSeq"),
-          lit(null).cast(org.apache.spark.sql.types.ArrayType(
-            graft.sources.CdcSource.fkParentType)).as("fkParents"))
-      val chunkDir = writeV4Fixture(s, dir, "cdc29", cdc29Calls,
-        base.union(rbs))
+        .select(wireRecord((-col("txn") - 1L),
+          concat(lit("tx-"), col("txn").cast("string")),
+          col("maxTs") + 1L, col("maxTs"), lit(Op.Rollback), v4 = true): _*)
+      val chunkDir = writeV4Fixture(s, dir, "cdc29", base.union(rbs))
       txnConsistentApply(
         graft.streaming.CdcStreaming.readBatch(s, chunkDir), ckpt)
     },
@@ -2602,9 +1830,6 @@ object CdcQueries {
     * the wire byte-exactly. Scale: one narrow pass + one broadcast
     * join + one (batch, tbl) window — no corpus-wide exchange beyond
     * the window's. */
-  private val cdc30Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc30 = QueryDef(
     "cdc30_fk_ordered_apply",
     (s, dir) => {
@@ -2620,8 +1845,7 @@ object CdcQueries {
         when(t === 1, fkOf("app", "region", "r_id", "region_id"))
           .when(t === 2, fkOf("app", "nation", "n_id", "nation_id"))
           .when(t === 3, fkOf("app", "customer", "c_id", "cust_id"))
-          .otherwise(lit(null).cast(org.apache.spark.sql.types.ArrayType(
-            graft.sources.CdcSource.fkParentType)))
+          .otherwise(noFk)
       }
       val base = asV4Records(s, dir, fkFor)
         .withColumn("tbl", element_at(
@@ -2629,7 +1853,7 @@ object CdcQueries {
           (pmod(coalesce(element_at(col("after"), "pk"),
             element_at(col("before"), "pk")).cast("bigint"), lit(4)) + 1)
             .cast("int")))
-      val chunkDir = writeV4Fixture(s, dir, "cdc30", cdc30Calls, base)
+      val chunkDir = writeV4Fixture(s, dir, "cdc30", base)
       val r = graft.streaming.CdcStreaming.readBatch(s, chunkDir)
       // table-level DAG from the DECODED wire metadata: bounded by the
       // schema's table count, never by rows
@@ -2715,34 +1939,20 @@ object CdcQueries {
     * exchange), and the session id rides the record — no join
     * anywhere. At 100 TB the completeness audit costs one pass over
     * the decoded chunk scan. */
-  private val cdc31Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc31 = QueryDef(
     "cdc31_protocol_markers",
     (s, dir) => {
       import graft.cdc.Op
       val base = asV4Records(s, dir)
-      val nullMap = lit(null).cast("map<string,string>")
       val spans = dataOps(s, dir)
         .withColumn("session", expr("record_id div 50"))
         .groupBy(col("session"))
         .agg(min(col("ts_us")).as("minTs"), max(col("ts_us")).as("maxTs"))
       def marker(slot: Int, opC: Column, tsC: Column) =
-        spans.select(
-          (-col("session") * 10 - slot).as("id"),
-          concat(lit("fs-"), col("session").cast("string"))
-            .as("transactionId"),
-          tsC.as("tsUs"), (tsC - 1L).as("bornUs"), opC.as("op"),
-          lit("app").as("db"), lit("users").as("tbl"),
-          array(lit("pk")).as("pkNames"),
-          nullMap.as("before"), nullMap.as("after"),
-          map(lit("session"), col("session").cast("string")).as("props"),
-          lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-          lit(null).cast("array<string>").as("ukNames"),
-          lit(Long.MaxValue).as("transSeq"),
-          lit(null).cast(org.apache.spark.sql.types.ArrayType(
-            graft.sources.CdcSource.fkParentType)).as("fkParents"))
+        spans.select(wireRecord(-col("session") * 10 - slot,
+          concat(lit("fs-"), col("session").cast("string")), tsC, tsC - 1L,
+          opC, props = map(lit("session"), col("session").cast("string")),
+          v4 = true): _*)
       val inits = marker(1, lit(Op.Init), col("minTs") - 2L)
       val keeps = marker(2,
         element_at(array(lit(Op.Fill), lit(Op.Noop), lit(Op.Control),
@@ -2754,7 +1964,7 @@ object CdcQueries {
         when(pmod(col("session"), lit(2)) === 0, Op.Eof).otherwise(Op.Finish),
         col("maxTs") + 2L)
         .filter(expr("(-id div 10) % 5 <> 2"))
-      val chunkDir = writeV4Fixture(s, dir, "cdc31", cdc31Calls,
+      val chunkDir = writeV4Fixture(s, dir, "cdc31",
         base.unionByName(inits).unionByName(keeps)
           .unionByName(manuals).unionByName(closers))
       val r = graft.streaming.CdcStreaming.readBatch(s, chunkDir)
@@ -2846,9 +2056,6 @@ object CdcQueries {
     * oracle states directly. Scale: aggregate state = windows × keys
     * in the horizon (the Flink bound); the re-rank touches one
     * window's ≤ keys rows per changed window per trigger. */
-  private val cdc32Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   /** Last run's epoch-trail dir per input dir — the deterministic
     * handle the displacement spec reads (ADVICE r14: globbing tmpdir
     * by mtime could pick another run's trail in a shared JVM). */
@@ -2858,31 +2065,14 @@ object CdcQueries {
   private val cdc32 = QueryDef(
     "cdc32_stream_topn",
     (s, dir) => {
-      val base = matFixture(asV4Records(s, dir))
-      val chunkDir = ringDir("cdc32_t3n", cdc32Calls, dir)
-      (0L until 3L).foreach { b =>
-        base.filter(pmod(col("id"), lit(3)) === b).coalesce(2)
-          .write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
-      }
-      freeFixture(base)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // admission cap = 2: one written batch (two chunks) per trigger
-      // — the cdc11 rationale; complete-mode output is the final
-      // trigger's full snapshot, so the rank result is trigger-
-      // granularity-independent, and the CdcSpec trail assertions
-      // (≥2 populated epochs, first-vs-final displacement) still see
-      // 3 epochs (oracle re-proven at both SFs)
-      val stream = graft.streaming.CdcStreaming
-        .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
+      val chunkDir = chunkDirOf(s, dir, "cdc32", asV4Records(s, dir))(byIdMod3)
+      // admission cap = 2 over three one-chunk writes: triggers [2,1];
+      // complete-mode output is the final trigger's full snapshot, so
+      // the rank result is trigger-granularity-independent, and the
+      // CdcSpec trail assertions (first-vs-final displacement) see
+      // exactly 2 epochs (oracle re-proven at both SFs)
+      val stream = graft.streaming.CdcStreaming.readStream(
+        StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(2))
       val counts = stream
         .filter(col("op").isin("INSERT", "UPDATE", "DELETE"))
         .withColumn("pk",
@@ -2911,13 +2101,9 @@ object CdcQueries {
             .write.mode("append").parquet(trailDir)
         }
         .start()
-      try q.processAllAvailable()
-      finally { graft.StreamStats.record(q.recentProgress); q.stop() }
-      s.read.schema(streamOutSchema(
-          "win_start_us" -> org.apache.spark.sql.types.LongType,
-          "pk" -> org.apache.spark.sql.types.LongType,
-          "n" -> org.apache.spark.sql.types.LongType,
-          "rnk" -> org.apache.spark.sql.types.LongType))
+      StreamGate.runToEnd(q)
+      s.read.schema(outSchema("win_start_us" -> LongType, "pk" -> LongType,
+          "n" -> LongType, "rnk" -> LongType))
         .parquet(outDir)
     },
     Some(s"""$changelogSql
@@ -2978,9 +2164,6 @@ object CdcQueries {
     * epoch under the retract dir ([[cdc34Retracts]]); CdcSpec replays
     * it and must land exactly the final rank state, with every
     * displacement = one -D + one +I. */
-  private val cdc34Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   /** Last run's trail dir per input dir (the cdc32 exposure pattern). */
   private[graft] val cdc34Trails =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2996,37 +2179,25 @@ object CdcQueries {
   private val cdc34 = QueryDef(
     "cdc34_stream_topn_update",
     (s, dir) => {
-      val base = matFixture(asV4Records(s, dir))
-      val chunkDir = ringDir("cdc34_t3nu", cdc34Calls, dir)
-      val bounds = base.agg(min(col("tsUs")), max(col("tsUs"))).head()
-      val tmin = bounds.getLong(0)
-      val third = (bounds.getLong(1) - tmin) / 3 + 1
       val hold = pmod(col("id"), lit(97)) === 0
-      (0L until 3L).foreach { b =>
-        base.filter(!hold && ((col("tsUs") - tmin) / third).cast("long") === b)
-          .coalesce(2).write.format("graft-cdc").mode("append")
-          .option("path", chunkDir).save()
+      val chunkDir = chunkDirOf(s, dir, "cdc34", asV4Records(s, dir)) { fix =>
+        val bounds = fix.agg(min(col("tsUs")), max(col("tsUs"))).head()
+        val tmin = bounds.getLong(0)
+        val third = (bounds.getLong(1) - tmin) / 3 + 1
+        (0L until 3L).map(b => fix.filter(
+          !hold && ((col("tsUs") - tmin) / third).cast("long") === b)) :+
+          fix.filter(hold)
       }
-      base.filter(hold).coalesce(1).write.format("graft-cdc")
-        .mode("append").option("path", chunkDir).save()
-      freeFixture(base)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      // admission cap = 2 over four one-chunk writes (three time-thirds
+      // + the held-back slice): triggers [2,2] — the straggler chunk
+      // SHARES the last trigger with the final third instead of
+      // admitting alone. Update-mode deltas stay trigger-scoped (the
+      // spec's touched ⊊ total and displacement-through-the-delta-path
+      // assertions see 2 epochs), and the counts/ranks stores land the
+      // identical final state (oracle re-proven at both SFs). A
+      // straggler-only trigger belongs to the cdc34 redesign (ROADMAP).
+      val child = StreamGate.gateSession(s)
       child.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // admission cap = 2: one written time-third (two chunks) per
-      // trigger, the held-back straggler chunk still admits ALONE and
-      // LAST (7 chunks → triggers [2,2,2,1]) — the cdc11 rationale;
-      // update-mode deltas stay batch-scoped (the spec's touched ⊊
-      // total and displacement-through-the-delta-path assertions see 4
-      // epochs), and the counts/ranks stores land the identical final
-      // state (oracle re-proven at both SFs)
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(2))
       val counts = stream
@@ -3121,8 +2292,7 @@ object CdcQueries {
           }
         }
         .start()
-      try q.processAllAvailable()
-      finally { graft.StreamStats.record(q.recentProgress); q.stop() }
+      StreamGate.runToEnd(q)
       s.read.parquet(ranksDir).select(
         col("win_start_us").cast("long"),
         col("pk").cast("long"), col("n").cast("long"),
@@ -3158,9 +2328,6 @@ object CdcQueries {
     * terminal heartbeat past the horizon flushes the tail (the cdc24
     * in-band liveness pattern). Oracle: the same day-bucket counts
     * with the idle cutoff stated declaratively. */
-  private val cdc35Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc35 = QueryDef(
     "cdc35_idle_partition",
     (s, dir) => {
@@ -3169,45 +2336,24 @@ object CdcQueries {
       val tmin = bounds.getLong(0)
       val tmax = bounds.getLong(1)
       val cutoff = tmin + (tmax - tmin) / 6
-      val recs = log.select(
-        col("record_id").as("id"),
-        concat(lit("tx-"), expr("record_id div 100").cast("string"))
-          .as("transactionId"),
-        col("ts_us").as("tsUs"),
-        (col("ts_us") - 500L).as("bornUs"),
-        col("op"),
-        lit("app").as("db"),
-        when(col("op") === "HEARTBEAT", "hb")
-          .when(pmod(col("pk"), lit(4)) === 0, "idle")
-          .otherwise("hot").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        when(col("op") === "DELETE",
-          map(lit("pk"), col("pk").cast("string"))).as("before"),
-        when(col("op") =!= "DELETE" && col("op") =!= "HEARTBEAT",
-          map(lit("pk"), col("pk").cast("string"))).as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
+      val recs = asRecords(log, Seq("pk" -> col("pk")), Seq(
+          "tbl" -> when(col("op") === "HEARTBEAT", "hb")
+            .when(pmod(col("pk"), lit(4)) === 0, "idle")
+            .otherwise("hot")))
         // the idle table's data stops at the cutoff; its key space
         // contributes nothing for the remaining 5/6 of the span
         .filter(col("op") === "HEARTBEAT" ||
           !(col("tbl") === "idle" && col("tsUs") >= cutoff))
-      val terminal = s.range(1).select(
-        lit(-1L).as("id"), lit("tx-hb").as("transactionId"),
-        lit(tmax + 3L * 86400L * 1000000L).as("tsUs"),
-        lit(tmax).as("bornUs"), lit("HEARTBEAT").as("op"),
-        lit("app").as("db"), lit("hb").as("tbl"),
-        array(lit("pk")).as("pkNames"),
-        lit(null).cast("map<string,string>").as("before"),
-        lit(null).cast("map<string,string>").as("after"),
-        lit(null).cast("map<string,string>").as("props"),
-        lit("MySQL").as("sourceType"), lit("5.7").as("sourceVersion"),
-        lit(null).cast("array<string>").as("ukNames"))
-      val chunkDir = ringDir("cdc35_idle", cdc35Calls, dir)
-      writeOrderedBatch(recs.unionByName(terminal), chunkDir,
-        approxRows = 2L * graft.Tables.rowCount(s, dir, "events"))
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
+      val terminal = s.range(1).select(wireRecord(lit(-1L), lit("tx-hb"),
+        lit(tmax + 3L * 86400L * 1000000L), lit(tmax), lit(Op.Heartbeat),
+        tbl = "hb"): _*)
+      // ONE ordered write (the whole changelog + the terminal
+      // heartbeat, one chunk at every repo SF), admitted at cap 1
+      val chunkDir = StreamGate.ring("cdc35", dir)
+      StreamGate.writeBatches(chunkDir,
+        2L * graft.Tables.rowCount(s, dir, "events"),
+        recs.unionByName(terminal))
+      val child = StreamGate.gateSession(s)
       // NOTE: no-data micro-batches stay ENABLED here, unlike the
       // other gates (optimization r17): cdc35's tail flush hangs off
       // ONE terminal heartbeat, whose watermark takes effect only in
@@ -3216,6 +2362,7 @@ object CdcQueries {
       // emit (measured: 0 rows at sf0.001). The cdc24 alternative (a
       // second in-band flush record) would change the fixture's
       // single-ordered-batch shape this gate exists to exercise.
+      child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
       val stream = graft.streaming.CdcStreaming
         .readStream(child, chunkDir, maxChunksPerTrigger = Some(1))
       val counts = graft.streaming.CdcStreaming
@@ -3223,7 +2370,7 @@ object CdcQueries {
           watermark = "1 day")
         .select(col("value").as("tbl"), col("win_us"), col("n"))
       runToParquetAndRead(s, counts, chunkDir + "_out", complete = false,
-        streamOutSchema("tbl" -> StringType, "win_us" -> LongType,
+        outSchema("tbl" -> StringType, "win_us" -> LongType,
           "n" -> LongType))
     },
     Some(s"""$changelogSql,
@@ -3262,9 +2409,6 @@ object CdcQueries {
     * wire carries SECONDS timestamps (the real layout), so last-wins
     * ties break on (floor-second, record id) — the oracle states
     * exactly that. */
-  private val cdc36Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc36 = QueryDef(
     "cdc36_avro_subscription",
     (s, dir) => {
@@ -3312,16 +2456,8 @@ object CdcQueries {
       val sub = graft.sources.CdcSubscription(
         server = server, topic = "dts-events", group = Some("g-cdc36"),
         user = Some("subscriber"), password = Some("s3cr3t"))
-      val outBase = ringDir("cdc36_avro", cdc36Calls, dir)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val outBase = StreamGate.ring("cdc36", dir)
+      val child = StreamGate.gateSession(s)
       // ~3 micro-batches (optimization r18; was ~5): keys still evolve
       // ACROSS triggers so the materializer's cross-batch monotone
       // guard stays load-bearing, and the complete-mode final state is
@@ -3338,7 +2474,7 @@ object CdcQueries {
       val st = graft.streaming.CdcStreaming.materialize(recs)(child).toDF()
       val changes = runToParquetAndRead(
         s, st, outBase + "_out", complete = false,
-        streamOutSchema("key" -> StringType, "tsUs" -> LongType,
+        outSchema("key" -> StringType, "tsUs" -> LongType,
           "recordId" -> LongType, "op" -> StringType,
           "alive" -> org.apache.spark.sql.types.BooleanType))
       // final state = each key's maximal (tsUs, recordId) emission —
@@ -3684,9 +2820,6 @@ object CdcQueries {
     * documented pattern). Scale: dedup state is bounded by ids inside
     * the watermark horizon — the reseek window a deployment sizes it
     * to; everything else rides the wire volume. */
-  private val cdc38Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   private val cdc38 = QueryDef(
     "cdc38_cluster_switch",
     (s, dir) => {
@@ -3757,16 +2890,8 @@ object CdcQueries {
         server = haSrv, topic = "dts-events", group = Some("g-cdc38"),
         checkpoint = Some(reseekUs.toString),
         user = Some("subscriber"), password = Some("s3cr3t"))
-      val outBase = ringDir("cdc38_switch", cdc38Calls, dir)
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      // liveness here is IN-BAND (heartbeat records advance the
-      // watermark — the reference's model); Spark's extra no-data
-      // micro-batch per quiesce is a pure planning+state-commit
-      // cycle for these bounded gate streams (optimization r17,
-      // measured ~20-40% of gate wall at sf0.1)
-      child.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val outBase = StreamGate.ring("cdc38", dir)
+      val child = StreamGate.gateSession(s)
       // ~3 triggers for the slower (failover) source, ~2 for origin
       // (optimization r18; was ~4/~2.4): the overlap replay still
       // crosses trigger boundaries so dedup state stays cross-trigger,
@@ -3790,7 +2915,7 @@ object CdcQueries {
         .agg(count(lit(1)).as("n_records"),
           max(col("tsUs")).as("last_floor_us"))
       runToParquetAndRead(s, counts, outBase + "_out", complete = true,
-        streamOutSchema("key" -> StringType, "n_records" -> LongType,
+        outSchema("key" -> StringType, "n_records" -> LongType,
           "last_floor_us" -> LongType))
     },
     Some(s"""$changelogSql
@@ -3890,7 +3015,7 @@ object CdcQueries {
       // releases them after consumption (the ann06 returned-checkpoint
       // pattern).
       val recs = graft.streaming.CdcStreaming.fromKafkaRecords(
-        matFixture(wire.unionByName(Seq(ddlBytes).toDF("value"))),
+        StreamGate.fixture(wire.unionByName(Seq(ddlBytes).toDF("value"))),
         table = Some("app.events"), permissive = false, wire = "dts-avro")
       // way 1: the DDL control stream evolves the PRE-DDL wire schema
       val base = RawDataTypes.deriveSchema(

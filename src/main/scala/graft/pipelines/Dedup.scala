@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.{Fs, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -733,10 +733,6 @@ object Dedup {
       val out = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get(graft.Scratch.root),
         "graft_dd06_clusters").toString
-      sys.addShutdownHook {
-        try Fs.deleteRecursively(java.nio.file.Paths.get(out))
-        catch { case _: Throwable => () }
-      }
       connectedComponents(
         Tables.load(s, dir, "documents").select(col("doc_id")),
         jaccardPairs(s, dir).select(col("d1"), col("d2")))
@@ -1142,8 +1138,8 @@ object Dedup {
     * (the ann08/ann09 stored-index pattern applied to dedup):
     * `sigs` = the base docs' unpivoted (doc_id, b, sig) MinHash-LSH
     * signatures, `sets` = their distinct shingle-hash arrays for
-    * exact verification. Built once per (dir, process), pid-isolated
-    * (ADVICE r11). */
+    * exact verification. Built once per (dir, process) under the
+    * process's own Scratch.root (ADVICE r11). */
   private val baseIndexBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1152,7 +1148,7 @@ object Dedup {
     baseIndexBuilt.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Paths.get(
         graft.Scratch.root,
-        "graft_dd15_b4q7s2_" + ProcessHandle.current().pid() + "_" +
+        "graft_dd15_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       graft.Fs.deleteRecursively(p)
       val st = docShingleState(s, dir).filter(col("doc_id") >= DeltaN)

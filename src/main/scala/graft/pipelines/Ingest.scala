@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.{QueryDef, Tables}
+import graft.streaming.StreamGate
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -28,9 +29,6 @@ object Ingest {
     * round-8 `bits` parameter at a non-default size on the streaming
     * path. 128 KB rides the plan as one literal array. */
   private val ShingleBloomBits = 1L << 20
-
-  private val ing01Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
   // ------------------------------------------------------------- ing01
   /** Streaming ingest dedup end-to-end: the static corpus collapses
@@ -65,34 +63,16 @@ object Ingest {
     "ing01_stream_ingest_dedup",
     (outer, dir) => {
       import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-      // ADVICE r9: the state-partition override (8 state tasks per
-      // stateful operator per micro-batch — the cdc11 sizing note)
-      // used to flip the SESSION-GLOBAL spark.sql.shuffle.partitions
-      // around the streaming section; a concurrently-running query
-      // would have had its parallelism silently clamped. The whole
-      // harness now runs in a THROWAWAY child session (same
-      // SparkContext, own conf/sessionState), so the override is
-      // invisible outside. Only the STREAMING writes run on the child;
-      // the final read-back join below is built on the OUTER session,
-      // so the returned frame executes at the caller's parallelism
-      // (ADVICE r10: a frame bound to the child would silently run its
-      // shuffles at the child's 8 partitions wherever it is consumed).
-      val s = outer.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // no-data micro-batches add a planning+commit cycle per
-      // stream and emit nothing these bounded gates need
-      // (CdcQueries optimization-r17 note)
-      s.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // materialize once (optimization r17, the CdcQueries.matFixture
-      // rationale): the corpus index build, the Bloom aggregate and the
-      // NBatches batch writes each re-scanned documents.parquet —
-      // localCheckpoint pays the scan once, the five downstream actions
+      // streams run in the gate's child session; the read-back join
+      // below is built on the OUTER session (the StreamGate contract).
+      val s = StreamGate.gateSession(outer)
+      // materialize once: the corpus index build, the Bloom aggregate
+      // and the NBatches batch writes each re-scanned documents.parquet
+      // — the fixture pays the scan once, the five downstream actions
       // read cached blocks. Freed after the batch writes below.
-      val docs = Tables.load(s, dir, "documents")
+      val docs = StreamGate.fixture(Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text"),
-          timestamp_micros(col("doc_id") * 1000000L).as("ts"))
-        .localCheckpoint(true)
+          timestamp_micros(col("doc_id") * 1000000L).as("ts")))
       val corpus = docs.filter(col("doc_id") % CorpusMod === 0)
       val streamSet = docs.filter(col("doc_id") % CorpusMod =!= 0)
       // static builds, once per ingest epoch (at 100 TB: a bucketed
@@ -101,29 +81,15 @@ object Ingest {
         .localCheckpoint(true)
       val bloom = graft.streaming.IngestDedup
         .corpusShingleBloom(corpus, ShingleBloomBits)
-      // two-slot dir ring per input dir (the cdc10/cdc11 contract:
-      // bounded /tmp growth, previous invocation's frame readable)
-      val n = ing01Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val batchPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_ing01_p4q8s2_" + ProcessHandle.current().pid() + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + (n % 2))
-      graft.Fs.deleteRecursively(batchPath)
-      val batchDir = batchPath.toString
+      val batchDir = StreamGate.ring("ing01", dir)
       (0L until NBatches.toLong).foreach { b =>
         streamSet.filter(pmod(col("doc_id"), lit(NBatches)) === b)
           .coalesce(1)
           .write.mode("append").parquet(batchDir)
       }
-      // free the docs checkpoint: index and bloom are materialized,
-      // batch files are written — nothing still reads it
-      docs.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      // index and bloom are materialized, batch files are written —
+      // nothing still reads the docs fixture
+      StreamGate.free(docs)
       val stream = s.readStream
         .schema(streamSet.schema)
         // admission cap 2 (optimization r18, the CdcQueries cap-2
@@ -137,35 +103,22 @@ object Ingest {
       // FILE sinks + read-back (VERDICT r9 #3/#5: the memory sink was
       // the last query-path materialization whose row count scales
       // with the corpus — a 100 TB ingest writes its admission log to
-      // storage, so the gate harness does too; the cdc10 pattern).
-      // Same two-slot ring as the input dir, swept on reuse.
+      // storage, so the gate harness does too). Both consumers of the
+      // one stream run concurrently.
       val admOut = s"${batchDir}_adm"
       val dupOut = s"${batchDir}_dup"
-      Seq(admOut, dupOut).foreach { d =>
-        graft.Fs.deleteRecursively(java.nio.file.Paths.get(d))
-        graft.Fs.deleteRecursively(java.nio.file.Paths.get(d + "_ck"))
-      }
-      locally {
-        val q1 = graft.streaming.IngestDedup
+      StreamGate.runToEnd(
+        StreamGate.startParquet(graft.streaming.IngestDedup
           .withShingleOverlap(stream, bloom, ShingleBloomBits)
-          .select(col("doc_id"), col("n_shingles"), col("n_maybe_seen"))
-          .writeStream.format("parquet")
-          .option("path", admOut).option("checkpointLocation", admOut + "_ck")
-          .start()
-        val q2 = graft.streaming.IngestDedup
+          .select(col("doc_id"), col("n_shingles"), col("n_maybe_seen")),
+          admOut, complete = false),
+        StreamGate.startParquet(graft.streaming.IngestDedup
           .flagNearDuplicates(stream, index, watermark = "3650 days")
-          .select(col("doc_id"))
-          .writeStream.format("parquet")
-          .option("path", dupOut).option("checkpointLocation", dupOut + "_ck")
-          .start()
-        try {
-          q1.processAllAvailable()
-          q2.processAllAvailable()
-        } finally { q1.stop(); q2.stop() }
-      }
+          .select(col("doc_id")),
+          dupOut, complete = false))
       // explicit schemas on read-back: a stream that emitted zero
       // rows leaves a dir with no data files to infer from. Read on
-      // the OUTER session — see the child-session note above.
+      // the OUTER session.
       val adm = outer.read.parquet(admOut)
       val flagged = outer.read
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -279,9 +232,6 @@ object Ingest {
       |  CASE WHEN record_id % 37 = 0 THEN 'decode_error' END AS err
       |FROM changelog WHERE op <> 'HEARTBEAT'""".stripMargin))
 
-  private val ing03Calls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   // ------------------------------------------------------------- ing03
   /** BACKFILL / STREAMING-TAIL SEAM (round 12) — the bootstrap every
     * production ingest runs once and must get exactly-once right: a
@@ -308,13 +258,7 @@ object Ingest {
   private val ing03 = QueryDef(
     "ing03_backfill_seam",
     (outer, dir) => {
-      val s = outer.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // no-data micro-batches add a planning+commit cycle per
-      // stream and emit nothing these bounded gates need
-      // (CdcQueries optimization-r17 note)
-      s.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val s = StreamGate.gateSession(outer)
       val log = graft.cdc.CdcQueries.changelog(s, dir)
         .filter(col("op") =!= "HEARTBEAT")
         .select(col("record_id"), col("ts_us"), col("op"), col("pk"))
@@ -325,15 +269,7 @@ object Ingest {
       val backfill = log.filter(col("record_id") < hwm)
         .withColumn("via", lit("backfill"))
       val tail = log.filter(col("record_id") >= pstart)
-      val n = ing03Calls
-        .computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-        .getAndIncrement()
-      val batchPath = java.nio.file.Paths.get(
-        graft.Scratch.root,
-        "graft_ing03_w7r2k9_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + (n % 2))
-      graft.Fs.deleteRecursively(batchPath)
-      val batchDir = batchPath.toString
+      val batchDir = StreamGate.ring("ing03", dir)
       (0L until NBatches.toLong).foreach { b =>
         tail.filter(pmod(col("record_id"), lit(NBatches)) === b)
           .coalesce(1)
@@ -350,22 +286,12 @@ object Ingest {
       // high-water mark — the overlap redelivery drops on sight
       val admitted = stream.filter(col("record_id") >= hwm)
         .withColumn("via", lit("stream"))
-      val outDir = s"${batchDir}_out"
-      Seq(outDir).foreach { d =>
-        graft.Fs.deleteRecursively(java.nio.file.Paths.get(d))
-        graft.Fs.deleteRecursively(java.nio.file.Paths.get(d + "_ck"))
-      }
-      locally {
-        val q = admitted.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", outDir + "_ck")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val streamed = outer.read.schema(
+      // file sink + outer-session read-back (the StreamGate contract)
+      val streamed = StreamGate.runToParquetAndRead(outer, admitted,
+        s"${batchDir}_out", complete = false,
         org.apache.spark.sql.types.StructType(
           tail.schema.fields :+ org.apache.spark.sql.types.StructField(
             "via", org.apache.spark.sql.types.StringType)))
-        .parquet(outDir)
       backfill.unionByName(streamed)
     },
     Some(s"""${graft.cdc.CdcQueries.changelogSql},

@@ -1113,13 +1113,12 @@ object Similarity {
   private def ensureMemberIndex(s: SparkSession, dir: String): String =
     memberIndexBuilt.computeIfAbsent(dir, _ => {
       // the build-once guard is PROCESS-local (the ConcurrentHashMap),
-      // so the path carries the pid: without it, two concurrent JVMs
-      // on one machine (test suite + bench) would race one JVM's
-      // deleteRecursively against the other's reads of the shared
-      // index dir (ADVICE r11)
+      // and so is the dir: it lives under this process's Scratch.root,
+      // so two concurrent JVMs (test suite + bench) never share it
+      // (ADVICE r11)
       val idxPath = java.nio.file.Paths.get(
         graft.Scratch.root,
-        "graft_annidx_m6k3t8_" + ProcessHandle.current().pid() + "_" +
+        "graft_annidx_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       graft.Fs.deleteRecursively(idxPath)
       val idx = idxPath.toString
@@ -1159,7 +1158,7 @@ object Similarity {
     fullGraphBuilt.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Paths.get(
         graft.Scratch.root,
-        "graft_annfull_h8w2n5_" + ProcessHandle.current().pid() + "_" +
+        "graft_annfull_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       graft.Fs.deleteRecursively(p)
       val n = vecs(s, dir)
@@ -1214,7 +1213,7 @@ object Similarity {
     * paid three times. The walk's beam and its SCORED scanned set are
     * exactly as deterministic as the index they traverse, so they are
     * index artifacts too: landed as parquet once per (dir, process)
-    * beside the member index (pid-discriminated path, the
+    * beside the member index (per-process scratch path, the
     * [[ensureMemberIndex]] pattern), read by ann11 (post-filter
     * consumer) and ann12 (fusion consumer). ann07 keeps walking LIVE —
     * its bench line IS the search cost (the ann06/ann08 precedent: the
@@ -1237,7 +1236,7 @@ object Similarity {
     walkBuilt.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Paths.get(
         graft.Scratch.root,
-        "graft_annwalk_p9r4v6_" + ProcessHandle.current().pid() + "_" +
+        "graft_annwalk_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       graft.Fs.deleteRecursively(p)
       val (q, mem, edges, entries, _) = searchSetup(s, dir)
@@ -1339,7 +1338,7 @@ object Similarity {
     insertStateBuilt.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Paths.get(
         graft.Scratch.root,
-        "graft_annins_q4j7x2_" + ProcessHandle.current().pid() + "_" +
+        "graft_annins_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       graft.Fs.deleteRecursively(p)
       val (newadj, upd, beam) = insertState(s, dir)

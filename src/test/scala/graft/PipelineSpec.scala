@@ -2821,4 +2821,13 @@ class PipelineSpec extends AnyFunSuite {
     val strong = rows.filter(_.getAs[Long]("j_decile") >= 6L)
     assert(strong.nonEmpty && strong.forall(_.getAs[Boolean]("lsh_hit")))
   }
+
+  test("ing01's streams reach StreamStats: its dedup state is recorded") {
+    StreamStats.reset()
+    SparkEntry.queries("ing01_stream_ingest_dedup")(spark, sf).count()
+    // the near-dup stream's dropDuplicatesWithinWatermark holds state
+    // rows; a harness that never records its queries reads 0
+    assert(StreamStats.peakStateRows > 0,
+      "ing01 ran its streams without recording their state telemetry")
+  }
 }

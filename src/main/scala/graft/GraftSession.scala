@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory (SURVEY §3): every entry point — Bench,
-  * Verify, Explain, PlanAudit, user code — gets the same posture:
+  * Verify, Probe, ScaleProbe, user code — gets the same posture:
   *
   *   - shuffle partitions = cores (local[N] stands in for N executor
   *     slots; 200 default partitions would just fragment tiny files)
@@ -33,11 +33,10 @@ object GraftSession {
     s
   }
 
-  /** Cores from SPARK_GRAFT_CPUS (the driver's contract), defaulting
-    * to `fallback`. */
-  def fromEnv(fallback: Int = 4, appName: String = "graft"): SparkSession =
-    build(sys.env.getOrElse("SPARK_GRAFT_CPUS", fallback.toString).toInt,
-      appName)
+  /** Cores from SPARK_GRAFT_CPUS, else every core the JVM sees. */
+  def fromEnv(appName: String = "graft"): SparkSession =
+    build(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors), appName)
 
   /** Free every pinned cached/localCheckpoint block between queries.
     * Iterative queries eagerly localCheckpoint per round; those blocks

@@ -183,21 +183,11 @@ object ScaleProbe {
     // intra-cluster blocks grow k× and pairwise work k² — the probe
     // shows the growth the K ∝ n/B rule (SemDeDup's own) exists to cap
     val quadOps = Seq("dd05_embed_dup", "emb06_semdedup")
-    // full-plan execution, not df.count() — count() lets Catalyst
-    // prune the pipeline (footer-metadata counts for narrow shapes,
-    // left-join elimination on aggregated keys), which is exactly how
-    // the r7 probe recorded "flat at 16x" rows for ops that were
-    // never executing (see Bench.run)
     def time(name: String, dir: String): (Double, Long) = {
-      SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count() // warm
-      sweep()
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      sweep()
-      (dt, rows)
+      def run() = Bench.timed(spark)(SparkEntry.queries(name)(spark, dir))
+      run() // warm
+      run()
     }
-    def sweep(): Unit = GraftSession.sweep(spark)
     // optional 3rd arg: comma-separated multipliers (round 8: the
     // 64x/128x runs that pull cheap linear ops out of the per-query
     // overhead floor — at 16x several sat under job overhead, which is
@@ -424,48 +414,6 @@ object ScaleProbe {
       println(f"SCALE $op%-22s x$k=${ts._1}%.2fs/${ts._2}r " +
         f"state=${graft.StreamStats.peakStateRows}")
     }
-    spark.stop()
-  }
-}
-
-/** Scratch diagnostic (round 12): the bench's stream_rps measurement
-  * in ISOLATION — same 400k-record fixture, same warm + best-of-3 —
-  * without the 111-query suite preceding it, to separate suite-state
-  * effects (heap/page-cache/JIT pressure) from the machinery's own
-  * throughput when the driver artifact and the documented band
-  * disagree. Not part of the driver contract. */
-object StreamRpsProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.fromEnv(appName = "stream-rps-probe")
-    val n = 400000
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.Scratch.root), "graft_rps_probe").toString
-    val recs = (0 until n).map { i =>
-      graft.cdc.ChangeRecord(i.toLong, s"tx-${i / 100}",
-        1000000L * (i + 1), 1000000L * (i + 1) - 500L,
-        if (i % 10 == 0) graft.cdc.Op.Insert else graft.cdc.Op.Update,
-        "bench", "t", Seq("k"),
-        if (i % 10 == 0) null else Map("k" -> s"${i % 997}", "v" -> "old"),
-        Map("k" -> s"${i % 997}", "v" -> s"v$i"))
-    }
-    recs.grouped(10000).zipWithIndex.foreach { case (g, i) =>
-      graft.sources.CdcChunkFile.write(
-        f"$dir/chunk-$i%05d${graft.sources.CdcChunkFile.Extension}",
-        g.toSeq)
-    }
-    def consume(): Unit = {
-      val q = spark.readStream.format("graft-cdc").option("path", dir)
-        .load().writeStream.format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    consume() // warm
-    val walls = (0 until 3).map { _ =>
-      val t0 = System.nanoTime()
-      consume()
-      (System.nanoTime() - t0) / 1e9
-    }
-    walls.foreach(w => println(f"RPS_PROBE wall=$w%.3fs rps=${(n / w).round}"))
-    println(f"RPS_PROBE best=${(n / walls.min).round}")
     spark.stop()
   }
 }

@@ -1105,7 +1105,8 @@ object CdcQueries {
       image: Seq[(String, Column)] = fullImage): String = {
     val tableDir = StreamGate.ring(tag, dir)
     // pin only the columns the sink reads: at the full transport width
-    // cdc16/cdc17 ran ~10% slower in interleaved Timeit pairs (sf0.1)
+    // cdc16/cdc17 ran ~10% slower in interleaved `graft.Probe time`
+    // pairs (sf0.1)
     val fix = StreamGate.fixture(asRecords(dataOps(s, dir), image)
       .select("id", "tsUs", "op", "db", "tbl", "pkNames", "ukNames",
         "before", "after"))
@@ -2247,8 +2248,8 @@ object CdcQueries {
             // file-count note (round 15, MEASURED before "optimizing"):
             // partitionBy fans each task across every window it holds
             // (up to tasks × windows small files per trigger), but
-            // coalescing before the write timed WORSE here — Timeit
-            // 3-rep bands 12.7-14.0 s coalesced vs 10.3-12.5 s as-is
+            // coalescing before the write timed WORSE here — `Probe
+            // time` 3-rep bands 12.7-14.0 s coalesced vs 10.3-12.5 s as-is
             // at sf0.1: the store is tiny at gate SFs and the fan-in
             // serializes the write tasks. At production scale the
             // store is a real table format whose writer owns

@@ -30,7 +30,13 @@ object Tables {
     * DataFrame (new attribute ids, so self-join resolution is
     * untouched). This is infrastructure caching of immutable-input
     * METADATA, not result caching: no row is ever reused across
-    * invocations. */
+    * invocations.
+    *
+    * The condition it relies on: no path is rewritten with a different
+    * schema inside one process — the cache would hand the old schema
+    * to the new files. Nothing here ever drops an entry. That is why
+    * [[ScaleProbe]] writes each multiplier's corpus to a fresh
+    * `x$k`/`ev$k` dir instead of overwriting one. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()

@@ -188,25 +188,19 @@ object Similarity {
         .sortBy(j => (-dot(u, cents(j)), j))
         .take(p).toArray
 
-    /** Deterministic Lloyd k-means on unit vectors: init = first `c`
-      * sample vectors (sample pre-sorted by vec_id) unless an explicit
-      * seed set is given, fixed iteration count. Assignment dots fold
-      * in element order (replayable); centroid sums accumulate the
-      * [[Fix]] fixed-point codes as LONGS, so the update is exact and
-      * order-invariant, then mean_i = sum_i/count/2^40 (one shared op
-      * order) and the mean is normalized. Every step is therefore
-      * bit-replayable by the DuckDB oracle (round 8 — this is what
-      * graduated ann03/ann04 from rows-only to hash-oracled). The
-      * `init` hook exists so diagnostics (RecallProbe's seeding study)
-      * measure THIS trainer, not a reimplementation that could drift. */
-    def train(
-        sampleSorted: Array[Array[Double]],
-        c: Int = C,
-        init: Array[Array[Double]] = null): Array[Array[Double]] = {
+    /** Deterministic Lloyd k-means on unit vectors: init = first [[C]]
+      * sample vectors (sample pre-sorted by vec_id), fixed iteration
+      * count. Assignment dots fold in element order (replayable);
+      * centroid sums accumulate the [[Fix]] fixed-point codes as LONGS,
+      * so the update is exact and order-invariant, then
+      * mean_i = sum_i/count/2^40 (one shared op order) and the mean is
+      * normalized. Every step is therefore bit-replayable by the DuckDB
+      * oracle (round 8 — this is what graduated ann03/ann04 from
+      * rows-only to hash-oracled). */
+    def train(sampleSorted: Array[Array[Double]]): Array[Array[Double]] = {
       val d = sampleSorted.head.length
       val codes = sampleSorted.map(quantize)
-      var cents =
-        if (init != null) init.map(_.clone) else sampleSorted.take(c).map(_.clone)
+      var cents = sampleSorted.take(C).map(_.clone)
       val k = cents.length
       var it = 0
       while (it < Iters) {
@@ -1923,8 +1917,8 @@ object Similarity {
   /** Scan-budget measurement for the ann07 search: (mean distinct
     * scored (q_id, n_id) pairs per query, member corpus size). Runs
     * the identical build + search with trajectory tracking on; used
-    * by SearchProbe and PipelineSpec to pin the sub-linear scan claim
-    * with a measurement rather than the worst-case bound. */
+    * by PipelineSpec to pin the sub-linear scan claim with a
+    * measurement rather than the worst-case bound. */
   def searchScanStats(s: SparkSession, dir: String): (Double, Long) = {
     val (q, mem, edges, entries, _) = searchSetup(s, dir)
     val (beam, tracked) = graphSearch(q, mem, edges, entries, track = true)

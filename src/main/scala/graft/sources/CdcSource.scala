@@ -336,8 +336,8 @@ class CdcScan(
   override def reportDriverMetrics(): Array[CustomTaskMetric] =
     Array(CdcMetrics.Value("chunksPruned", chunksPruned.get))
 
-  /** Make the pushdown visible in explain output (PlanAudit greps
-    * for PushedFilters the way it does on parquet scans). */
+  /** Make the pushdown visible in explain output (`graft.Probe audit`
+    * greps for PushedFilters the way it does on parquet scans). */
   override def description(): String = {
     val fs = Seq(
       hdrFilters.op.map(o => s"op=$o"),

@@ -31,7 +31,7 @@ object StreamGate {
     * streaming gate derives its wire fixture from the events scan +
     * JSON projection and then runs 3-5 SEPARATE actions over it (a
     * bounds/count aggregate plus one chunk-encode write per batch) —
-    * measured via JobProfile, each action re-paid the full scan+parse
+    * measured via `graft.Probe jobs`, each action re-paid the full scan+parse
     * as a single-task job (~0.5-1.2 s each at sf0.1 on a 4-core box).
     * localCheckpoint(eager) pays the scan ONCE; the batch writes then
     * read cached blocks. Chunk BYTES are unchanged: localCheckpoint

@@ -69,7 +69,7 @@ class PerfSpec extends AnyFunSuite {
     bounds.foreach { case (name, bound) =>
       val fn = SparkEntry.queries(name)
       // full-plan execution, not count() — count() lets Catalyst prune
-      // the very loops this spec guards (see Bench.run)
+      // the very loops this spec guards (see Bench.timed)
       fn(spark, "/root/testdata/sf0.01").queryExecution.toRdd.count() // warm
       // Bounded retries, min-of-up-to-3 (round 18, VERDICT r17 #2): a
       // megamorphic/JIT cliff is PERSISTENT — every rep pays it — while

@@ -1,5 +1,7 @@
 package graft
 
+import graft.fs.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory (SURVEY §3): every entry point — Bench,
@@ -14,21 +16,45 @@ import org.apache.spark.sql.SparkSession
   *   - [[GraftExtensions]] installed: native cdc_header_* / vec_dot
   *     SQL functions, the RewriteZipWithDot optimizer rule, and the
   *     top-k planner strategy are part of the engine, not opt-in
+  *   - local FS without forks: `file:` paths go through
+  *     [[graft.fs.ForkFreeLocalFileSystem]] / [[graft.fs.ForkFreeLocalFs]],
+  *     which set permissions and read link status in-process instead
+  *     of running `chmod` / `readlink` per state, checkpoint and sink
+  *     file (same bits, same `.crc` checksums); set on the
+  *     SparkContext, so every child session inherits them
+  *
+  * A key already set in `SparkConf` (a `-Dspark.*` java option) wins
+  * over the posture's value, so a conf experiment on any of these keys
+  * reaches the outer session and every child session.
   */
 object GraftSession {
 
+  /** The two confs that route `file:` paths through [[graft.fs]]: the
+    * `FileSystem` (sinks, parquet, committers) and the
+    * `AbstractFileSystem` (`FileContext`: checkpoints, state store). */
+  val localFs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
+  /** The posture's confs for `cores`, minus every key `preset`
+    * already sets. */
+  def posture(preset: SparkConf, cores: Int, appName: String): Seq[(String, String)] =
+    (Seq(
+      "spark.master" -> s"local[$cores]",
+      "spark.app.name" -> appName,
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.ui.enabled" -> "false") ++ localFs)
+      .filterNot { case (k, _) => preset.contains(k) }
+
   def build(cores: Int, appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val b = SparkSession.builder()
+    posture(new SparkConf(), cores, appName).foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -353,17 +353,30 @@ class CdcScan(
   private def ordinals: Array[Int] =
     required.fieldNames.map(CdcSource.schema.fieldIndex)
 
+  private def footers(chunks: Seq[String]): Seq[(String, CdcChunkFile.Footer)] =
+    chunks.map(c => (c, CdcChunkFile.readFooter(c)))
+
+  /** The batch scan's one chunk listing and one footer read per
+    * chunk, shared by [[estimateStatistics]] and the planned
+    * partitions — so the statistics describe exactly the chunks the
+    * scan reads, even if a chunk lands in between. */
+  private lazy val batchChunks = footers(CdcChunkFile.listChunks(path))
+
+  // set when a stream is built from this scan: a streaming scan lives
+  // as long as its query, so its statistics keep following the
+  // growing directory instead of one listing
+  @volatile private var streaming = false
+
   /** Footer-exact statistics (row count) + file-size bytes, so
     * Catalyst can pick a broadcast join when the subscription is the
     * small side of a dim-lookup (the reference's join test shape) —
     * without stats a DSv2 source defaults to "huge" and the planner
     * shuffles both sides. */
   override def estimateStatistics(): Statistics = {
-    val chunks = CdcChunkFile.listChunks(path)
     var rows = 0L
     var bytes = 0L
-    chunks.foreach { c =>
-      val f = CdcChunkFile.readFooter(c)
+    val chunks = if (streaming) footers(CdcChunkFile.listChunks(path)) else batchChunks
+    chunks.foreach { case (c, f) =>
       if (!startTsUs.exists(ts => f.maxTsUs < ts)) {
         rows += f.nRecords
         bytes += java.nio.file.Files.size(java.nio.file.Paths.get(c))
@@ -379,10 +392,9 @@ class CdcScan(
   }
 
   // planned once per scan: Spark may ask for the partitions more than
-  // once per execution — caching keeps the listing + footer reads (and
-  // the chunksPruned metric) single-counted
-  private lazy val batchParts: Array[InputPartition] =
-    planSplits(CdcChunkFile.listChunks(path))
+  // once per execution — caching keeps the chunksPruned metric
+  // single-counted
+  private lazy val batchParts: Array[InputPartition] = planSplits(batchChunks)
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = batchParts
@@ -397,9 +409,9 @@ class CdcScan(
     * whose v3 table directory never mentions the selected/pushed table
     * is skipped whole — a single-table subscription over a many-table
     * transport reads only the chunks that carry its table. */
-  private def planSplits(chunks: Seq[String]): Array[InputPartition] =
-    chunks.flatMap { c =>
-      val f = CdcChunkFile.readFooter(c)
+  private def planSplits(
+      chunks: Seq[(String, CdcChunkFile.Footer)]): Array[InputPartition] =
+    chunks.flatMap { case (c, f) =>
       // any (db,tbl) in the chunk compatible with selector + pushdown?
       def tableMiss = f.tables.exists(!_.exists { case (d, t) =>
         tableSel.forall(_ == ((d, t))) &&
@@ -418,7 +430,8 @@ class CdcScan(
       }
     }.toArray
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    streaming = true
     new MicroBatchStream with SupportsAdmissionControl {
       // chunk listing is re-read per latestOffset call => appended
       // chunks become visible to later triggers
@@ -447,13 +460,14 @@ class CdcScan(
       override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
         val s = start.asInstanceOf[CdcOffset].chunksConsumed
         val e = end.asInstanceOf[CdcOffset].chunksConsumed
-        planSplits(CdcChunkFile.listChunks(path).slice(s, e))
+        planSplits(footers(CdcChunkFile.listChunks(path).slice(s, e)))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         new CdcReaderFactory(ordinals)
       override def commit(end: Offset): Unit = ()
       override def stop(): Unit = ()
     }
+  }
 }
 
 case class CdcInputPartition(

@@ -1,9 +1,10 @@
 package graft
 
 import graft.cdc._
-import graft.sources.CdcChunkFile
+import graft.sources.{CdcChunkFile, CdcInputPartition, CdcScan, CdcTable}
 import graft.streaming.CdcStreaming
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -843,6 +844,33 @@ class CdcSourceSpec extends AnyFunSuite {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast in:\n$plan")
     assert(joined.count() > 0)
+  }
+
+  test("batch scan statistics count exactly the chunks the scan plans; " +
+      "a streaming scan's follow the directory") {
+    val dir = Files.createTempDirectory("gcl").toString
+    CdcFixtures.writeChunks(dir)
+    val scan = new CdcTable(dir, None, None)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .asInstanceOf[CdcScan]
+    val statRows = scan.estimateStatistics().numRows().getAsLong
+    // a chunk lands between Catalyst's sizing and the scan's planning
+    CdcChunkFile.write(s"$dir/chunk-00003${CdcChunkFile.Extension}",
+      Seq(CdcFixtures.rec(30L, 31000000L, Op.Insert, "k9", "v30")))
+    val planned = scan.toBatch.planInputPartitions()
+      .map(_.asInstanceOf[CdcInputPartition].chunkPath).distinct
+    assert(statRows ==
+      planned.map(c => CdcChunkFile.readFooter(c).nRecords.toLong).sum)
+    // a streaming scan lives as long as its query: its statistics keep
+    // following the directory
+    val stream = new CdcTable(dir, None, None)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .asInstanceOf[CdcScan]
+    stream.toMicroBatchStream(dir)
+    val before = stream.estimateStatistics().numRows().getAsLong
+    CdcChunkFile.write(s"$dir/chunk-00004${CdcChunkFile.Extension}",
+      Seq(CdcFixtures.rec(31L, 32000000L, Op.Insert, "k9", "v31")))
+    assert(stream.estimateStatistics().numRows().getAsLong == before + 1)
   }
 
   test("large chunks split into parallel scan ranges via the footer index") {

@@ -4,14 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
+  // the engine's local filesystem (GraftSession.localFs), so the sink,
+  // checkpoint and state-store specs run on what the engine ships
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.localFs.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

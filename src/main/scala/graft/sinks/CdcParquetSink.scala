@@ -1,11 +1,18 @@
 package graft.sinks
 
 import graft.cdc.Op
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 /** Continuous changelog → queryable table: the reference's downstream
@@ -22,14 +29,23 @@ import scala.jdk.CollectionConverters._
   *     bucket's chain into a fresh base inline (bounded, per-bucket);
   *   - [[compact]] folds every chain and GCs tombstones.
   *
+  * READS NEVER LIST THE TABLE: the manifest names every chain dir, so
+  * every chain read (the table reads, the time-travel and diff reads,
+  * the inline fold, [[compact]]) lists just those dirs here and hands
+  * Spark the file list ([[chainFrame]]) — the way Spark's own file
+  * sink reads through its metadata log. None goes through Spark's file
+  * discovery, which lists more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+  * with a Spark job of one task per path; a 4-version table is 64.
+  *
   * ONE FILE PER BUCKET DIR: every write (delta, inline fold,
   * [[compact]]) clusters its rows by bucket before the last-wins merge
   * ([[mergeByBucket]]), so each `bucket=N` dir it writes holds exactly
   * one parquet file, written by one task. A trigger's file count is
   * its touched-bucket count, independent of shuffle partitions or
-  * cores: a small trigger's write costs per file, not per row. Readers do not rely on the invariant: a bucket dir with
-  * several files (a table written before it held) reads and folds the
-  * same.
+  * cores: a small trigger's write costs per file, not per row.
+  * Readers do not rely on the invariant: a bucket dir with several
+  * files (a table written before it held) reads and folds the same.
   *
   * This is the round-3 evolution of the round-2 whole-touched-bucket
   * rewrite (SURVEY §7 candidate 2): round 2 already bounded I/O to
@@ -96,6 +112,55 @@ object CdcParquetSink {
   private def writeBuckets(merged: DataFrame, dir: String): Unit =
     merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
 
+  /** The parquet part files of one manifest-named chain dir. `.crc`
+    * sidecars, `_SUCCESS` and every other hidden or `_`-prefixed name
+    * are skipped — the names Spark's `InMemoryFileIndex` skips. */
+  private[graft] def chainFiles(tableDir: String, rel: String): Seq[java.nio.file.Path] =
+    graft.Fs.listDir(Paths.get(tableDir, rel)).filter { p =>
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
+    }.sorted
+
+  /** The store rows of the chain dirs `rels`, read from a file list
+    * built here — one directory listing per dir, on this thread — so
+    * Spark runs no listing job whatever the dir count. */
+  private def chainFrame(spark: SparkSession, tableDir: String,
+      rels: Seq[String]): DataFrame = {
+    val dirs = rels.distinct.sorted
+    val files = dirs.flatMap(chainFiles(tableDir, _)).map { p =>
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      new FileStatus(a.size, false, 1, LocalBlockSize,
+        a.lastModifiedTime.toMillis, new Path(p.toUri))
+    }
+    val index = ChainIndex(
+      dirs.map(rel => new Path(Paths.get(tableDir, rel).toUri)), files)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      partitionSchema = new StructType(), dataSchema = StoreSchema,
+      bucketSpec = None, fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark))
+  }
+
+  /** The block size Hadoop's local filesystem reports (`fs.local.block.size`). */
+  private val LocalBlockSize = 32L << 20
+
+  /** A chain read's fixed file list, with no partition columns. */
+  private case class ChainIndex(rootPaths: Seq[Path], files: Seq[FileStatus])
+    extends FileIndex {
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
+
+  /** The live rows of the chain dirs `rels`: folded last-DML-wins,
+    * tombstones filtered. */
+  private def liveRows(spark: SparkSession, tableDir: String,
+      rels: Seq[String]): DataFrame =
+    lastWins(chainFrame(spark, tableDir, rels)).filter(col("op") =!= Op.Delete)
+
   /** Resolve the current manifest (bucket → version-relative data dir). */
   private def latestManifestFile(tableDir: String): Option[String] = {
     val marker = Paths.get(tableDir, Latest)
@@ -121,14 +186,12 @@ object CdcParquetSink {
     latestManifestFile(tableDir).map(n => Paths.get(tableDir, n).toString)
 
   /** Read the materialized table: per-bucket chains merged
-    * last-DML-wins, live rows only (tombstones filtered). */
+    * last-DML-wins, live rows only (tombstones filtered). The files
+    * come from the current manifest's chain dirs ([[chainFrame]]), never
+    * from Spark's file discovery. */
   def readTable(spark: SparkSession, tableDir: String): Option[DataFrame] =
-    latestManifest(tableDir).filter(_.nonEmpty).map { m =>
-      val paths = m.values.flatten.toSeq.distinct.sorted
-        .map(rel => s"$tableDir/$rel")
-      lastWins(spark.read.schema(StoreSchema).parquet(paths: _*))
-        .filter(col("op") =!= Op.Delete)
-    }
+    latestManifest(tableDir).filter(_.nonEmpty)
+      .map(m => liveRows(spark, tableDir, m.values.flatten.toSeq))
 
   /** TIME-TRAVEL read: the table exactly as of micro-batch `batchId`'s
     * publish — the snapshot a reproducible training run pins ("read
@@ -144,12 +207,8 @@ object CdcParquetSink {
     * snapshots exist" is always answerable even past retention. */
   def readTableAsOf(spark: SparkSession, tableDir: String,
       batchId: Long): Option[DataFrame] =
-    manifestAsOf(tableDir, batchId).map { m =>
-      val rels = m.values.flatten.toSeq.distinct.sorted
-      lastWins(spark.read.schema(StoreSchema)
-        .parquet(rels.map(rel => s"$tableDir/$rel"): _*))
-        .filter(col("op") =!= Op.Delete)
-    }
+    manifestAsOf(tableDir, batchId)
+      .map(m => liveRows(spark, tableDir, m.values.flatten.toSeq))
 
   /** The newest versioned manifest ≤ `batchId`, as bucket → chain —
     * None when the table dir is missing (a bare Files.list would
@@ -216,18 +275,8 @@ object CdcParquetSink {
     } yield {
       val buckets = (ma.keySet ++ mb.keySet).toSeq.sorted
         .filter(b => ma.get(b) != mb.get(b))
-      def foldSide(m: Map[Int, Seq[String]]): DataFrame = {
-        val rels = buckets.flatMap(b => m.getOrElse(b, Nil))
-          .distinct.sorted
-        if (rels.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StoreSchema)
-        else
-          lastWins(spark.read.schema(StoreSchema)
-            .parquet(rels.map(rel => s"$tableDir/$rel"): _*))
-            .filter(col("op") =!= Op.Delete)
-      }
+      def foldSide(m: Map[Int, Seq[String]]): DataFrame =
+        liveRows(spark, tableDir, buckets.flatMap(b => m.getOrElse(b, Nil)))
       val a = foldSide(ma).select(col("key"),
         col("tsUs").as("a_tsUs"), col("recordId").as("a_recordId"),
         col("after").as("a_after"))
@@ -281,10 +330,7 @@ object CdcParquetSink {
           if (idx == 0)
             // bootstrap: the first version's live state, all inserts
             manifestAsOf(tableDir, id).map { m =>
-              val rels = m.values.flatten.toSeq.distinct.sorted
-              lastWins(spark.read.schema(StoreSchema)
-                .parquet(rels.map(rel => s"$tableDir/$rel"): _*))
-                .filter(col("op") =!= Op.Delete)
+              liveRows(spark, tableDir, m.values.flatten.toSeq)
                 .select(lit("insert").as("change_type"), col("key"),
                   col("recordId"), col("tsUs"), col("after"))
             }
@@ -387,10 +433,8 @@ object CdcParquetSink {
 
     if (folded.nonEmpty) {
       // chain = previous manifest entries + the delta written above
-      val chainPaths = folded
-        .flatMap(b => prev.getOrElse(b, Nil) :+ s"$version/bucket=$b")
-        .distinct.sorted.map(rel => s"$tableDir/$rel")
-      val chain = spark.read.schema(StoreSchema).parquet(chainPaths: _*)
+      val chain = chainFrame(spark, tableDir,
+        folded.flatMap(b => prev.getOrElse(b, Nil) :+ s"$version/bucket=$b"))
       // per-bucket fold RETAINS tombstones: stale records may still
       // arrive and must lose against them
       writeBuckets(mergeByBucket(chain, nBuckets), s"$tableDir/$version-base")
@@ -410,10 +454,8 @@ object CdcParquetSink {
       horizonUs: Long = Long.MaxValue,
       nBuckets: Int = DefaultBuckets): Unit = {
     latestManifest(tableDir).foreach { m =>
-      val paths = m.values.flatten.toSeq.distinct.sorted
-        .map(rel => s"$tableDir/$rel")
       val kept = mergeByBucket(
-        spark.read.schema(StoreSchema).parquet(paths: _*), nBuckets)
+        chainFrame(spark, tableDir, m.values.flatten.toSeq), nBuckets)
         .filter(col("op") =!= Op.Delete || col("tsUs") > horizonUs)
       val version = s"compact-${m.hashCode.toHexString}"
       writeBuckets(kept, s"$tableDir/$version")

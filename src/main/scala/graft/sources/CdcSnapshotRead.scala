@@ -68,12 +68,8 @@ class CdcSnapshotScan(tableDir: String, version: Long) extends Scan with Batch {
           s"window of ${CdcParquetSink.RetainVersions} versions)")
     }
     m.toSeq.sortBy(_._1).map { case (bucket, chain) =>
-      val files = chain.flatMap { rel =>
-        val dir = java.nio.file.Paths.get(tableDir, rel)
-        graft.Fs.listDir(dir)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(_.toString)
-      }
+      val files = chain.flatMap(CdcParquetSink.chainFiles(tableDir, _))
+        .map(_.toString)
       CdcSnapshotPartition(bucket, files.toArray): InputPartition
     }.toArray
   }
@@ -101,11 +97,15 @@ class CdcSnapshotPartitionReader(files: Array[String])
   // key of this bucket — the same bound the sink's fold jobs carry
   private val folded: java.util.Iterator[java.util.Map.Entry[String, State]] = {
     val acc = new java.util.HashMap[String, State]()
+    // one conf for the whole chain, without Hadoop's default XML
+    // resources (parsed again by every loading conf); `file:` still
+    // resolves to the checksummed local filesystem
+    val conf = new org.apache.hadoop.conf.Configuration(false)
     files.foreach { f =>
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
           new org.apache.hadoop.fs.Path(f))
-        .withConf(new org.apache.hadoop.conf.Configuration())
+        .withConf(conf)
         .build()
       try {
         var g = reader.read()

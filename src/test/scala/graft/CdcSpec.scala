@@ -6,7 +6,6 @@ import graft.streaming.CdcStreaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 object CdcFixtures {
   def rec(id: Long, tsUs: Long, op: String, pk: String,
@@ -187,7 +186,7 @@ class CdcSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("batch read returns all records with full schema") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir)
     val df = CdcStreaming.readBatch(spark, dir)
     assert(df.count() == recs.size)
@@ -497,7 +496,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("footer stats prune chunks on timestamp reposition") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     // chunk 0 covers ts 1..10s, chunk 1 11..20s, chunk 2 21..30s
     val df = CdcStreaming.readBatch(spark, dir, Some(15000000L))
@@ -525,7 +524,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("micro-batch stream consumes chunks with admission cap") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir)
     val q = CdcStreaming.readStream(spark, dir, maxChunksPerTrigger = Some(1))
       .writeStream.format("memory").queryName("cdc_stream_t1")
@@ -540,7 +539,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("streaming windowed op counts match the batch computation") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val q = CdcStreaming.windowedOpCounts(
         CdcStreaming.readStream(spark, dir), window = "10 seconds",
@@ -563,7 +562,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("materialize: last DML wins, DELETE tombstones, heartbeats ignored") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val q = CdcStreaming.materialize(CdcStreaming.readStream(spark, dir))
       .writeStream.format("memory").queryName("cdc_mat_t")
@@ -607,7 +606,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("typed schema projection yields typed columns on the stream") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = (0 until 10).map { i =>
       ChangeRecord(i.toLong, "tx", 1000000L * (i + 1), 0L, Op.Insert,
         "app", "m", Seq("id"), null,
@@ -641,7 +640,7 @@ class CdcSourceSpec extends AnyFunSuite {
   test("typed schema time_us: TIME-only strings become micros since " +
       "midnight, sign and >24h hours included") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     // the DtsDateTime time-only renderings the real wire delivers for
     // MySQL TIME columns (cdc33's tod column shape)
     val times = Seq("07:05:09", "00:00:00", "23:59:59.25",
@@ -680,7 +679,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("typed schema projection of the BEFORE image (delete auditing)") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}", Seq(
       ChangeRecord(1L, "tx", 1000000L, 0L, Op.Delete, "app", "m",
         Seq("id"), Map("id" -> "7", "price" -> "3.25"), null),
@@ -702,7 +701,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("scan reports custom metrics: pruned chunks, header skips, decodes") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir) // 3 chunks x 10 records, ts 1s..30s
     val conf = "spark.sql.adaptive.enabled"
     val old = spark.conf.get(conf)
@@ -730,7 +729,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("DDL control stream evolves the declared schema (add/drop column)") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     // data before the DDL, the DDL record in-band, data after with the
     // new column populated
     CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}", Seq(
@@ -767,7 +766,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("per-table selection filters rows and skips tail decode") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = (0 until 20).map { i =>
       val tbl = if (i % 4 == 0) "users" else "orders"
       ChangeRecord(i.toLong, "tx", 1000000L * (i + 1), 1000L * i, Op.Insert,
@@ -785,7 +784,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("filter pushdown: op/ts predicates evaluate on the header, chunks prune") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir) // 3 chunks: 1-10s, 11-20s, 21-30s
     // op equality: only matching records pay a tail parse
     val nUpdates = recs.count(_.op == Op.Update)
@@ -810,7 +809,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches the decoder: header-only queries skip the tail") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir)
     val before = RecordCodec.fullDecodes.get()
     val stats = CdcStreaming.readBatch(spark, dir)
@@ -830,7 +829,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("footer statistics let Catalyst broadcast the subscription side") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val cdc = CdcStreaming.readBatch(spark, dir)
       .select(element_at(col("after"), "uid").as("uid"), col("id"))
@@ -848,7 +847,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("batch scan statistics count exactly the chunks the scan plans; " +
       "a streaming scan's follow the directory") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val scan = new CdcTable(dir, None, None)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
@@ -874,7 +873,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("large chunks split into parallel scan ranges via the footer index") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val n = 10000
     val recs = (0 until n).map(i =>
       CdcFixtures.rec(i.toLong, 1000L * (i + 1), Op.Update,
@@ -897,7 +896,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("permissive mode skips corrupt records; failfast aborts") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val good = (0 until 5).map(i =>
       CdcFixtures.rec(i.toLong, 1000000L * (i + 1), Op.Insert, s"k$i", s"v$i"))
     // hand-build a chunk with a garbage payload in the middle: framing
@@ -943,7 +942,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("heartbeats advance event-time and close windows on an idle stream") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     // DML only in the 0-10s window; afterwards the table goes idle and
     // the transport emits just a liveness heartbeat at t=40s
     CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}", Seq(
@@ -984,7 +983,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("DDL records route end-to-end as control events, key state untouched") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = Seq(
       CdcFixtures.rec(1L, 1000000L, Op.Insert, "k1", "v1"),
       ChangeRecord(2L, "tx-ddl", 2000000L, 1999000L, Op.Ddl, "appdb", "users",
@@ -1018,7 +1017,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("composite primary keys materialize as distinct keys") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     def rec(id: Long, sec: Long, op: String, a: String, b: String, v: String) =
       ChangeRecord(id, "tx", sec * 1000000L, 0L, op, "db", "t",
         Seq("a", "b"),
@@ -1052,7 +1051,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("retract stream keeps downstream aggregates correct under updates") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     // micro-batches of one chunk each => retractions cross batch
     // boundaries through the keyed state
@@ -1098,7 +1097,7 @@ class CdcSourceSpec extends AnyFunSuite {
     // Spark-native equivalent is CREATE TABLE ... USING `graft-cdc`
     // OPTIONS (...) against the session catalog, with the same
     // projection + scalar function + OperationType filter shapes
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir)
     spark.sql("DROP TABLE IF EXISTS cdc_sql_t")
     spark.sql(s"""CREATE TABLE cdc_sql_t USING `graft-cdc`
@@ -1141,7 +1140,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("retract → aggregate runs as ONE streaming query, exact under updates") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     // two stateful operators in one plan: Append-mode
     // flatMapGroupsWithState (retract materializer) feeding a grouped
@@ -1174,7 +1173,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("multi-table catalog: one subscription dir, per-table SQL") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     // two dbs, three tables on one wire
     def r(id: Long, db: String, tbl: String) =
       ChangeRecord(id, "tx", 1000000L * id, 0L, Op.Update, db, tbl,
@@ -1210,7 +1209,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("empty subscription dir: batch is empty with full schema, stream waits") {
-    val dir = Files.createTempDirectory("gcl_empty").toString
+    val dir = TestDirs.tmp("gcl_empty")
     // batch: zero rows, but the schema must be the full record schema
     // (a consumer's projection compiles before any chunk exists)
     val batch = CdcStreaming.readBatch(spark, dir)
@@ -1245,7 +1244,7 @@ class CdcSourceSpec extends AnyFunSuite {
         ChangeRecord(i.toLong, "tx", 1000000L * i, 0L, Op.Update, db, tbl,
           Seq("k"), null, Map("k" -> i.toString, "v" -> s"v$i"))
       }
-      val dir = Files.createTempDirectory(s"gcl_cat_$seed").toString
+      val dir = TestDirs.tmp(s"gcl_cat_$seed")
       rnd.shuffle(recs).grouped(1 + rnd.nextInt(30)).zipWithIndex.foreach {
         case (g, i) =>
           CdcChunkFile.write(f"$dir/chunk-$i%05d${CdcChunkFile.Extension}", g)
@@ -1277,7 +1276,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("retract → windowed aggregate chains event time through FMGWS") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val q = CdcStreaming.windowedLiveCounts(
         CdcStreaming.readStream(spark, dir, maxChunksPerTrigger = Some(1)),
@@ -1299,7 +1298,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("footer v3 table directory prunes whole chunks on table selection") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     def r(id: Long, db: String, tbl: String) =
       ChangeRecord(id, "tx", 1000000L * id, 0L, Op.Update, db, tbl,
         Seq("k"), null, Map("k" -> id.toString, "v" -> s"v$id"))
@@ -1339,7 +1338,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("pre-v3 chunks read fine: no table dir, no table pruning, still split") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = (0 until 5).map(i =>
       CdcFixtures.rec(i.toLong, 1000000L * (i + 1), Op.Insert, s"k$i", s"v$i"))
     // hand-write a round-2 (v2) chunk: records, no index, v2 footer
@@ -1367,7 +1366,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("catalog discovery is footer-only on v3 chunks (records untouched)") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     def r(id: Long, db: String, tbl: String) =
       ChangeRecord(id, "tx", 1000000L * id, 0L, Op.Update, db, tbl,
         Seq("k"), null, Map("k" -> id.toString, "v" -> s"v$id"))
@@ -1396,9 +1395,9 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("restart from checkpoint continues, no duplicates") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
-    val out = Files.createTempDirectory("gclout").toString + "/sink"
+    val dir = TestDirs.tmp("gcl")
+    val ckpt = TestDirs.tmp("ckpt")
+    val out = TestDirs.tmp("gclout") + "/sink"
     val recs = CdcFixtures.writeChunks(dir)
     def start() = CdcStreaming.readStream(spark, dir)
       .writeStream.format("parquet")
@@ -1779,7 +1778,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("fkParents survive the DSv2 scan under nested column pruning") {
-    val dir = Files.createTempDirectory("gcl_fk").toString
+    val dir = TestDirs.tmp("gcl_fk")
     val fk = graft.cdc.FkParent(null, "app", "region",
       Seq("r_id"), Seq("region_id"))
     val recs = (0 until 8).map(i =>
@@ -1801,7 +1800,7 @@ class CdcSourceSpec extends AnyFunSuite {
   }
 
   test("dotted db/table names resolve end-to-end (selector + catalog)") {
-    val dir = Files.createTempDirectory("gcl_dots").toString
+    val dir = TestDirs.tmp("gcl_dots")
     // an Oracle-style dotted database name and a dotted table name —
     // without escaping, the selector would split 'ora.pdb1.my.table'
     // at the wrong boundary (ref ObjectNameUtils contract)
@@ -1840,7 +1839,7 @@ class CdcSourceSpec extends AnyFunSuite {
     // construction. This pins it — db 'b' goes silent after its first
     // minute, db 'a' keeps producing; b's early window must EMIT in
     // append mode (= its state finalized past the watermark).
-    val dir = Files.createTempDirectory("gcl_idle").toString
+    val dir = TestDirs.tmp("gcl_idle")
     val minUs = 60L * 1000000L
     def r(id: Long, db: String, tsUs: Long) =
       ChangeRecord(id, s"tx-$id", tsUs, tsUs - 1000L, Op.Insert,

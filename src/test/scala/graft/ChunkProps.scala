@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.cdc.ChangeRecord
 import graft.sources.CdcChunkFile
 import org.scalacheck.{Gen, Prop, Properties}
@@ -23,7 +21,7 @@ object ChunkProps extends Properties("CdcChunkFile") {
       : org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(500)
 
-  private val tmp = Files.createTempDirectory("graft_chunk_props").toString
+  private val tmp = TestDirs.tmp("graft_chunk_props")
   private val seq = new java.util.concurrent.atomic.AtomicInteger()
 
   private def writeTmp(recs: Seq[ChangeRecord]): String = {

@@ -36,7 +36,7 @@ class EndToEndSpec extends AnyFunSuite {
       Map("aid" -> id.toString, "note" -> "ignore me"))
 
   test("subscription -> table select -> typed schema -> windowed agg -> sink") {
-    val server = Files.createTempDirectory("e2e").toString
+    val server = TestDirs.tmp("e2e")
     Files.createDirectory(java.nio.file.Paths.get(s"$server/shop-topic"))
     val dir = s"$server/shop-topic"
 
@@ -93,8 +93,8 @@ class EndToEndSpec extends AnyFunSuite {
 
     // materialization leg: same subscription into the bucketed sink;
     // current state = oid 100 (12.00) and 102 (7.75); 101 deleted
-    val tableDir = Files.createTempDirectory("e2e_tbl").toString
-    val ckpt = Files.createTempDirectory("e2e_ck").toString
+    val tableDir = TestDirs.tmp("e2e_tbl")
+    val ckpt = TestDirs.tmp("e2e_ck")
     val q2 = CdcParquetSink.start(sub.readStream(spark), tableDir, ckpt)
     try q2.processAllAvailable() finally q2.stop()
     val state = CdcParquetSink.readTable(spark, tableDir).get

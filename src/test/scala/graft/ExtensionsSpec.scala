@@ -299,7 +299,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("subscription config validates and seeks by checkpoint") {
-    val dir = Files.createTempDirectory("sub").toString
+    val dir = TestDirs.tmp("sub")
     Files.createDirectory(java.nio.file.Paths.get(s"$dir/t1"))
     CdcFixtures.writeChunks(s"$dir/t1")
     assertThrows[IllegalArgumentException] {

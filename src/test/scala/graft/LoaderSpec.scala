@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,10 +19,7 @@ class LoaderSpec extends AnyFunSuite {
   private val epochMicros = Seq(
     1700000000000000L, 1700000123456789L, 1699999999999999L)
 
-  private def dirFor(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_loader_$tag").toString
-    d
-  }
+  private def dirFor(tag: String): String = TestDirs.tmp(s"graft_loader_$tag")
 
   private def loadedMicros(dir: String): Seq[Long] = {
     val df = Tables.events(spark, dir)

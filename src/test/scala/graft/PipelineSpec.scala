@@ -223,7 +223,7 @@ class PipelineSpec extends AnyFunSuite {
     val single = Tables.rowCount(spark, sf, "embeddings")
     assert(single == Tables.load(spark, sf, "embeddings").count())
     // Spark-written multi-part directory (the ScaleProbe shape)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
+    val tmp = TestDirs.tmp("graft_rowcount")
     try {
       spark.range(1234).repartition(7).write.parquet(s"$tmp/t.parquet")
       assert(Tables.rowCount(spark, tmp, "t") == 1234L)
@@ -372,7 +372,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("dd14 soft dedup: crafted weights are exact (unique=1.0, clone=0.5)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd14").toString
+    val dir = TestDirs.tmp("graft_dd14")
     try {
       import spark.implicits._
       val a = (1 to 20).map(i => s"a$i").mkString(" ")
@@ -398,7 +398,7 @@ class PipelineSpec extends AnyFunSuite {
     // With L=20, doc1's duplicated 20-gram positions are exactly the 6
     // offsets inside the passage → one run, one island, 25 covered
     // tokens — every output number is hand-checkable
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd13").toString
+    val dir = TestDirs.tmp("graft_dd13")
     try {
       import spark.implicits._
       val passage = (1 to 25).map(i => s"p$i").mkString(" ")
@@ -426,7 +426,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("dd16 removal: crafted passage scrubbed from both copies, unique doc untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd16").toString
+    val dir = TestDirs.tmp("graft_dd16")
     try {
       import spark.implicits._
       val passage = (1 to 25).map(i => s"p$i").mkString(" ")
@@ -1877,7 +1877,7 @@ class PipelineSpec extends AnyFunSuite {
   test("tx11 surprise bits: hand-computed on a crafted corpus") {
     // N = 10 tokens; 'x' has ctf 8 → ⌊10/8⌋=1 → 0 bits; 'y'/'z' are
     // singletons → ⌊10/1⌋=10 → bitlength 4 → 3 bits each
-    val dir = java.nio.file.Files.createTempDirectory("graft_tx11").toString
+    val dir = TestDirs.tmp("graft_tx11")
     try {
       import spark.implicits._
       Seq((1L, "x x x x x x x x", "en", "s", 15L),
@@ -2177,7 +2177,7 @@ class PipelineSpec extends AnyFunSuite {
     // oversize path needs its own corpus: one 300-token doc among
     // packable ones (ADVICE r13 — the hard cap must hold for ANY
     // corpus, not by fixture luck)
-    val dir = java.nio.file.Files.createTempDirectory("pk09big").toString
+    val dir = TestDirs.tmp("pk09big")
     val docs = (1L to 40L).map(i => (i, Seq.fill(20)("w").mkString(" "))) :+
       (99L, Seq.fill(300)("tok").mkString(" "))
     spark.createDataFrame(docs).toDF("doc_id", "text")
@@ -2565,7 +2565,7 @@ class PipelineSpec extends AnyFunSuite {
     val index = graft.streaming.IngestDedup.corpusIndex(corpus).cache()
     try {
       val dupText = corpus.orderBy("doc_id").limit(1).head().getString(1)
-      val dir = java.nio.file.Files.createTempDirectory("gcl_ingest").toString
+      val dir = TestDirs.tmp("gcl_ingest")
       def rec(id: Long, text: String, op: String = cdc.Op.Insert) =
         cdc.ChangeRecord(id, s"tx-$id", 1000000L * (id + 1), 0L, op,
           "app", "docs", Seq("doc_id"), null,
@@ -2607,7 +2607,7 @@ class PipelineSpec extends AnyFunSuite {
     val index = graft.streaming.IngestDedup.corpusIndex(corpus).cache()
     try {
       val dupText = corpus.orderBy("doc_id").limit(1).head().getString(1)
-      val dir = java.nio.file.Files.createTempDirectory("gcl_dotted").toString
+      val dir = TestDirs.tmp("gcl_dotted")
       graft.sources.CdcChunkFile.write(
         s"$dir/chunk-00000${graft.sources.CdcChunkFile.Extension}",
         Seq(
@@ -2721,7 +2721,7 @@ class PipelineSpec extends AnyFunSuite {
       (3L, "de", "eta theta zeta eta theta"),
       (4L, "en", "alpha gamma beta alpha gamma"))
       .toDF("doc_id", "lang", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("tx21").toString
+    val tmp = TestDirs.tmp("tx21")
     try {
       crafted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       val got = SparkEntry.queries("tx21_dsir")(spark, tmp).collect()

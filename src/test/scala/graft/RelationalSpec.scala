@@ -262,8 +262,7 @@ class RelationalSpec extends AnyFunSuite {
     // match (rows 3,2,5); row 5 is consumed and cannot re-anchor.
     // 3,2,5,4,1,6 — two matches, the second re-anchored INSIDE its
     // down run: start=4 (not the consumed 5), n_down=1, depth=3.
-    val dir = java.nio.file.Files
-      .createTempDirectory("q40w").toString
+    val dir = TestDirs.tmp("q40w")
     def mk(vals: Seq[Double], uid: Long) = vals.zipWithIndex.map {
       case (v, i) => (uid, (i + 1).toLong,
         java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i}%02d"), v)

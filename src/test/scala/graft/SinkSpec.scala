@@ -12,9 +12,9 @@ class SinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("continuous materialization: streamed table equals batch upsert") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     CdcFixtures.writeChunks(dir)
     val q = CdcParquetSink.start(
       CdcStreaming.readStream(spark, dir, maxChunksPerTrigger = Some(1)),
@@ -35,9 +35,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("late chunk after restart folds into a new snapshot version") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     CdcFixtures.writeChunks(dir)
     def run() = {
       val q = CdcParquetSink.start(
@@ -58,9 +58,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("micro-batch touching one key rewrites only its bucket") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     CdcFixtures.writeChunks(dir)
     def run() = {
       val q = CdcParquetSink.start(
@@ -85,15 +85,15 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("hot key: steady-state write is delta-sized; chain folds at maxDeltas") {
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val tableDir = TestDirs.tmp("tbl")
     def oneRec(id: Long, tsSec: Long, v: String) = {
-      val d = Files.createTempDirectory("gcl").toString
+      val d = TestDirs.tmp("gcl")
       CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}",
         Seq(CdcFixtures.rec(id, tsSec * 1000000L, Op.Update, "k1", v)))
       CdcStreaming.readBatch(spark, d)
     }
     // batch 0: the full fixture set becomes the base
-    val dir0 = Files.createTempDirectory("gcl").toString
+    val dir0 = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir0)
     CdcParquetSink.applyBatch(spark, CdcStreaming.readBatch(spark, dir0),
       tableDir, 0L, nBuckets = 4, maxDeltas = 2)
@@ -161,9 +161,9 @@ class SinkSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     // 200 keys over 4 buckets: ~50 keys a bucket, so a key-clustered
     // merge would spread each bucket over all 4 shuffle tasks
     val keys = 0 until 200
@@ -207,9 +207,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("time travel: as-of reads pin snapshots; aged-out reads are None") {
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val tableDir = TestDirs.tmp("tbl")
     def oneRec(id: Long, tsSec: Long, key: String, v: String) = {
-      val d = Files.createTempDirectory("gcl").toString
+      val d = TestDirs.tmp("gcl")
       CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}",
         Seq(CdcFixtures.rec(id, tsSec * 1000000L, Op.Update, key, v)))
       CdcStreaming.readBatch(spark, d)
@@ -238,9 +238,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("versionAsOf reader option serves the API snapshot; aged-out raises") {
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val tableDir = TestDirs.tmp("tbl")
     def oneRec(id: Long, tsSec: Long, key: String, v: String) = {
-      val d = Files.createTempDirectory("gcl").toString
+      val d = TestDirs.tmp("gcl")
       CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}",
         Seq(CdcFixtures.rec(id, tsSec * 1000000L, Op.Update, key, v)))
       CdcStreaming.readBatch(spark, d)
@@ -274,9 +274,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("tableChanges: typed diff between snapshots, untouched buckets pruned") {
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val tableDir = TestDirs.tmp("tbl")
     def batchOf(recs: Seq[graft.cdc.ChangeRecord]) = {
-      val d = Files.createTempDirectory("gcl").toString
+      val d = TestDirs.tmp("gcl")
       CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}", recs)
       CdcStreaming.readBatch(spark, d)
     }
@@ -315,9 +315,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("GC retention follows the publication log and keeps the live manifest") {
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val tableDir = TestDirs.tmp("tbl")
     def oneRec(id: Long, tsSec: Long, key: String, v: String) = {
-      val d = Files.createTempDirectory("gcl").toString
+      val d = TestDirs.tmp("gcl")
       CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}",
         Seq(CdcFixtures.rec(id, tsSec * 1000000L, Op.Update, key, v)))
       CdcStreaming.readBatch(spark, d)
@@ -344,19 +344,19 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("maxDeltas < 1 is rejected (would degrade to whole-bucket rewrites)") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     val batch = CdcStreaming.readBatch(spark, dir)
     intercept[IllegalArgumentException] {
       CdcParquetSink.applyBatch(spark, batch,
-        Files.createTempDirectory("tbl").toString, 0L, maxDeltas = 0)
+        TestDirs.tmp("tbl"), 0L, maxDeltas = 0)
     }
   }
 
   test("replayed micro-batch no-ops once its manifest exists") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     CdcFixtures.writeChunks(dir)
     val q = CdcParquetSink.start(
       CdcStreaming.readStream(spark, dir), tableDir, ckpt)
@@ -375,8 +375,8 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("crash between manifest write and _LATEST swap: replay completes the publish") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
     CdcFixtures.writeChunks(dir)
     val all = CdcStreaming.readBatch(spark, dir)
     CdcParquetSink.applyBatch(spark, all.filter(col("id") < 25), tableDir, 0L)
@@ -407,9 +407,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("stale pre-delete record cannot resurrect a deleted key") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     // batch 1: insert k9 at t=10s, delete k9 at t=20s
     CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}", Seq(
       CdcFixtures.rec(1L, 10000000L, Op.Insert, "k9", "v1"),
@@ -435,9 +435,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("compact folds every chain to length 1 and stores zero tombstone rows") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     // three batches over 5 keys with a delete — chains grow past 1
     // (maxDeltas default is high enough not to fold at this size)
     (0 until 3).foreach { b =>
@@ -471,9 +471,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("change feed replays to the live table, resumes by suffix, ignores compaction") {
-    val dir = Files.createTempDirectory("gcl").toString
-    val tableDir = Files.createTempDirectory("tbl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val ckpt = TestDirs.tmp("ck")
     (0 until 3).foreach { b =>
       CdcChunkFile.write(f"$dir/chunk-$b%05d${CdcChunkFile.Extension}",
         (0 until 10).map { i =>
@@ -532,7 +532,7 @@ class SinkSpec extends AnyFunSuite {
     // the per-task commit-millis prefix this replaced made same-job
     // segment order a task-finish race, which would let a key's later
     // record precede its earlier one in a time-range-dealt batch
-    val dir = Files.createTempDirectory("gcl_order").toString
+    val dir = TestDirs.tmp("gcl_order")
     import spark.implicits._
     val recs = (0 until 300).map { i =>
       (i.toLong, s"tx-$i", 1000000L * (i + 1), 1000000L * (i + 1) - 500L,
@@ -567,7 +567,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches the batch range join") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
     // INSERTs joined to DELETEs of the same key within ±10s
     val q = CdcStreaming.intervalJoin(
@@ -590,7 +590,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("streaming session windows close under watermark and match batch") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     // bursts separated by real gaps so sessions can close before the
     // final watermark (a burst at t=40s advances the watermark past
     // the early sessions' end)
@@ -632,8 +632,8 @@ class SinkSpec extends AnyFunSuite {
     }.toSeq
 
   test("graft-cdc write: batch roundtrip through the chunk transport") {
-    val src = Files.createTempDirectory("gcl").toString
-    val dst = Files.createTempDirectory("gcl").toString
+    val src = TestDirs.tmp("gcl")
+    val dst = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(src)
     val df = CdcStreaming.readBatch(spark, src)
     df.write.format("graft-cdc").mode("append").option("path", dst).save()
@@ -646,9 +646,9 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("graft-cdc write: streaming relay preserves the subscription") {
-    val src = Files.createTempDirectory("gcl").toString
-    val dst = Files.createTempDirectory("gcl").toString
-    val ckpt = Files.createTempDirectory("ck").toString
+    val src = TestDirs.tmp("gcl")
+    val dst = TestDirs.tmp("gcl")
+    val ckpt = TestDirs.tmp("ck")
     CdcFixtures.writeChunks(src)
     val q = CdcStreaming.readStream(spark, src, maxChunksPerTrigger = Some(1))
       .writeStream.format("graft-cdc").option("path", dst)
@@ -660,8 +660,8 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("graft-cdc write: a chunk-name collision fails, never replaces") {
-    val src = Files.createTempDirectory("gcl").toString
-    val dst = Files.createTempDirectory("gcl").toString
+    val src = TestDirs.tmp("gcl")
+    val dst = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(src)
     val rows = CdcStreaming.readBatch(spark, src)
       .queryExecution.toRdd.map(_.copy()).collect()
@@ -701,34 +701,161 @@ class SinkSpec extends AnyFunSuite {
         CdcFixtures.rec(i.toLong, 1000000L * (1 + rnd.nextInt(8)), op,
           s"k${rnd.nextInt(10)}", s"v$i")
       }
-      val tableDir = Files.createTempDirectory(s"tbl_model_$seed").toString
+      val tableDir = TestDirs.tmp(s"tbl_model_$seed")
       var batchId = 0L
       var rest = recs
       while (rest.nonEmpty) {
         val take = 1 + rnd.nextInt(25)
         val (batch, tail) = rest.splitAt(take)
-        val d = Files.createTempDirectory("gcl_model").toString
+        val d = TestDirs.tmp("gcl_model")
         CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}", batch)
         CdcParquetSink.applyBatch(spark, CdcStreaming.readBatch(spark, d),
           tableDir, batchId, nBuckets = 4, maxDeltas = 2)
         batchId += 1
         rest = tail
       }
-      // the model: per key, winner by (tsUs, id); DELETE winner = absent
-      val model = recs.groupBy(r =>
-          (if (r.op == Op.Delete) r.before else r.after)("uid"))
-        .flatMap { case (k, rs) =>
-          val w = rs.maxBy(r => (r.tsUs, r.id))
-          if (w.op == Op.Delete) None else Some(k -> w.after("v"))
-        }
+      val model = SinkSpec.model(recs)
       def liveRows: Map[String, String] =
-        CdcParquetSink.readTable(spark, tableDir).get
-          .select(expr("after['uid']"), expr("after['v']"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        SinkSpec.live(CdcParquetSink.readTable(spark, tableDir).get)
       withClue(s"seed $seed: ") { assert(liveRows == model) }
       CdcParquetSink.compact(spark, tableDir)
       withClue(s"seed $seed after compact: ") { assert(liveRows == model) }
     }
+  }
+
+  test("chain reads and folds over more than 32 chain dirs run no " +
+      "listing job") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    // Spark's file discovery lists more than 32 paths with a Spark job
+    // (parallelPartitionDiscovery.threshold); the sink's chain reads
+    // take their files from the manifest instead
+    val tableDir = TestDirs.tmp("tbl")
+    // batch b updates 200 keys (inserts them at 0), deletes every key
+    // with i % 10 == b and inserts one new key
+    def recsOf(b: Int): Seq[graft.cdc.ChangeRecord] =
+      (0 until 200).map { i =>
+        val id = b * 1000L + i
+        val op = if (b == 0) Op.Insert else if (i % 10 == b) Op.Delete
+          else Op.Update
+        CdcFixtures.rec(id, 1000000L * (b + 1), op, s"k$i", s"v$id")
+      } ++ (if (b == 0) Nil else Seq(CdcFixtures.rec(b * 1000L + 999,
+        1000000L * (b + 1), Op.Insert, s"n$b", s"new$b")))
+    def upTo(b: Int) = SinkSpec.model((0 to b).flatMap(recsOf))
+    def batchOf(b: Int) = {
+      val d = TestDirs.tmp("gcl")
+      CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}", recsOf(b))
+      CdcStreaming.readBatch(spark, d)
+    }
+    def apply(b: Int, maxDeltas: Int = CdcParquetSink.DefaultMaxDeltas) =
+      CdcParquetSink.applyBatch(spark, batchOf(b), tableDir, b.toLong,
+        nBuckets = 16, maxDeltas = maxDeltas)
+    def noListing[T](what: String)(f: => T): T = {
+      val c = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT
+      val before = c.getCount
+      val out = f
+      assert(c.getCount == before, s"$what ran a listing job")
+      out
+    }
+    def dirs = CdcParquetSink.latestManifest(tableDir).get.values.flatten.size
+    def table = SinkSpec.live(CdcParquetSink.readTable(spark, tableDir).get)
+    def changes(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("change_type"), expr("after['uid']"), expr("after['v']"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .toSet
+
+    (0 to 3).foreach(apply(_))
+    assert(dirs == 64)
+    assert(noListing("readTable")(table) == upTo(3))
+    assert(noListing("readTableAsOf")(SinkSpec.live(
+      CdcParquetSink.readTableAsOf(spark, tableDir, 2L).get)) == upTo(2))
+    assert(noListing("tableChanges")(changes(
+      CdcParquetSink.tableChanges(spark, tableDir, 0L, 3L).get)) ==
+      SinkSpec.diff(upTo(0), upTo(3)))
+    val feed = noListing("changeFeed")(
+      CdcParquetSink.changeFeed(spark, tableDir).get
+        .select(col("version"), col("change_type"), expr("after['uid']"),
+          expr("after['v']"))
+        .collect().map(r => (r.getLong(0), (r.getString(1), r.getString(2),
+          r.getString(3)))).toSet)
+    assert(feed == (0 to 3).flatMap { b =>
+      val from = if (b == 0) Map.empty[String, String] else upTo(b - 1)
+      SinkSpec.diff(from, upTo(b)).map(b.toLong -> _)
+    }.toSet)
+    noListing("compact")(CdcParquetSink.compact(spark, tableDir, nBuckets = 16))
+    assert(dirs == 16 && table == upTo(3))
+    // two more deltas, then a fold of every bucket's 4-dir chain
+    (4 to 5).foreach(apply(_))
+    assert(dirs == 48)
+    noListing("fold")(apply(6, maxDeltas = 2))
+    val folded = CdcParquetSink.latestManifest(tableDir).get
+    assert(folded.size == 16 &&
+      folded.values.forall(c => c.size == 1 && c.head.contains("-base/")))
+    assert(table == upTo(6))
+  }
+
+  test("a bucket dir holding several part files reads, folds and " +
+      "compacts last-wins; sidecars and markers are not read") {
+    import org.apache.spark.sql.Row
+    val recs = (0 until 8).map(i =>
+      CdcFixtures.rec(i.toLong, 10000000L, Op.Insert, s"k$i", s"v$i"))
+    val expected = SinkSpec.model(recs) + ("k0" -> "newer")
+    def batchOf(rs: Seq[graft.cdc.ChangeRecord]) = {
+      val d = TestDirs.tmp("gcl")
+      CdcChunkFile.write(s"$d/chunk-00000${CdcChunkFile.Extension}", rs)
+      CdcStreaming.readBatch(spark, d)
+    }
+    def table(tableDir: String) =
+      SinkSpec.live(CdcParquetSink.readTable(spark, tableDir).get)
+    // a one-batch table whose k0 bucket dir then gets a second part
+    // file holding an older and a newer version of k0, moved in with
+    // its `.crc` sidecar, a `_SUCCESS` marker and the marker's sidecar
+    def twoFileTable(): (String, String) = {
+      val tableDir = TestDirs.tmp("tbl")
+      CdcParquetSink.applyBatch(spark, batchOf(recs), tableDir, 0L,
+        nBuckets = 2)
+      val k0 = CdcParquetSink.readTable(spark, tableDir).get
+        .filter(col("key").endsWith("|k0")).head()
+      val (key, ts) = (k0.getAs[String]("key"), k0.getAs[Long]("tsUs"))
+      val rel = CdcParquetSink.latestManifest(tableDir).get.values.flatten
+        .find(r => spark.read.parquet(s"$tableDir/$r")
+          .filter(col("key") === key).count() > 0).get
+      val staging = TestDirs.tmp("part")
+      spark.createDataFrame(java.util.List.of(
+          Row(key, ts - 1, 100L, Op.Update, Map("uid" -> "k0", "v" -> "older")),
+          Row(key, ts + 1, 101L, Op.Update, Map("uid" -> "k0", "v" -> "newer"))),
+          CdcParquetSink.StoreSchema)
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+      val moved = Fs.listDir(Paths.get(staging))
+      moved.foreach(p => Files.move(p, Paths.get(tableDir, rel, p.getFileName.toString)))
+      assert(moved.map(_.getFileName.toString).exists(_.endsWith(".crc")) &&
+        moved.exists(_.getFileName.toString == "_SUCCESS"))
+      assert(SinkSpec.partFiles(tableDir, rel) == 2)
+      (tableDir, rel)
+    }
+
+    val (t1, _) = twoFileTable()
+    assert(table(t1) == expected)
+    val snapshot = spark.read.format("graft-cdc").option("versionAsOf", 0L)
+      .load(t1)
+    assert(SinkSpec.live(snapshot) == expected)
+
+    // a fold reads both files: a record between the base and "newer"
+    // must lose to "newer"
+    val (t2, rel2) = twoFileTable()
+    val between = recs.head.copy(id = 200L, after = Map("uid" -> "k0", "v" -> "between"))
+    CdcParquetSink.applyBatch(spark, batchOf(Seq(between)), t2, 1L,
+      nBuckets = 2, maxDeltas = 1)
+    val bucket = CdcParquetSink.latestManifest(t2).get
+      .collectFirst { case (b, c) if c.head.contains("-base/") => b }.get
+    assert(CdcParquetSink.manifestAsOf(t2, 0L).get(bucket) == Seq(rel2))
+    assert(table(t2) == expected)
+
+    val (t3, _) = twoFileTable()
+    CdcParquetSink.compact(spark, t3, nBuckets = 2)
+    assert(table(t3) == expected)
+    val stored = spark.read.parquet(CdcParquetSink.latestManifest(t3).get
+      .values.flatten.map(r => s"$t3/$r").toSeq: _*)
+    assert(stored.count() == expected.size)
   }
 
   test("pk-less tables key on their unique index (codec v3 ukNames)") {
@@ -743,7 +870,7 @@ class SinkSpec extends AnyFunSuite {
         if (op == Op.Insert) null else Map("email" -> email, "v" -> "old"),
         if (op == Op.Delete) null else Map("email" -> email, "v" -> v),
         ukNames = Seq("email"))
-    val dir = Files.createTempDirectory("gcl_uk").toString
+    val dir = TestDirs.tmp("gcl_uk")
     CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}", Seq(
       rec(1, 10, Op.Insert, "a@x", "v1"),
       rec(2, 20, Op.Update, "a@x", "v2"),
@@ -754,7 +881,7 @@ class SinkSpec extends AnyFunSuite {
     assert(batch.filter(col("ukNames") === array(lit("email"))).count() == 4)
     // sink materialization keys on the unique index: a@x collapses to
     // v2, b@x is deleted, NOT all four records on one empty key
-    val tableDir = Files.createTempDirectory("tbl_uk").toString
+    val tableDir = TestDirs.tmp("tbl_uk")
     CdcParquetSink.applyBatch(spark, batch, tableDir, 0L, nBuckets = 2)
     val live = CdcParquetSink.readTable(spark, tableDir).get
       .select(expr("after['email']"), expr("after['v']"))
@@ -780,7 +907,7 @@ class SinkSpec extends AnyFunSuite {
           s"k${rnd.nextInt(8)}", s"v${rnd.nextInt(6)}")
       }
       val shuffled = rnd.shuffle(recs)
-      val dir = Files.createTempDirectory(s"gcl_retract_$seed").toString
+      val dir = TestDirs.tmp(s"gcl_retract_$seed")
       shuffled.grouped(10).zipWithIndex.foreach { case (g, i) =>
         CdcChunkFile.write(f"$dir/chunk-$i%05d${CdcChunkFile.Extension}", g)
       }
@@ -807,7 +934,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("dedupRedelivered drops exact redeliveries by record id") {
-    val dir = Files.createTempDirectory("gcl").toString
+    val dir = TestDirs.tmp("gcl")
     val recs = CdcFixtures.writeChunks(dir)
     // chunk 3 redelivers the first 10 records (failover replay)
     CdcChunkFile.write(s"$dir/chunk-00090${CdcChunkFile.Extension}",
@@ -825,6 +952,37 @@ class SinkSpec extends AnyFunSuite {
 }
 
 object SinkSpec {
+  /** The map model of the sink: per key, the winner by (tsUs, id); a
+    * DELETE winner leaves the key absent. `uid` → the winner's `v`. */
+  def model(recs: Seq[graft.cdc.ChangeRecord]): Map[String, String] =
+    recs.groupBy(r => (if (r.op == Op.Delete) r.before else r.after)("uid"))
+      .flatMap { case (k, rs) =>
+        val w = rs.maxBy(r => (r.tsUs, r.id))
+        if (w.op == Op.Delete) None else Some(k -> w.after("v"))
+      }
+
+  /** A table read as the model's shape; a key read twice fails. */
+  def live(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
+    val rows = df.select(expr("after['uid']"), expr("after['v']"))
+      .collect().map(r => r.getString(0) -> r.getString(1))
+    val m = rows.toMap
+    assert(m.size == rows.length, s"a key is read twice: ${rows.toSeq}")
+    m
+  }
+
+  /** The typed diff [[CdcParquetSink.tableChanges]] emits between two
+    * model states, as (change_type, uid, v). */
+  def diff(a: Map[String, String],
+      b: Map[String, String]): Set[(String, String, String)] =
+    (a.keySet ++ b.keySet).flatMap { k =>
+      (a.get(k), b.get(k)) match {
+        case (None, Some(v))              => Some(("insert", k, v))
+        case (Some(v), None)              => Some(("delete", k, v))
+        case (Some(x), Some(y)) if x != y => Some(("update", k, y))
+        case _                            => None
+      }
+    }
+
   /** Parquet data files in one bucket dir of a table. */
   def partFiles(tableDir: String, rel: String): Int =
     Fs.listDir(Paths.get(tableDir, rel)).count { p =>

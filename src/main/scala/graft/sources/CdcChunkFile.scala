@@ -28,10 +28,13 @@ import java.nio.file.{Files, Path, Paths}
   * The footer gives O(1) min/max event-time per chunk — the source
   * prunes whole chunks on timestamp reposition without reading records
   * (the parquet-footer-stats play, SURVEY §5). The v2 sparse offset
-  * index makes a single LARGE chunk splittable: the scan plans one
-  * input partition per ~[[SplitStride]] records instead of one per
-  * file, so a 10 GB segment does not serialize onto one core (the
-  * parquet row-group play). The v3 table directory lists the chunk's
+  * index makes a single LARGE chunk splittable into ranges of
+  * ~[[SplitStride]] records, so a 10 GB segment does not serialize
+  * onto one core (the parquet row-group play). Those ranges, and the
+  * whole small chunks, are the scan's packing unit: the scan packs
+  * them into input partitions by Spark's file-packing rule, so many
+  * small chunks share one task and a big chunk's ranges spread over
+  * several. The v3 table directory lists the chunk's
   * distinct (db, tbl) pairs — a per-table subscription prunes WHOLE
   * chunks that never mention its table (the min/max-stats play applied
   * to the table axis), and catalog discovery is O(chunks) instead of
@@ -48,9 +51,9 @@ object CdcChunkFile {
   val FooterLen3: Int = 4 + 4 + 8 + 8 + 4 + 4
   val Extension: String = ".gcl"
 
-  /** Records per split segment. 4096 records ≈ a few MB of codec
-    * bytes — small enough to parallelize, large enough that per-task
-    * overhead stays negligible. */
+  /** Records per split range. 4096 records ≈ a few MB of codec
+    * bytes — small enough to parallelize; the scan packs ranges, so
+    * per-task overhead does not depend on it. */
   val SplitStride: Int = 4096
 
   def write(path: String, records: Seq[ChangeRecord]): Unit = {
@@ -98,9 +101,13 @@ object CdcChunkFile {
       splits: Seq[(Long, Long)],
       tables: Option[Set[(String, String)]] = None)
 
+  /** Footers read in this JVM (observable in specs; monotone). */
+  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** O(1) stats + split read: footer (and v2 index) only, never the
     * records. */
   def readFooter(path: String): Footer = {
+    footerReads.incrementAndGet()
     val p = Paths.get(path)
     val size = Files.size(p)
     require(size >= FooterLen, s"$path too small for a cdc chunk")
@@ -201,10 +208,12 @@ object CdcChunkFile {
 
   /** Iterate raw record payloads of one byte range (caller decodes
     * lazily or fully). Reads ONLY [start, end) plus nothing else —
-    * STREAMED through a fixed 1 MB buffer, never materializing the
-    * range: an unindexed (v1) chunk's whole-region range used to be
-    * allocated as one ByteBuffer with the length cast to Int, so a
-    * >2 GB chunk overflowed/OOM'd (ADVICE r3). */
+    * STREAMED through a buffer of at most 1 MB, never materializing
+    * the range: an unindexed (v1) chunk's whole-region range used to
+    * be allocated as one ByteBuffer with the length cast to Int, so a
+    * >2 GB chunk overflowed/OOM'd (ADVICE r3). The buffer is no larger
+    * than the range, so a packed task reading dozens of small chunks
+    * does not allocate 1 MB for each. */
   def readRawRecordsRange(
       path: String, start: Long, end: Long): RecordRangeIterator = {
     val total = end - start
@@ -212,7 +221,8 @@ object CdcChunkFile {
     val ch = Files.newByteChannel(Paths.get(path))
     ch.position(start)
     val in = new java.io.BufferedInputStream(
-      java.nio.channels.Channels.newInputStream(ch), 1 << 20)
+      java.nio.channels.Channels.newInputStream(ch),
+      math.max(1L, math.min(1L << 20, total)).toInt)
     new RecordRangeIterator {
       private var consumed = 0L
       private var closed = false

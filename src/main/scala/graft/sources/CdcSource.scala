@@ -10,9 +10,13 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util
 
 /** `graft-cdc`: a DataSourceV2 micro-batch + batch source over
@@ -28,6 +32,11 @@ import java.util
   * timestamp" path (ref: fetcher/ClusterSwitchListener.java
   * searchOffsetByTimestamp) is `startingTimestampUs`, which prunes
   * whole chunks via their stats footer before any record is read.
+  *
+  * A scan plans byte ranges (whole small chunks, or the footer-index
+  * splits of big ones) and packs them into input partitions by the
+  * rule Spark's own file sources use ([[ScanPacking]]): a transport of
+  * many small chunks runs a few tasks, not one per chunk.
   *
   * Options:
   *   - `path` (required): chunk directory
@@ -238,7 +247,7 @@ class CdcTable(
 
       override def build(): Scan =
         new CdcScan(path, startTsUs, maxChunksPerTrigger, tableSel,
-          permissive, required, hdr)
+          permissive, required, hdr, ScanPacking.current)
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -317,6 +326,63 @@ object CdcOffset {
   }
 }
 
+/** One byte range [start, end) of one chunk's record region: a whole
+  * small chunk, or one footer-index split of a big one. */
+final case class ChunkRange(chunkPath: String, start: Long, end: Long) {
+  def length: Long = end - start
+}
+
+/** The rule Spark's file sources use to pack files into input
+  * partitions (`FilePartition.maxSplitBytes` and `getFilePartitions`),
+  * applied to chunk ranges: each range costs its length plus
+  * `openCostInBytes`, and a partition closes before the range that
+  * would push it past
+  * {{{
+  *   maxSplitBytes = min(maxPartitionBytes,
+  *                       max(openCostInBytes, Σ(length + openCost) / minPartitionNum))
+  * }}}
+  * (next fit, in the given order). The values are the session's
+  * `spark.sql.files.*` confs, read when the scan is built
+  * ([[ScanPacking.current]]). */
+final case class ScanPacking(
+    maxPartitionBytes: Long, openCostInBytes: Long, minPartitionNum: Int) {
+
+  def maxSplitBytes(ranges: Seq[ChunkRange]): Long = {
+    val total = ranges.map(_.length + openCostInBytes).sum
+    math.min(maxPartitionBytes, math.max(openCostInBytes, total / minPartitionNum))
+  }
+
+  def pack(ranges: Seq[ChunkRange]): Seq[Seq[ChunkRange]] = {
+    val limit = maxSplitBytes(ranges)
+    val parts = Seq.newBuilder[Seq[ChunkRange]]
+    var current = Vector.empty[ChunkRange]
+    var size = 0L
+    ranges.foreach { r =>
+      if (current.nonEmpty && size + r.length > limit) {
+        parts += current; current = Vector.empty; size = 0L
+      }
+      current :+= r
+      size += r.length + openCostInBytes
+    }
+    if (current.nonEmpty) parts += current
+    parts.result()
+  }
+}
+
+object ScanPacking {
+  /** The active session's packing confs; with no session (a scan built
+    * outside Spark's planner), Spark's defaults on one core. */
+  def current: ScanPacking =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(ScanPacking(128L << 20, 4L << 20, 1)) { spark =>
+        val c = spark.sessionState.conf
+        ScanPacking(c.filesMaxPartitionBytes, c.filesOpenCostInBytes,
+          c.filesMinPartitionNum.getOrElse(
+            c.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+              .getOrElse(spark.sparkContext.defaultParallelism)))
+      }
+}
+
 class CdcScan(
     path: String,
     startTsUs: Option[Long],
@@ -324,7 +390,8 @@ class CdcScan(
     tableSel: Option[(String, String)] = None,
     permissive: Boolean = false,
     required: StructType = CdcSource.schema,
-    hdrFilters: HeaderFilters = HeaderFilters())
+    hdrFilters: HeaderFilters = HeaderFilters(),
+    packing: ScanPacking)
   extends Scan with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -353,14 +420,31 @@ class CdcScan(
   private def ordinals: Array[Int] =
     required.fieldNames.map(CdcSource.schema.fieldIndex)
 
-  private def footers(chunks: Seq[String]): Seq[(String, CdcChunkFile.Footer)] =
-    chunks.map(c => (c, CdcChunkFile.readFooter(c)))
+  /** A listed chunk: its file size and mtime, and its footer. */
+  private case class Chunk(
+      path: String, bytes: Long, mtime: FileTime, footer: CdcChunkFile.Footer)
 
-  /** The batch scan's one chunk listing and one footer read per
-    * chunk, shared by [[estimateStatistics]] and the planned
-    * partitions — so the statistics describe exactly the chunks the
-    * scan reads, even if a chunk lands in between. */
-  private lazy val batchChunks = footers(CdcChunkFile.listChunks(path))
+  // a stream's scan lives as long as its query: each trigger's
+  // statistics and planning re-read only the footers of chunks that
+  // landed (or changed size or mtime) since the last one
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, Chunk]()
+
+  private def chunks(paths: Seq[String]): Seq[Chunk] = paths.map { p =>
+    val a = Files.readAttributes(Paths.get(p), classOf[BasicFileAttributes])
+    val hit = footerCache.get(p)
+    if (hit != null && hit.bytes == a.size && hit.mtime == a.lastModifiedTime) hit
+    else {
+      val c = Chunk(p, a.size, a.lastModifiedTime, CdcChunkFile.readFooter(p))
+      footerCache.put(p, c)
+      c
+    }
+  }
+
+  /** The batch scan's one chunk listing, shared by
+    * [[estimateStatistics]] and the planned partitions — so the
+    * statistics describe exactly the chunks the scan reads, even if a
+    * chunk lands in between. */
+  private lazy val batchChunks = chunks(CdcChunkFile.listChunks(path))
 
   // set when a stream is built from this scan: a streaming scan lives
   // as long as its query, so its statistics keep following the
@@ -375,11 +459,11 @@ class CdcScan(
   override def estimateStatistics(): Statistics = {
     var rows = 0L
     var bytes = 0L
-    val chunks = if (streaming) footers(CdcChunkFile.listChunks(path)) else batchChunks
-    chunks.foreach { case (c, f) =>
-      if (!startTsUs.exists(ts => f.maxTsUs < ts)) {
-        rows += f.nRecords
-        bytes += java.nio.file.Files.size(java.nio.file.Paths.get(c))
+    val listed = if (streaming) chunks(CdcChunkFile.listChunks(path)) else batchChunks
+    listed.foreach { c =>
+      if (!startTsUs.exists(ts => c.footer.maxTsUs < ts)) {
+        rows += c.footer.nRecords
+        bytes += c.bytes
       }
     }
     val r = rows; val b = bytes
@@ -403,15 +487,18 @@ class CdcScan(
   }
 
   /** One footer read per chunk buys timestamp pruning, TABLE pruning
-    * AND sub-chunk splitting: indexed chunks yield one input partition
-    * per ~SplitStride records, so a single huge segment parallelizes
-    * across the cluster instead of serializing onto one core; a chunk
-    * whose v3 table directory never mentions the selected/pushed table
-    * is skipped whole — a single-table subscription over a many-table
-    * transport reads only the chunks that carry its table. */
-  private def planSplits(
-      chunks: Seq[(String, CdcChunkFile.Footer)]): Array[InputPartition] =
-    chunks.flatMap { case (c, f) =>
+    * AND sub-chunk splitting. A chunk whose v3 table directory never
+    * mentions the selected/pushed table is skipped whole — a
+    * single-table subscription over a many-table transport reads only
+    * the chunks that carry its table. Every other chunk plans its
+    * footer-index ranges (one per ~SplitStride records), and
+    * [[ScanPacking]] packs the ranges, in chunk-name order, into input
+    * partitions: many small chunks share a task, and a huge segment's
+    * ranges still spread over several instead of serializing onto one
+    * core. Shared by the batch scan and every micro-batch. */
+  private def planSplits(listed: Seq[Chunk]): Array[InputPartition] = {
+    val ranges = listed.flatMap { c =>
+      val f = c.footer
       // any (db,tbl) in the chunk compatible with selector + pushdown?
       def tableMiss = f.tables.exists(!_.exists { case (d, t) =>
         tableSel.forall(_ == ((d, t))) &&
@@ -424,11 +511,12 @@ class CdcScan(
         ((tableSel.isDefined || hdrFilters.db.isDefined ||
           hdrFilters.tbl.isDefined) && tableMiss)
       if (pruned) { chunksPruned.incrementAndGet(); Nil }
-      else f.splits.map { case (s0, e0) =>
-        CdcInputPartition(c, s0, e0, startTsUs, tableSel, permissive,
-          hdrFilters): InputPartition
-      }
+      else f.splits.map { case (s0, e0) => ChunkRange(c.path, s0, e0) }
+    }
+    packing.pack(ranges).map { rs =>
+      CdcInputPartition(rs, startTsUs, tableSel, permissive, hdrFilters): InputPartition
     }.toArray
+  }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     streaming = true
@@ -460,7 +548,7 @@ class CdcScan(
       override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
         val s = start.asInstanceOf[CdcOffset].chunksConsumed
         val e = end.asInstanceOf[CdcOffset].chunksConsumed
-        planSplits(footers(CdcChunkFile.listChunks(path).slice(s, e)))
+        planSplits(chunks(CdcChunkFile.listChunks(path).slice(s, e)))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         new CdcReaderFactory(ordinals)
@@ -470,10 +558,9 @@ class CdcScan(
   }
 }
 
+/** One task's ranges, read in order. */
 case class CdcInputPartition(
-    chunkPath: String,
-    startOff: Long,
-    endOff: Long,
+    ranges: Seq[ChunkRange],
     startTsUs: Option[Long],
     tableSel: Option[(String, String)],
     permissive: Boolean = false,
@@ -483,12 +570,13 @@ case class CdcInputPartition(
 class CdcReaderFactory(ordinals: Array[Int]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcInputPartition]
-    new CdcPartitionReader(p.chunkPath, p.startOff, p.endOff, p.startTsUs,
-      p.tableSel, p.permissive, ordinals, p.hdrFilters)
+    new CdcPartitionReader(p.ranges, p.startTsUs, p.tableSel, p.permissive,
+      ordinals, p.hdrFilters)
   }
 }
 
-/** Decodes one chunk. Records older than the reposition timestamp or
+/** Decodes a partition's chunk ranges in order, one open range at a
+  * time. Records older than the reposition timestamp or
   * outside the selected table are dropped on LAZY prefix reads — the
   * record tail (pkNames/before/after) is never parsed for skipped
   * records. Kept records decode DIRECTLY to InternalRow
@@ -497,9 +585,7 @@ class CdcReaderFactory(ordinals: Array[Int]) extends PartitionReaderFactory {
   * sections skipped) — the reference's direct-from-bytes fast path
   * combined with Catalyst column pruning. */
 class CdcPartitionReader(
-    chunkPath: String,
-    startOff: Long,
-    endOff: Long,
+    ranges: Seq[ChunkRange],
     startTsUs: Option[Long],
     tableSel: Option[(String, String)] = None,
     permissive: Boolean = false,
@@ -516,16 +602,43 @@ class CdcPartitionReader(
   }
 
   private val projection = new RecordCodec.RowProjection(ordinals)
-  private val raw =
-    CdcChunkFile.readRawRecordsRange(chunkPath, startOff, endOff)
+  private val todo = ranges.iterator
+  private var raw: CdcChunkFile.RecordRangeIterator = _ // open range, or null
   private var current: InternalRow = _
   private var nSkipped = 0L
   private var nDecoded = 0L
   private var nCorrupt = 0L
 
+  private def countCorrupt(): Unit = {
+    nCorrupt += 1
+    CdcSource.corruptSkipped.incrementAndGet()
+  }
+
+  /** The next record payload, opening the ranges in order; null after
+    * the last range. A torn frame (a length prefix that runs past its
+    * range, or a truncated file) loses the framing of the rest of its
+    * range: permissive mode counts it once and goes on with the next
+    * range, which starts on its own boundary; failfast throws. */
+  private def nextPayload(): Array[Byte] = {
+    while (raw != null || todo.hasNext) {
+      if (raw == null) {
+        val r = todo.next()
+        raw = CdcChunkFile.readRawRecordsRange(r.chunkPath, r.start, r.end)
+      }
+      if (!raw.hasNext) raw = null // a drained range closed itself
+      else
+        try return raw.next()
+        catch {
+          case _: java.io.IOException if permissive =>
+            countCorrupt(); raw.close(); raw = null
+        }
+    }
+    null
+  }
+
   override def next(): Boolean = {
-    while (raw.hasNext) {
-      val bytes = raw.next()
+    var bytes = nextPayload()
+    while (bytes != null) {
       try {
         val keep = headerKeep(bytes) &&
           tableSel.forall(RecordCodec.headerTable(bytes) == _) &&
@@ -538,18 +651,18 @@ class CdcPartitionReader(
       } catch {
         // framing is intact (length prefixes), only this payload is
         // bad — skip and count rather than kill the subscription
-        case e: Exception if permissive =>
-          nCorrupt += 1
-          CdcSource.corruptSkipped.incrementAndGet()
+        case _: Exception if permissive => countCorrupt()
       }
+      bytes = nextPayload()
     }
     false
   }
 
   override def get(): InternalRow = current
-  // the range iterator owns a file handle; Spark may stop consuming
+  // the open range owns a file handle; Spark may stop consuming
   // early (limit pushdown), so release it here rather than at GC
-  override def close(): Unit = raw.close()
+  override def close(): Unit =
+    if (raw != null) { raw.close(); raw = null }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
     CdcMetrics.Value("recordsSkippedHeader", nSkipped),

@@ -1,8 +1,9 @@
 package graft
 
 import graft.cdc._
-import graft.sources.{CdcChunkFile, CdcInputPartition, CdcScan, CdcTable}
+import graft.sources.{CdcChunkFile, CdcInputPartition, CdcOffset, CdcScan, CdcTable}
 import graft.streaming.CdcStreaming
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
@@ -857,7 +858,7 @@ class CdcSourceSpec extends AnyFunSuite {
     CdcChunkFile.write(s"$dir/chunk-00003${CdcChunkFile.Extension}",
       Seq(CdcFixtures.rec(30L, 31000000L, Op.Insert, "k9", "v30")))
     val planned = scan.toBatch.planInputPartitions()
-      .map(_.asInstanceOf[CdcInputPartition].chunkPath).distinct
+      .flatMap(_.asInstanceOf[CdcInputPartition].ranges.map(_.chunkPath)).distinct
     assert(statRows ==
       planned.map(c => CdcChunkFile.readFooter(c).nRecords.toLong).sum)
     // a streaming scan lives as long as its query: its statistics keep
@@ -893,6 +894,115 @@ class CdcSourceSpec extends AnyFunSuite {
     assert(df.count() == n)
     assert(df.select(sum(col("id"))).head().getLong(0) ==
       n.toLong * (n - 1) / 2)
+  }
+
+  test("small chunks pack into fewer input partitions than chunks, " +
+      "batch and micro-batch, with the same rows") {
+    val dir = TestDirs.tmp("gcl")
+    val n = 12
+    val recs = (0 until n * 5).map(i =>
+      CdcFixtures.rec(i.toLong, 1000000L * (i + 1), Op.Update, s"k${i % 4}", s"v$i"))
+    recs.grouped(5).zipWithIndex.foreach { case (g, i) =>
+      CdcChunkFile.write(f"$dir/chunk-$i%05d${CdcChunkFile.Extension}", g)
+    }
+    def byId(rows: Array[Row]) = rows.sortBy(_.getAs[Long]("id")).toSeq
+    val batch = CdcStreaming.readBatch(spark, dir)
+    val batchParts = batch.rdd.getNumPartitions
+    assert(batchParts < n && batchParts > 1, s"$batchParts partitions")
+    val batchRows = byId(batch.collect())
+    assert(batchRows.map(_.getAs[Long]("id")) == recs.map(_.id))
+    // one trigger over every chunk: the micro-batch plans the same way
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Array[Row])]()
+    val q = CdcStreaming.readStream(spark, dir).writeStream
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        if (!df.isEmpty) seen.add((df.rdd.getNumPartitions, df.collect()))
+        ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val triggers = seen.asScala.toSeq
+    assert(triggers.length == 1)
+    assert(triggers.head._1 == batchParts)
+    assert(byId(triggers.head._2) == batchRows)
+  }
+
+  test("permissive: a torn frame in a packed partition's first range " +
+      "does not drop the next range's records") {
+    val dir = TestDirs.tmp("gcl")
+    // chunk 0: two good frames, then a length prefix that runs past
+    // the record region (a torn write), then a v1 footer
+    val good = (0 until 2).map(i =>
+      CdcFixtures.rec(i.toLong, 1000000L * (i + 1), Op.Insert, s"k$i", s"v$i"))
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(s"$dir/chunk-00000${CdcChunkFile.Extension}")))
+    def frame(len: Int, b: Array[Byte]): Unit = {
+      out.write(len & 0xff); out.write((len >> 8) & 0xff)
+      out.write((len >> 16) & 0xff); out.write((len >> 24) & 0xff)
+      out.write(b)
+    }
+    good.map(RecordCodec.encode).foreach(b => frame(b.length, b))
+    frame(1000, Array.fill[Byte](12)(0x5a))
+    val foot = java.nio.ByteBuffer.allocate(CdcChunkFile.FooterLen)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    foot.putLong(1000000L).putLong(2000000L).putInt(3).putInt(CdcChunkFile.FooterMagic)
+    out.write(foot.array()); out.close()
+    // chunks 1..7: three good records each
+    val rest = (1 until 8).flatMap { c =>
+      val g = (0 until 3).map { j =>
+        val id = 10L * c + j
+        CdcFixtures.rec(id, 1000000L * (id + 1), Op.Insert, s"k$id", s"v$id")
+      }
+      CdcChunkFile.write(f"$dir/chunk-$c%05d${CdcChunkFile.Extension}", g)
+      g
+    }
+    // the torn chunk shares its partition with the next chunk
+    val parts = new CdcTable(dir, None, None, permissive = true)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toBatch.planInputPartitions().map(_.asInstanceOf[CdcInputPartition])
+    assert(parts.head.ranges.map(_.chunkPath).map(
+      java.nio.file.Paths.get(_).getFileName.toString) ==
+      Seq(0, 1).map(c => f"chunk-$c%05d${CdcChunkFile.Extension}"))
+    // failfast: the torn frame aborts the scan
+    intercept[org.apache.spark.SparkException] {
+      CdcStreaming.readBatch(spark, dir).collect()
+    }
+    // permissive: the frames before the tear and every later range
+    // survive; the tear counts once
+    val before = graft.sources.CdcSource.corruptSkipped.get()
+    val rows = spark.read.format("graft-cdc").option("path", dir)
+      .option("mode", "permissive").load().collect()
+    assert(rows.map(_.getAs[Long]("id")).sorted.toSeq ==
+      (good ++ rest).map(_.id).sorted)
+    assert(graft.sources.CdcSource.corruptSkipped.get() - before == 1L)
+  }
+
+  test("a stream reads each chunk footer once across triggers") {
+    val dir = TestDirs.tmp("gcl")
+    def land(c: Int): Unit =
+      CdcChunkFile.write(f"$dir/chunk-$c%05d${CdcChunkFile.Extension}",
+        Seq(CdcFixtures.rec(c.toLong, 1000000L * (c + 1), Op.Insert, s"k$c", s"v$c")))
+    (0 until 3).foreach(land)
+    val scan = new CdcTable(dir, None, None)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .asInstanceOf[CdcScan]
+    val stream = scan.toMicroBatchStream(dir)
+    // one trigger as the micro-batch engine runs it: the end offset,
+    // the plan's statistics, then the partitions
+    def trigger(start: CdcOffset): CdcOffset = {
+      val end = stream.latestOffset().asInstanceOf[CdcOffset]
+      scan.estimateStatistics()
+      stream.planInputPartitions(start, end)
+      end
+    }
+    val reads0 = CdcChunkFile.footerReads.get()
+    val end1 = trigger(CdcOffset(0))
+    assert(CdcChunkFile.footerReads.get() - reads0 == 3L)
+    (3 until 5).foreach(land)
+    val reads1 = CdcChunkFile.footerReads.get()
+    val end2 = trigger(end1)
+    assert(end2.chunksConsumed == 5)
+    assert(CdcChunkFile.footerReads.get() - reads1 == 2L)
+    assert(scan.estimateStatistics().numRows().getAsLong == 5L)
   }
 
   test("permissive mode skips corrupt records; failfast aborts") {

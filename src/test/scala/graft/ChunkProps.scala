@@ -80,6 +80,48 @@ object ChunkProps extends Properties("CdcChunkFile") {
       f.nRecords == n && f.tables.contains(Set(("db", "t0"), ("db", "t1"), ("db", "t2")))
   }
 
+  // ---- scan packing (Spark's file-packing rule over chunk ranges) ----
+
+  /** Ranges as the scan plans them: chunks in name order, each cut
+    * into 1..4 contiguous splits of random byte lengths (up to ~6 MB,
+    * so both sides of the 4 MB default open cost occur). */
+  private val genRanges: Gen[Seq[graft.sources.ChunkRange]] =
+    Gen.choose(0, 40).flatMap(n => Gen.listOfN(n,
+      Gen.choose(1, 4).flatMap(k => Gen.listOfN(k,
+        Gen.frequency(3 -> Gen.choose(0L, 64L << 10), 1 -> Gen.choose(0L, 6L << 20))))))
+      .map(_.zipWithIndex.flatMap { case (lens, c) =>
+        val ends = lens.scanLeft(0L)(_ + _)
+        ends.zip(ends.tail).map { case (s, e) =>
+          graft.sources.ChunkRange(f"chunk-$c%05d", s, e)
+        }
+      })
+
+  private val genPacking: Gen[graft.sources.ScanPacking] = for {
+    maxBytes <- Gen.oneOf(128L << 20, 8L << 20, 1L << 20, 1L)
+    open <- Gen.oneOf(4L << 20, 64L << 10, 0L)
+    minParts <- Gen.choose(1, 8)
+  } yield graft.sources.ScanPacking(maxBytes, open, minParts)
+
+  property("packed partitions cover every range once, in order, " +
+      "and stay within maxSplitBytes unless they hold one range") =
+    forAll(genRanges, genPacking) { (ranges, packing) =>
+      val parts = packing.pack(ranges)
+      val limit = packing.maxSplitBytes(ranges)
+      // Spark's size of a partition: its lengths plus an open cost for
+      // every range but the last
+      def size(p: Seq[graft.sources.ChunkRange]) =
+        p.map(_.length).sum + packing.openCostInBytes * (p.length - 1)
+      Prop.all(
+        Prop(parts.flatten == ranges) :| "cover, in order",
+        Prop(parts.forall(_.nonEmpty)) :| "no empty partition",
+        Prop(parts.forall(p => p.length == 1 || size(p) <= limit)) :| "within limit",
+        // next fit: a partition closed only because the next range
+        // would not fit
+        Prop(parts.zip(parts.drop(1)).forall { case (a, b) =>
+          size(a) + packing.openCostInBytes + b.head.length > limit
+        }) :| "next fit")
+    }
+
   // ---- multi-part object names (ref ObjectNameUtils contract) ----
 
   /** Segments that stress the escape: dots anywhere (leading,

@@ -21,8 +21,8 @@ import java.util
   *   SET spark.sql.catalog.cdc.path = /data/cdc/orders-topic
   *   SHOW NAMESPACES IN cdc;              -- dbs on the wire
   *   SHOW TABLES IN cdc.appdb;            -- tables of one db
-  *   SELECT * FROM cdc.appdb.users;       -- per-table scan with the
-  *                                        -- `table` pushdown applied
+  *   SELECT * FROM cdc.appdb.users;       -- per-table scan: the
+  *                                        -- `table` header predicate
   * }}}
   *
   * Discovery is O(chunks): v3 footers carry each chunk's distinct
@@ -31,9 +31,12 @@ import java.util
   * per-record (db, tbl) PREFIX read (the lazy header play; tails are
   * never parsed). Results cache per chunk-listing state, so repeated
   * catalog calls cost one directory listing. Each loaded table is an
-  * ordinary [[CdcTable]] with the per-table selector pushed into the
-  * reader: v3 chunks that never mention the table are pruned WHOLE,
-  * and surviving chunks drop non-matching records on the prefix read.
+  * ordinary [[CdcTable]] whose [[HeaderFilters]] hold `db = ns AND
+  * tbl = name` (and the catalog's `startingTimestampUs`, if set), the
+  * same header predicates the `table` option gives, intersected with
+  * whatever a query pushes: v3 chunks that never mention the table are
+  * pruned WHOLE (and left out of the planner statistics), and
+  * surviving chunks drop non-matching records on the prefix read.
   * The catalog is read-only: the write path goes through the
   * `graft-cdc` sink, mirroring the reference (a subscription is not a
   * place you CREATE tables).
@@ -42,7 +45,7 @@ class CdcCatalog extends TableCatalog with SupportsNamespaces {
 
   private var catalogName: String = _
   private var path: String = _
-  private var startTsUs: Option[Long] = None
+  private var from: HeaderFilters = _
   private var permissive: Boolean = false
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
@@ -50,7 +53,7 @@ class CdcCatalog extends TableCatalog with SupportsNamespaces {
     path = CdcSource.normalizePath(options.get("path"))
     require(path != null,
       s"catalog '$name' requires spark.sql.catalog.$name.path")
-    startTsUs = Option(options.get("startingTimestampUs")).map(_.toLong)
+    from = HeaderFilters.startingAt(options.get("startingTimestampUs"))
     permissive = CdcSource.parseMode(options.get("mode"))
   }
 
@@ -120,8 +123,8 @@ class CdcCatalog extends TableCatalog with SupportsNamespaces {
 
   override def loadTable(ident: Identifier): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new CdcTable(path, startTsUs, None,
-      Some((ident.namespace()(0), ident.name())), permissive)
+    new CdcTable(path, None,
+      from.copy(db = Some(ident.namespace()(0)), tbl = Some(ident.name())), permissive)
   }
 
   override def createTable(

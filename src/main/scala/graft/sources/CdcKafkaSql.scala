@@ -227,18 +227,6 @@ case class CdcKafkaSqlPartition(
 
 class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
 
-  private def wireCodec(wire: String)
-      : (Array[Byte] => (String, String),
-        Array[Byte] => graft.cdc.ChangeRecord) =
-    wire match {
-      case "dts-avro" =>
-        ((b: Array[Byte]) => graft.cdc.AvroWire.headerTable(b),
-          (b: Array[Byte]) => graft.cdc.AvroWire.decode(b))
-      case _ =>
-        ((b: Array[Byte]) => graft.cdc.RecordCodec.headerTable(b),
-          (b: Array[Byte]) => graft.cdc.RecordCodec.decode(b))
-    }
-
   /** Metadata cell values shared by both modes (indexes 0-5 = the
     * six ReadableMetadata entries, 6 = row_kind in typed mode). */
   private def metaValue(
@@ -274,7 +262,7 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
   private def createRawReader(
       kp: CdcKafkaSqlPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val (headerTableOf, decodeOf) = wireCodec(kp.wire)
+      private val (headerTableOf, decodeOf) = graft.streaming.CdcStreaming.wireCodec(kp.wire)
       private val enc = ExpressionEncoder[graft.cdc.ChangeRecord]()
       private val ser = enc.createSerializer()
       // one slot per output column: Left(physical ordinal in the
@@ -334,7 +322,7 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
       kp: CdcKafkaSqlPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
-      private val (headerTableOf, decodeOf) = wireCodec(kp.wire)
+      private val (headerTableOf, decodeOf) = graft.streaming.CdcStreaming.wireCodec(kp.wire)
       private val metaIdx = (CdcKafkaSqlTable.metadataCols :+
         CdcKafkaSqlTable.rowKindCol).map(_.name).zipWithIndex.toMap
       // per-slot: Left(declared field name + TRY-cast from the image's

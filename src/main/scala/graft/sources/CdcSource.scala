@@ -51,6 +51,12 @@ import java.util
   *     `permissive` skips it and counts it (ref: the reference wraps
   *     per-record handling in SwallowException.java) — a torn byte
   *     must not take down a long-running subscription
+  *
+  * `startingTimestampUs` and `table` are header predicates (`tsUs >=
+  * v`; `db = d AND tbl = t`): the table holds them as its
+  * [[HeaderFilters]] and pushed filters intersect with them, so chunk
+  * pruning, the planner statistics and the reader all apply one
+  * predicate.
   */
 class CdcSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cdc"
@@ -70,18 +76,24 @@ class CdcSourceProvider extends TableProvider with DataSourceRegister {
     if (properties.containsKey("versionAsOf"))
       new CdcSnapshotTable(CdcSource.normalizePath(properties.get("path")),
         properties.get("versionAsOf").toLong)
-    else
+    else {
+      val from = HeaderFilters.startingAt(properties.get("startingTimestampUs"))
       new CdcTable(CdcSource.normalizePath(properties.get("path")),
-        Option(properties.get("startingTimestampUs")).map(_.toLong),
         Option(properties.get("maxChunksPerTrigger")).map(_.toInt),
-        Option(properties.get("table")).map(CdcSource.parseTableSelector),
+        Option(properties.get("table")).map(CdcSource.parseTableSelector)
+          .fold(from) { case (d, t) => from.copy(db = Some(d), tbl = Some(t)) },
         CdcSource.parseMode(properties.get("mode")))
+    }
 }
 
-/** Pushed-down header predicates (conjunctive): exact op/db/tbl
-  * equality + a tsUs interval. Evaluated on the record header/prefix
-  * before any tail parse; the tsUs interval additionally prunes whole
-  * chunks by footer stats. */
+/** The header predicates of one scan (conjunctive): exact op/db/tbl
+  * equality and a tsUs interval. A table starts from its options
+  * (`startingTimestampUs` is `tsUs >= v`, `table` is `db` + `tbl`) and
+  * its scan builder intersects the pushed filters into them. Two tests
+  * decide everything: [[keepsChunk]] on a chunk's footer (whole-chunk
+  * pruning and the planner statistics alike) and [[keeps]] on a
+  * record's fixed header and (db, tbl) prefix (the reader), before any
+  * tail parse. */
 case class HeaderFilters(
     op: Option[String] = None,
     db: Option[String] = None,
@@ -92,9 +104,60 @@ case class HeaderFilters(
     copy(tsMinUs = Some(tsMinUs.fold(v)(math.max(_, v))))
   def withTsMax(v: Long): HeaderFilters =
     copy(tsMaxUs = Some(tsMaxUs.fold(v)(math.min(_, v))))
-  def isEmpty: Boolean =
-    op.isEmpty && db.isEmpty && tbl.isEmpty &&
-      tsMinUs.isEmpty && tsMaxUs.isEmpty
+
+  /** These predicates AND `f`, if `f` is a header predicate they can
+    * hold exactly; None for any other filter and for an equality that
+    * conflicts with one already held (`tbl = 'orders'` on a scan of
+    * `users`), which Spark then evaluates itself. */
+  def and(f: Filter): Option[HeaderFilters] = f match {
+    case EqualTo("op", v: String) if op.forall(_ == v)   => Some(copy(op = Some(v)))
+    case EqualTo("db", v: String) if db.forall(_ == v)   => Some(copy(db = Some(v)))
+    case EqualTo("tbl", v: String) if tbl.forall(_ == v) => Some(copy(tbl = Some(v)))
+    case GreaterThanOrEqual("tsUs", v: java.lang.Long)   => Some(withTsMin(v))
+    case GreaterThan("tsUs", v: java.lang.Long) if v < Long.MaxValue =>
+      Some(withTsMin(v + 1L))
+    case LessThanOrEqual("tsUs", v: java.lang.Long)      => Some(withTsMax(v))
+    case LessThan("tsUs", v: java.lang.Long) if v > Long.MinValue =>
+      Some(withTsMax(v - 1L))
+    case _ => None
+  }
+
+  /** False when the footer proves no record of the chunk can match:
+    * its ts range misses the interval, or its v3 table directory
+    * holds no (db, tbl) compatible with the equalities. */
+  def keepsChunk(f: CdcChunkFile.Footer): Boolean =
+    tsMinUs.forall(f.maxTsUs >= _) && tsMaxUs.forall(f.minTsUs <= _) &&
+      ((db.isEmpty && tbl.isEmpty) || f.tables.forall(_.exists { case (d, t) =>
+        db.forall(_ == d) && tbl.forall(_ == t)
+      }))
+
+  // -1 = no op filter; -2 = an op outside the vocabulary, which can
+  // never match a decoded record (decode maps junk to UNKNOWN)
+  private val opCode: Int = op match {
+    case None => -1
+    case Some(o) if graft.cdc.Op.all.contains(o) => graft.cdc.Op.code(o).toInt
+    case Some(_) => -2
+  }
+
+  /** Whether a record payload matches: the ts long and op byte of the
+    * fixed header, then the (db, tbl) prefix only if an equality needs
+    * it — the tail is never parsed. */
+  def keeps(record: Array[Byte]): Boolean = {
+    val ts = RecordCodec.headerTsUs(record)
+    tsMinUs.forall(ts >= _) && tsMaxUs.forall(ts <= _) &&
+      (opCode == -1 || RecordCodec.headerOpCode(record) == opCode) &&
+      ((db.isEmpty && tbl.isEmpty) || {
+        val (d, t) = RecordCodec.headerTable(record)
+        db.forall(_ == d) && tbl.forall(_ == t)
+      })
+  }
+}
+
+object HeaderFilters {
+  /** The `startingTimestampUs` option (null = absent) as a predicate. */
+  def startingAt(startingTimestampUs: String): HeaderFilters =
+    Option(startingTimestampUs)
+      .fold(HeaderFilters())(ts => HeaderFilters().withTsMin(ts.toLong))
 }
 
 object CdcSource {
@@ -132,10 +195,6 @@ object CdcSource {
       s"graft-cdc 'mode' must be failfast|permissive, got '$other'")
   }
 
-  /** Count of corrupt records skipped by permissive readers in this
-    * JVM (observable in specs and ops dashboards; monotone). */
-  val corruptSkipped = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** One FK constraint as SQL: parent coordinates + aligned
     * parent/child column lists (ref ForeignKeyIndexInfo.java). */
   val fkParentType: StructType = StructType(Seq(
@@ -171,12 +230,13 @@ object CdcSource {
   val writableArities: Set[Int] = Set(schema.length, 14)
 }
 
+/** A chunk directory as a table; `filters` are its options' header
+  * predicates (`startingTimestampUs`, `table`), see [[HeaderFilters]]. */
 class CdcTable(
     path: String,
-    startTsUs: Option[Long],
     maxChunksPerTrigger: Option[Int],
-    tableSel: Option[(String, String)] = None,
-    permissive: Boolean = false)
+    filters: HeaderFilters,
+    permissive: Boolean)
   extends Table with SupportsRead with SupportsWrite {
 
   require(path != null, "graft-cdc requires a 'path' option")
@@ -199,7 +259,7 @@ class CdcTable(
       // the binary decoder, which then skips unneeded tail sections
       private var required: StructType = CdcSource.schema
       private var pushed: Array[Filter] = Array.empty
-      private var hdr: HeaderFilters = HeaderFilters()
+      private var hdr: HeaderFilters = filters
 
       override def pruneColumns(requiredSchema: StructType): Unit =
         // top-level pruning only: Catalyst may also prune NESTED
@@ -215,30 +275,11 @@ class CdcTable(
       // prefix (op: one byte; db/tbl: prefix read; tsUs: header long +
       // whole-chunk footer pruning) — accepted filters are fully
       // handled, everything else stays with Spark
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        val (accept, reject) = filters.partition {
-          case EqualTo("op", _: String)  => true
-          case EqualTo("db", _: String)  => true
-          case EqualTo("tbl", _: String) => true
-          case GreaterThanOrEqual("tsUs", _: java.lang.Long) => true
-          case GreaterThan("tsUs", _: java.lang.Long)        => true
-          case LessThanOrEqual("tsUs", _: java.lang.Long)    => true
-          case LessThan("tsUs", _: java.lang.Long)           => true
-          case _ => false
-        }
-        accept.foreach {
-          case EqualTo("op", v: String)  => hdr = hdr.copy(op = Some(v))
-          case EqualTo("db", v: String)  => hdr = hdr.copy(db = Some(v))
-          case EqualTo("tbl", v: String) => hdr = hdr.copy(tbl = Some(v))
-          case GreaterThanOrEqual("tsUs", v: java.lang.Long) =>
-            hdr = hdr.withTsMin(v)
-          case GreaterThan("tsUs", v: java.lang.Long) =>
-            hdr = hdr.withTsMin(v + 1L)
-          case LessThanOrEqual("tsUs", v: java.lang.Long) =>
-            hdr = hdr.withTsMax(v)
-          case LessThan("tsUs", v: java.lang.Long) =>
-            hdr = hdr.withTsMax(v - 1L)
-          case _ => ()
+      override def pushFilters(fs: Array[Filter]): Array[Filter] = {
+        val (accept, reject) = fs.partition { f =>
+          val narrowed = hdr.and(f)
+          narrowed.foreach(hdr = _)
+          narrowed.isDefined
         }
         pushed = accept
         reject
@@ -246,8 +287,8 @@ class CdcTable(
       override def pushedFilters(): Array[Filter] = pushed
 
       override def build(): Scan =
-        new CdcScan(path, startTsUs, maxChunksPerTrigger, tableSel,
-          permissive, required, hdr, ScanPacking.current)
+        new CdcScan(path, maxChunksPerTrigger, permissive, required, hdr,
+          ScanPacking.current)
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -385,12 +426,10 @@ object ScanPacking {
 
 class CdcScan(
     path: String,
-    startTsUs: Option[Long],
     maxChunksPerTrigger: Option[Int],
-    tableSel: Option[(String, String)] = None,
-    permissive: Boolean = false,
-    required: StructType = CdcSource.schema,
-    hdrFilters: HeaderFilters = HeaderFilters(),
+    permissive: Boolean,
+    required: StructType,
+    hdrFilters: HeaderFilters,
     packing: ScanPacking)
   extends Scan with SupportsReportStatistics {
 
@@ -412,8 +451,11 @@ class CdcScan(
       hdrFilters.tbl.map(t => s"tbl=$t"),
       hdrFilters.tsMinUs.map(v => s"tsUs>=$v"),
       hdrFilters.tsMaxUs.map(v => s"tsUs<=$v")).flatten
-    s"graft-cdc PushedFilters: [${fs.mkString(", ")}], " +
-      s"table=${tableSel.fold("*") { case (d, t) => s"$d.$t" }}"
+    val table = (hdrFilters.db, hdrFilters.tbl) match {
+      case (Some(d), Some(t)) => s"$d.$t"
+      case _                  => "*"
+    }
+    s"graft-cdc PushedFilters: [${fs.mkString(", ")}], table=$table"
   }
 
   /** Source-schema ordinal of each required column. */
@@ -451,22 +493,17 @@ class CdcScan(
   // growing directory instead of one listing
   @volatile private var streaming = false
 
-  /** Footer-exact statistics (row count) + file-size bytes, so
-    * Catalyst can pick a broadcast join when the subscription is the
-    * small side of a dim-lookup (the reference's join test shape) —
-    * without stats a DSv2 source defaults to "huge" and the planner
-    * shuffles both sides. */
+  /** Footer-exact statistics (row count) + file-size bytes of the
+    * chunks that pass [[HeaderFilters.keepsChunk]], the test planning
+    * prunes by, so Catalyst can pick a broadcast join when the
+    * subscription is the small side of a dim-lookup (the reference's
+    * join test shape) — without stats a DSv2 source defaults to "huge"
+    * and the planner shuffles both sides. */
   override def estimateStatistics(): Statistics = {
-    var rows = 0L
-    var bytes = 0L
     val listed = if (streaming) chunks(CdcChunkFile.listChunks(path)) else batchChunks
-    listed.foreach { c =>
-      if (!startTsUs.exists(ts => c.footer.maxTsUs < ts)) {
-        rows += c.footer.nRecords
-        bytes += c.bytes
-      }
-    }
-    val r = rows; val b = bytes
+    val kept = listed.filter(c => hdrFilters.keepsChunk(c.footer))
+    val r = kept.map(_.footer.nRecords.toLong).sum
+    val b = kept.map(_.bytes).sum
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(b)
@@ -487,10 +524,10 @@ class CdcScan(
   }
 
   /** One footer read per chunk buys timestamp pruning, TABLE pruning
-    * AND sub-chunk splitting. A chunk whose v3 table directory never
-    * mentions the selected/pushed table is skipped whole — a
-    * single-table subscription over a many-table transport reads only
-    * the chunks that carry its table. Every other chunk plans its
+    * ([[HeaderFilters.keepsChunk]]) AND sub-chunk splitting. A chunk
+    * whose v3 table directory never mentions the table is skipped
+    * whole — a single-table subscription over a many-table transport
+    * reads only the chunks that carry its table. Every other chunk plans its
     * footer-index ranges (one per ~SplitStride records), and
     * [[ScanPacking]] packs the ranges, in chunk-name order, into input
     * partitions: many small chunks share a task, and a huge segment's
@@ -498,23 +535,11 @@ class CdcScan(
     * core. Shared by the batch scan and every micro-batch. */
   private def planSplits(listed: Seq[Chunk]): Array[InputPartition] = {
     val ranges = listed.flatMap { c =>
-      val f = c.footer
-      // any (db,tbl) in the chunk compatible with selector + pushdown?
-      def tableMiss = f.tables.exists(!_.exists { case (d, t) =>
-        tableSel.forall(_ == ((d, t))) &&
-          hdrFilters.db.forall(_ == d) && hdrFilters.tbl.forall(_ == t)
-      })
-      val pruned =
-        startTsUs.exists(ts => f.maxTsUs < ts) ||
-        hdrFilters.tsMinUs.exists(f.maxTsUs < _) ||
-        hdrFilters.tsMaxUs.exists(f.minTsUs > _) ||
-        ((tableSel.isDefined || hdrFilters.db.isDefined ||
-          hdrFilters.tbl.isDefined) && tableMiss)
-      if (pruned) { chunksPruned.incrementAndGet(); Nil }
-      else f.splits.map { case (s0, e0) => ChunkRange(c.path, s0, e0) }
+      if (!hdrFilters.keepsChunk(c.footer)) { chunksPruned.incrementAndGet(); Nil }
+      else c.footer.splits.map { case (s0, e0) => ChunkRange(c.path, s0, e0) }
     }
     packing.pack(ranges).map { rs =>
-      CdcInputPartition(rs, startTsUs, tableSel, permissive, hdrFilters): InputPartition
+      CdcInputPartition(rs, permissive, hdrFilters): InputPartition
     }.toArray
   }
 
@@ -560,46 +585,30 @@ class CdcScan(
 
 /** One task's ranges, read in order. */
 case class CdcInputPartition(
-    ranges: Seq[ChunkRange],
-    startTsUs: Option[Long],
-    tableSel: Option[(String, String)],
-    permissive: Boolean = false,
-    hdrFilters: HeaderFilters = HeaderFilters())
+    ranges: Seq[ChunkRange], permissive: Boolean, hdrFilters: HeaderFilters)
   extends InputPartition
 
 class CdcReaderFactory(ordinals: Array[Int]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcInputPartition]
-    new CdcPartitionReader(p.ranges, p.startTsUs, p.tableSel, p.permissive,
-      ordinals, p.hdrFilters)
+    new CdcPartitionReader(p.ranges, p.permissive, ordinals, p.hdrFilters)
   }
 }
 
 /** Decodes a partition's chunk ranges in order, one open range at a
-  * time. Records older than the reposition timestamp or
-  * outside the selected table are dropped on LAZY prefix reads — the
-  * record tail (pkNames/before/after) is never parsed for skipped
-  * records. Kept records decode DIRECTLY to InternalRow
+  * time. Records that fail [[HeaderFilters.keeps]] are dropped on LAZY
+  * header/prefix reads — the record tail (pkNames/before/after) is
+  * never parsed for skipped records. Kept records decode DIRECTLY to InternalRow
   * ([[RecordCodec.decodeProjected]]: UTF8String slices over the
   * record bytes, no String materialization, no map re-sort, unneeded
   * sections skipped) — the reference's direct-from-bytes fast path
   * combined with Catalyst column pruning. */
 class CdcPartitionReader(
     ranges: Seq[ChunkRange],
-    startTsUs: Option[Long],
-    tableSel: Option[(String, String)] = None,
-    permissive: Boolean = false,
-    ordinals: Array[Int] = (0 until CdcSource.schema.length).toArray,
-    hdrFilters: HeaderFilters = HeaderFilters())
+    permissive: Boolean,
+    ordinals: Array[Int],
+    hdrFilters: HeaderFilters)
   extends PartitionReader[InternalRow] {
-
-  // -1 = no op filter; -2 = pushed op outside the vocabulary, which
-  // can never match a decoded record (decode maps junk to UNKNOWN)
-  private val opCodeWanted: Int = hdrFilters.op match {
-    case None => -1
-    case Some(o) if graft.cdc.Op.all.contains(o) => graft.cdc.Op.code(o).toInt
-    case Some(_) => -2
-  }
 
   private val projection = new RecordCodec.RowProjection(ordinals)
   private val todo = ranges.iterator
@@ -608,11 +617,6 @@ class CdcPartitionReader(
   private var nSkipped = 0L
   private var nDecoded = 0L
   private var nCorrupt = 0L
-
-  private def countCorrupt(): Unit = {
-    nCorrupt += 1
-    CdcSource.corruptSkipped.incrementAndGet()
-  }
 
   /** The next record payload, opening the ranges in order; null after
     * the last range. A torn frame (a length prefix that runs past its
@@ -630,7 +634,7 @@ class CdcPartitionReader(
         try return raw.next()
         catch {
           case _: java.io.IOException if permissive =>
-            countCorrupt(); raw.close(); raw = null
+            nCorrupt += 1; raw.close(); raw = null
         }
     }
     null
@@ -640,18 +644,15 @@ class CdcPartitionReader(
     var bytes = nextPayload()
     while (bytes != null) {
       try {
-        val keep = headerKeep(bytes) &&
-          tableSel.forall(RecordCodec.headerTable(bytes) == _) &&
-          dbTblKeep(bytes)
-        if (keep) {
-          current = toRow(bytes)
+        if (hdrFilters.keeps(bytes)) {
+          current = RecordCodec.decodeProjected(bytes, projection)
           nDecoded += 1
           return true
         } else nSkipped += 1
       } catch {
         // framing is intact (length prefixes), only this payload is
         // bad — skip and count rather than kill the subscription
-        case _: Exception if permissive => countCorrupt()
+        case _: Exception if permissive => nCorrupt += 1
       }
       bytes = nextPayload()
     }
@@ -668,25 +669,4 @@ class CdcPartitionReader(
     CdcMetrics.Value("recordsSkippedHeader", nSkipped),
     CdcMetrics.Value("recordsDecoded", nDecoded),
     CdcMetrics.Value("recordsCorruptSkipped", nCorrupt))
-
-  /** Fixed-header checks: ts bounds + op byte — no parsing at all. */
-  private def headerKeep(bytes: Array[Byte]): Boolean = {
-    val ts = RecordCodec.headerTsUs(bytes)
-    startTsUs.forall(ts >= _) &&
-      hdrFilters.tsMinUs.forall(ts >= _) &&
-      hdrFilters.tsMaxUs.forall(ts <= _) &&
-      (opCodeWanted == -1 || RecordCodec.headerOpCode(bytes) == opCodeWanted)
-  }
-
-  /** Prefix checks for pushed db/tbl equality (tail never parsed). */
-  private def dbTblKeep(bytes: Array[Byte]): Boolean = {
-    if (hdrFilters.db.isEmpty && hdrFilters.tbl.isEmpty) true
-    else {
-      val (db, tbl) = RecordCodec.headerTable(bytes)
-      hdrFilters.db.forall(_ == db) && hdrFilters.tbl.forall(_ == tbl)
-    }
-  }
-
-  private def toRow(bytes: Array[Byte]): InternalRow =
-    RecordCodec.decodeProjected(bytes, projection)
 }

@@ -96,7 +96,9 @@ object CdcStreaming {
       .toDF()
   }
 
-  private def wireCodec(wire: String)
+  /** `wire` → (table-prefix read, full decode) of that payload format;
+    * shared by [[fromKafkaRecords]] and the `graft-kafka` reader. */
+  private[graft] def wireCodec(wire: String)
       : (Array[Byte] => (String, String), Array[Byte] => graft.cdc.ChangeRecord) =
     wire match {
       case "graft" =>

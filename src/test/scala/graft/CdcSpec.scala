@@ -1,9 +1,12 @@
 package graft
 
 import graft.cdc._
-import graft.sources.{CdcChunkFile, CdcInputPartition, CdcOffset, CdcScan, CdcTable}
+import graft.sources.{CdcChunkFile, CdcInputPartition, CdcOffset, CdcScan, CdcSource, CdcSourceProvider, CdcTable, HeaderFilters}
 import graft.streaming.CdcStreaming
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.SupportsPushDownFilters
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
@@ -185,6 +188,23 @@ class ValuesSpec extends AnyFunSuite {
 
 class CdcSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  /** `df`'s rows and the `recordsCorruptSkipped` metric summed over the
+    * graft-cdc scans of the plan that produced them. */
+  private def collectCountingCorrupt(df: DataFrame): (Array[Row], Long) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val rows = df.collect()
+    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec        => scans(q.plan)
+      case b: BatchScanExec         => Seq(b)
+      case other                    => other.children.flatMap(scans)
+    }
+    (rows, scans(df.queryExecution.executedPlan)
+      .map(_.metrics("recordsCorruptSkipped").value).sum)
+  }
 
   test("batch read returns all records with full schema") {
     val dir = TestDirs.tmp("gcl")
@@ -850,7 +870,7 @@ class CdcSourceSpec extends AnyFunSuite {
       "a streaming scan's follow the directory") {
     val dir = TestDirs.tmp("gcl")
     CdcFixtures.writeChunks(dir)
-    val scan = new CdcTable(dir, None, None)
+    val scan = new CdcTable(dir, None, HeaderFilters(), permissive = false)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .asInstanceOf[CdcScan]
     val statRows = scan.estimateStatistics().numRows().getAsLong
@@ -863,7 +883,7 @@ class CdcSourceSpec extends AnyFunSuite {
       planned.map(c => CdcChunkFile.readFooter(c).nRecords.toLong).sum)
     // a streaming scan lives as long as its query: its statistics keep
     // following the directory
-    val stream = new CdcTable(dir, None, None)
+    val stream = new CdcTable(dir, None, HeaderFilters(), permissive = false)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .asInstanceOf[CdcScan]
     stream.toMicroBatchStream(dir)
@@ -871,6 +891,90 @@ class CdcSourceSpec extends AnyFunSuite {
     CdcChunkFile.write(s"$dir/chunk-00004${CdcChunkFile.Extension}",
       Seq(CdcFixtures.rec(31L, 32000000L, Op.Insert, "k9", "v31")))
     assert(stream.estimateStatistics().numRows().getAsLong == before + 1)
+    // the statistics leave out the chunks planning prunes: a pushed
+    // tsUs bound, and `table` selection over a v3 multi-table transport
+    def batchScan(d: String, opts: Map[String, String], pushed: Filter*): CdcScan = {
+      import scala.jdk.CollectionConverters._
+      val b = new CdcSourceProvider()
+        .getTable(CdcSource.schema, Array.empty, (opts + ("path" -> d)).asJava)
+        .asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty())
+      b.asInstanceOf[SupportsPushDownFilters].pushFilters(pushed.toArray)
+      b.build().asInstanceOf[CdcScan]
+    }
+    def statsMatchPlan(s: CdcScan, nChunks: Int): Unit = {
+      val rows = s.estimateStatistics().numRows().getAsLong
+      val chunks = s.toBatch.planInputPartitions()
+        .flatMap(_.asInstanceOf[CdcInputPartition].ranges.map(_.chunkPath)).distinct
+      assert(chunks.length == nChunks)
+      assert(rows == chunks.map(c => CdcChunkFile.readFooter(c).nRecords.toLong).sum)
+    }
+    val tsDir = TestDirs.tmp("gcl")
+    CdcFixtures.writeChunks(tsDir) // 1-10s, 11-20s, 21-30s
+    statsMatchPlan(batchScan(tsDir, Map.empty, GreaterThanOrEqual("tsUs", 15000000L)), 2)
+    val tblDir = TestDirs.tmp("gcl")
+    def r(id: Long, tbl: String) =
+      ChangeRecord(id, "tx", 1000000L * id, 0L, Op.Update, "appdb", tbl,
+        Seq("k"), null, Map("k" -> id.toString))
+    CdcChunkFile.write(s"$tblDir/chunk-00000${CdcChunkFile.Extension}",
+      (1L to 4L).map(r(_, "users")))
+    CdcChunkFile.write(s"$tblDir/chunk-00001${CdcChunkFile.Extension}",
+      (5L to 10L).map(r(_, "orders")))
+    CdcChunkFile.write(s"$tblDir/chunk-00002${CdcChunkFile.Extension}",
+      Seq(r(11L, "users"), r(12L, "orders"), r(13L, "orders")))
+    statsMatchPlan(batchScan(tblDir, Map("table" -> "appdb.users")), 2)
+  }
+
+  test("options and pushed filters intersect: a conflicting equality " +
+      "reads nothing, ts bounds narrow each other") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = TestDirs.tmp("gcl")
+    def r(id: Long, tbl: String) =
+      ChangeRecord(id, "tx", 1000000L * id, 0L, Op.Update, "appdb", tbl,
+        Seq("k"), null, Map("k" -> id.toString))
+    CdcChunkFile.write(s"$dir/chunk-00000${CdcChunkFile.Extension}",
+      Seq(r(1L, "users"), r(2L, "orders"), r(3L, "users"), r(4L, "orders")))
+    val users = spark.read.format("graft-cdc").option("path", dir)
+      .option("table", "appdb.users").load()
+    assert(users.filter(col("tbl") === "orders").collect().isEmpty)
+    assert(users.filter(col("db") === "x").collect().isEmpty)
+    assert(users.filter(col("tbl") === "users").select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
+    val cat = "cdc_cat_and"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.CdcCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.path", dir)
+    try {
+      assert(spark.sql(s"SELECT id FROM $cat.appdb.users WHERE tbl = 'orders'")
+        .collect().isEmpty)
+      assert(spark.sql(s"SELECT id FROM $cat.appdb.users WHERE db = 'x'")
+        .collect().isEmpty)
+      assert(spark.sql(s"SELECT id FROM $cat.appdb.users WHERE tbl = 'users'")
+        .collect().length == 2)
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.path")
+    }
+    // startingTimestampUs AND a pushed upper bound: chunk 0 (1-10s)
+    // falls to the option, chunk 2 (21-30s) to the filter
+    val tsDir = TestDirs.tmp("gcl")
+    val recs = CdcFixtures.writeChunks(tsDir)
+    val conf = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(conf)
+    spark.conf.set(conf, "false") // keep BatchScanExec reachable
+    try {
+      val df = spark.read.format("graft-cdc").option("path", tsDir)
+        .option("startingTimestampUs", 12000000L).load()
+        .filter(col("tsUs") < 21000000L).select("id")
+      val ids = df.collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids.length == 9 && ids ==
+        recs.filter(x => x.tsUs >= 12000000L && x.tsUs < 21000000L).map(_.id))
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case b: BatchScanExec => b
+      }.get
+      assert(scan.metrics("chunksPruned").value == 2L)
+    } finally spark.conf.set(conf, old)
+    // a bound no tsUs can pass has no header form: Spark keeps it
+    assert(CdcStreaming.readBatch(spark, tsDir)
+      .filter(col("tsUs") > Long.MaxValue).collect().isEmpty)
   }
 
   test("large chunks split into parallel scan ranges via the footer index") {
@@ -956,7 +1060,7 @@ class CdcSourceSpec extends AnyFunSuite {
       g
     }
     // the torn chunk shares its partition with the next chunk
-    val parts = new CdcTable(dir, None, None, permissive = true)
+    val parts = new CdcTable(dir, None, HeaderFilters(), permissive = true)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .toBatch.planInputPartitions().map(_.asInstanceOf[CdcInputPartition])
     assert(parts.head.ranges.map(_.chunkPath).map(
@@ -968,12 +1072,11 @@ class CdcSourceSpec extends AnyFunSuite {
     }
     // permissive: the frames before the tear and every later range
     // survive; the tear counts once
-    val before = graft.sources.CdcSource.corruptSkipped.get()
-    val rows = spark.read.format("graft-cdc").option("path", dir)
-      .option("mode", "permissive").load().collect()
+    val (rows, corrupt) = collectCountingCorrupt(spark.read.format("graft-cdc")
+      .option("path", dir).option("mode", "permissive").load())
     assert(rows.map(_.getAs[Long]("id")).sorted.toSeq ==
       (good ++ rest).map(_.id).sorted)
-    assert(graft.sources.CdcSource.corruptSkipped.get() - before == 1L)
+    assert(corrupt == 1L)
   }
 
   test("a stream reads each chunk footer once across triggers") {
@@ -982,7 +1085,7 @@ class CdcSourceSpec extends AnyFunSuite {
       CdcChunkFile.write(f"$dir/chunk-$c%05d${CdcChunkFile.Extension}",
         Seq(CdcFixtures.rec(c.toLong, 1000000L * (c + 1), Op.Insert, s"k$c", s"v$c")))
     (0 until 3).foreach(land)
-    val scan = new CdcTable(dir, None, None)
+    val scan = new CdcTable(dir, None, HeaderFilters(), permissive = false)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .asInstanceOf[CdcScan]
     val stream = scan.toMicroBatchStream(dir)
@@ -1031,12 +1134,11 @@ class CdcSourceSpec extends AnyFunSuite {
       CdcStreaming.readBatch(spark, dir).count()
     }
     // permissive: 5 good records survive, 1 corruption counted
-    val before = graft.sources.CdcSource.corruptSkipped.get()
-    val rows = spark.read.format("graft-cdc").option("path", dir)
-      .option("mode", "permissive").load().collect()
+    val (rows, corrupt) = collectCountingCorrupt(spark.read.format("graft-cdc")
+      .option("path", dir).option("mode", "permissive").load())
     assert(rows.length == 5)
     assert(rows.map(_.getAs[Long]("id")).sorted.toSeq == (0L until 5L))
-    assert(graft.sources.CdcSource.corruptSkipped.get() - before == 1L)
+    assert(corrupt == 1L)
   }
 
   test("subscription validates checkpoint and table selector eagerly") {

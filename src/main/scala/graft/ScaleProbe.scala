@@ -362,9 +362,9 @@ object ScaleProbe {
         // cdc33 (round 15): the real-Avro wire round trip riding the
         // changelog scan — per-record encode+decode, no state, linear
         "cdc33_avro_wire",
-        // cdc34 (round 15): update-mode top-N — counts store =
-        // windows × keys (the Flink rank-state bound); per-trigger
-        // work = Σ keys of CHANGED windows only
+        // cdc34 (round 15): update-mode top-N — aggregate state =
+        // windows × keys, rank store = 3 × windows; per-trigger work
+        // = delta rows + the CHANGED windows' top-3 only
         "cdc34_stream_topn_update",
         // cdc35 (round 15): idleness topology — append windows whose
         // state is open windows × tables; heartbeats advance the

@@ -2131,12 +2131,14 @@ object CdcQueries {
     * delta rather than the full rank state at 100 TB.
     *
     * Topology: counts aggregate in `update` output mode → foreachBatch
-    * maintains two partitioned parquet stores, the analogue of the
-    * rank operator's keyed state: a per-window COUNTS store (upserted
-    * with the delta — Spark's state store already merged, so the
-    * emitted row IS the new total) and a per-window RANKS store
-    * holding each window's current top-3. Both are partitioned by
-    * window and written with DYNAMIC partition overwrite, so a
+    * maintains ONE partitioned parquet store, the analogue of the rank
+    * operator's keyed state: a per-window RANKS store holding each
+    * window's current top-3. Spark's state store already merged the
+    * counts, so each emitted delta row IS the key's new total, and a
+    * changed window's new top-3 is re-ranked from two inputs only
+    * ([[cdc34Rerank]]): its stored top-3 with the delta's keys
+    * anti-joined out, plus the delta rows. The store is partitioned
+    * by window and written with DYNAMIC partition overwrite, so a
     * trigger rewrites exactly the changed windows' partitions and no
     * others — unchanged windows' ranks persist untouched, the
     * delta-scoped contract made literal in storage. The dealing is
@@ -2149,13 +2151,25 @@ object CdcQueries {
     * must still count (a production deployment sets its real lateness
     * bound; the store mechanics are identical).
     *
-    * Scale: counts-store size = windows × keys in the horizon (the
-    * Flink rank-state bound, measured for this machinery in the cdc24/
-    * cdc26 sweeps); per-trigger work = Σ keys of CHANGED windows; the
-    * driver-side collect is the changed-window ID LIST (bounded by
-    * windows per trigger, never keys or rows). Oracle: identical SQL
-    * to cdc32 — the update-mode path must land the exact complete-mode
-    * answer.
+    * Why the stored top-3 suffices (Flink's update-rank case,
+    * `UpdatableTopNFunction`: an update stream whose sort key only
+    * grows needs only the top-N): `count(*)` over INSERT/UPDATE/DELETE
+    * never decreases. A key outside a window's old top-3 that is
+    * absent from the delta keeps its count, and every old member's
+    * count is unchanged or higher, so under `ORDER BY n DESC, pk ASC`
+    * it still sorts below all three members and cannot enter the new
+    * top-3. A window with fewer than 3 stored members has no keys
+    * outside them. So the new top-3 is the top-3 of the old members
+    * (with the delta's totals put in) plus the delta rows.
+    *
+    * Scale: rank state on disk = 3 × windows in the horizon, beside
+    * Spark's own aggregation state (windows × keys, the Flink
+    * rank-state bound, measured for this machinery in the cdc24/
+    * cdc26 sweeps); per-trigger work = delta rows + 3 × CHANGED
+    * windows; the driver-side collect is the changed-window ID LIST
+    * (bounded by windows per trigger, never keys or rows). Oracle:
+    * identical SQL to cdc32 — the update-mode path must land the
+    * exact complete-mode answer.
     *
     * Round 16 (VERDICT r15 #7): each trigger also EMITS the rank
     * transitions as a downstream-consumable changelog — (+I inserted
@@ -2177,6 +2191,22 @@ object CdcQueries {
   private[graft] val cdc34Retracts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** cdc34's delta rule: the new top-3 (with `rnk`) of each window in
+    * `oldTop` (its stored top-3) or `delta` (update-mode rows whose `n`
+    * is the new total) — the old members minus the delta's keys, plus
+    * the delta, ranked `n DESC, pk ASC`. Exact when counts never
+    * decrease (the cdc34 docstring). */
+  private[graft] def cdc34Rerank(oldTop: DataFrame, delta: DataFrame): DataFrame = {
+    val d = delta.select(col("win_start_us"), col("pk"), col("n"))
+    val w = Window.partitionBy(col("win_start_us"))
+      .orderBy(col("n").desc, col("pk").asc)
+    oldTop.select(col("win_start_us"), col("pk"), col("n"))
+      .join(d.select("win_start_us", "pk"), Seq("win_start_us", "pk"), "left_anti")
+      .unionByName(d)
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= 3)
+  }
+
   private val cdc34 = QueryDef(
     "cdc34_stream_topn_update",
     (s, dir) => {
@@ -2194,9 +2224,9 @@ object CdcQueries {
       // SHARES the last trigger with the final third instead of
       // admitting alone. Update-mode deltas stay trigger-scoped (the
       // spec's touched ⊊ total and displacement-through-the-delta-path
-      // assertions see 2 epochs), and the counts/ranks stores land the
+      // assertions see 2 epochs), and the rank store lands the
       // identical final state (oracle re-proven at both SFs). A
-      // straggler-only trigger belongs to the cdc34 redesign (ROADMAP).
+      // straggler-only trigger would change the spec's epoch count.
       val child = StreamGate.gateSession(s)
       child.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       val stream = graft.streaming.CdcStreaming
@@ -2211,13 +2241,12 @@ object CdcQueries {
         .agg(count(lit(1)).as("n"))
         .select(unix_micros(col("window.start")).as("win_start_us"),
           col("pk"), col("n"))
-      val countsDir = chunkDir + "_counts"
       val ranksDir = chunkDir + "_ranks"
       val trailDir = chunkDir + "_trail"
       val retractDir = chunkDir + "_retract"
       cdc34Trails.put(dir, trailDir)
       cdc34Retracts.put(dir, retractDir)
-      Seq(countsDir, ranksDir, trailDir, retractDir, chunkDir + "_ck")
+      Seq(ranksDir, trailDir, retractDir, chunkDir + "_ck")
         .foreach(d =>
           graft.Fs.deleteRecursively(java.nio.file.Paths.get(d)))
       val q = counts.writeStream.outputMode("update")
@@ -2229,39 +2258,21 @@ object CdcQueries {
           val wins = delta.select("win_start_us").distinct()
             .collect().map(_.getLong(0))
           if (wins.nonEmpty) {
-            val haveStore =
-              java.nio.file.Files.exists(java.nio.file.Paths.get(countsDir))
-            // merge = store rows of CHANGED windows (partition-pruned
-            // read) minus delta keys, plus delta (the new totals) —
+            // the changed windows' CURRENT top-3 (partition-pruned
+            // read; empty before the first trigger)
+            val rankCols = Seq("win_start_us", "pk", "n", "rnk")
+            val haveRanks =
+              java.nio.file.Files.exists(java.nio.file.Paths.get(ranksDir))
+            val oldR =
+              if (!haveRanks)
+                delta.select(col("win_start_us"), col("pk"), col("n"),
+                  lit(0L).as("rnk")).filter(lit(false))
+              else ss.read.parquet(ranksDir)
+                .filter(col("win").isin(wins.map(_.asInstanceOf[AnyRef]): _*))
+                .select(rankCols.map(col): _*)
             // materialized before the dynamic overwrite rewrites
             // exactly those windows' partitions
-            val merged = {
-              val d = delta.select(col("win_start_us"), col("pk"), col("n"))
-              if (!haveStore) d
-              else ss.read.parquet(countsDir)
-                .filter(col("win").isin(wins.map(_.asInstanceOf[AnyRef]): _*))
-                .select(col("win_start_us"), col("pk"), col("n"))
-                .join(d.select("win_start_us", "pk"),
-                  Seq("win_start_us", "pk"), "left_anti")
-                .unionByName(d)
-            }.localCheckpoint(true)
-            // file-count note (round 15, MEASURED before "optimizing"):
-            // partitionBy fans each task across every window it holds
-            // (up to tasks × windows small files per trigger), but
-            // coalescing before the write timed WORSE here — `Probe
-            // time` 3-rep bands 12.7-14.0 s coalesced vs 10.3-12.5 s as-is
-            // at sf0.1: the store is tiny at gate SFs and the fan-in
-            // serializes the write tasks. At production scale the
-            // store is a real table format whose writer owns
-            // compaction; left uncoalesced on the evidence.
-            merged.withColumn("win", col("win_start_us"))
-              .write.partitionBy("win").mode("overwrite").parquet(countsDir)
-            val w = Window.partitionBy(col("win_start_us"))
-              .orderBy(col("n").desc, col("pk").asc)
-            val ranked = merged
-              .withColumn("rnk", row_number().over(w).cast("long"))
-              .filter(col("rnk") <= 3)
-              .localCheckpoint(true)
+            val ranked = cdc34Rerank(oldR, delta).localCheckpoint(true)
             // DOWNSTREAM RETRACTION CHANGELOG (round 16, VERDICT r15
             // #7 — Flink's rank operator contract): before the store
             // overwrite, diff the changed windows' NEW top-3 against
@@ -2269,17 +2280,8 @@ object CdcQueries {
             // new row) per transition — a displaced row retracts, its
             // replacement inserts, a count change on a surviving row
             // is -D(old n)/+I(new n). Work is bounded by rank state of
-            // CHANGED windows (≤ 3 rows × wins/trigger), read
-            // partition-pruned like the counts merge.
-            val rankCols = Seq("win_start_us", "pk", "n", "rnk")
+            // CHANGED windows (≤ 3 rows × wins/trigger).
             val newR = ranked.select(rankCols.map(col): _*)
-            val haveRanks =
-              java.nio.file.Files.exists(java.nio.file.Paths.get(ranksDir))
-            val oldR =
-              if (!haveRanks) newR.filter(lit(false))
-              else ss.read.parquet(ranksDir)
-                .filter(col("win").isin(wins.map(_.asInstanceOf[AnyRef]): _*))
-                .select(rankCols.map(col): _*)
             newR.exceptAll(oldR).withColumn("rank_op", lit("+I"))
               .unionByName(
                 oldR.exceptAll(newR).withColumn("rank_op", lit("-D")))

@@ -262,7 +262,8 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
   private def createRawReader(
       kp: CdcKafkaSqlPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val (headerTableOf, decodeOf) = graft.streaming.CdcStreaming.wireCodec(kp.wire)
+      private val decode = graft.streaming.CdcStreaming
+        .wireDecoder(kp.wire, kp.tableSel, kp.permissive)
       private val enc = ExpressionEncoder[graft.cdc.ChangeRecord]()
       private val ser = enc.createSerializer()
       // one slot per output column: Left(physical ordinal in the
@@ -281,15 +282,9 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
         while (i + 1 < kp.msgs.length) {
           i += 1
           val m = kp.msgs(i)
-          if (m.value != null) { // tombstones drop, like the decode APIs
-            try {
-              if (kp.tableSel.forall(headerTableOf(m.value) == _)) {
-                current = toRow(m, decodeOf(m.value))
-                return true
-              }
-            } catch {
-              case e: Exception => if (!kp.permissive) throw e
-            }
+          decode(m.value) match {
+            case Some(r) => current = toRow(m, r); return true
+            case None =>
           }
         }
         false
@@ -322,7 +317,8 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
       kp: CdcKafkaSqlPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
-      private val (headerTableOf, decodeOf) = graft.streaming.CdcStreaming.wireCodec(kp.wire)
+      private val decode = graft.streaming.CdcStreaming
+        .wireDecoder(kp.wire, kp.tableSel, kp.permissive)
       private val metaIdx = (CdcKafkaSqlTable.metadataCols :+
         CdcKafkaSqlTable.rowKindCol).map(_.name).zipWithIndex.toMap
       // per-slot: Left(declared field name + TRY-cast from the image's
@@ -350,28 +346,21 @@ class CdcKafkaSqlReaderFactory extends PartitionReaderFactory {
         while (i + 1 < kp.msgs.length) {
           i += 1
           val m = kp.msgs(i)
-          if (m.value != null) {
-            try {
-              if (kp.tableSel.forall(headerTableOf(m.value) == _)) {
-                val r = decodeOf(m.value)
-                if (graft.cdc.Op.isDml(r.op)) {
-                  r.op match {
-                    case graft.cdc.Op.Insert =>
-                      current = toRow(m, "+I", r.after); return true
-                    case graft.cdc.Op.Delete =>
-                      current = toRow(m, "-D", r.before); return true
-                    case _ =>
-                      if (r.before != null) {
-                        current = toRow(m, "-U", r.before)
-                        pendingRow = toRow(m, "+U", r.after)
-                      } else current = toRow(m, "+U", r.after)
-                      return true
-                  }
-                }
+          decode(m.value) match {
+            case Some(r) if graft.cdc.Op.isDml(r.op) =>
+              r.op match {
+                case graft.cdc.Op.Insert =>
+                  current = toRow(m, "+I", r.after)
+                case graft.cdc.Op.Delete =>
+                  current = toRow(m, "-D", r.before)
+                case _ =>
+                  if (r.before != null) {
+                    current = toRow(m, "-U", r.before)
+                    pendingRow = toRow(m, "+U", r.after)
+                  } else current = toRow(m, "+U", r.after)
               }
-            } catch {
-              case e: Exception => if (!kp.permissive) throw e
-            }
+              return true
+            case _ =>
           }
         }
         false

@@ -78,38 +78,42 @@ object CdcStreaming {
       wire: String = "graft"): DataFrame = {
     val spark = kafka.sparkSession
     import spark.implicits._
-    val sel = table.map(graft.sources.CdcSource.parseTableSelector)
-    val (headerTableOf, decodeOf) = wireCodec(wire)
-    kafka.select(col("value")).as[Array[Byte]]
-      .flatMap { bytes =>
-        // null values are log-compaction tombstones (key-only deletion
-        // markers), not corrupt payloads: dropped in BOTH modes —
-        // strict mode must not kill the stream on routine compaction
-        if (bytes == null) None
-        else try {
-          if (!sel.forall(headerTableOf(bytes) == _)) None
-          else Some(decodeOf(bytes))
-        } catch {
-          case e: Exception => if (permissive) None else throw e
-        }
-      }
-      .toDF()
+    val decode = wireDecoder(wire,
+      table.map(graft.sources.CdcSource.parseTableSelector), permissive)
+    kafka.select(col("value")).as[Array[Byte]].flatMap(decode(_)).toDF()
   }
 
-  /** `wire` → (table-prefix read, full decode) of that payload format;
-    * shared by [[fromKafkaRecords]] and the `graft-kafka` reader. */
-  private[graft] def wireCodec(wire: String)
-      : (Array[Byte] => (String, String), Array[Byte] => graft.cdc.ChangeRecord) =
-    wire match {
-      case "graft" =>
-        ((b: Array[Byte]) => graft.cdc.RecordCodec.headerTable(b),
-          (b: Array[Byte]) => graft.cdc.RecordCodec.decode(b))
-      case "dts-avro" =>
-        ((b: Array[Byte]) => graft.cdc.AvroWire.headerTable(b),
-          (b: Array[Byte]) => graft.cdc.AvroWire.decode(b))
-      case other => throw new IllegalArgumentException(
-        s"fromKafkaRecords wire must be graft|dts-avro, got '$other'")
-    }
+  /** The one decode rule for Kafka-shaped payloads, shared by
+    * [[fromKafkaRecords]], [[fromKafkaRecordsWithMeta]] and both
+    * `graft-cdc-kafka` readers. A null value is a log-compaction
+    * tombstone (a key-only deletion marker, not a corrupt payload):
+    * it drops in both modes, so strict mode never dies on routine
+    * compaction. The `db.tbl` selection reads the header prefix
+    * alone. An undecodable payload drops when `permissive` and
+    * rethrows otherwise. */
+  private[graft] def wireDecoder(
+      wire: String,
+      sel: Option[(String, String)],
+      permissive: Boolean): Array[Byte] => Option[graft.cdc.ChangeRecord] = {
+    val (headerTableOf, decodeOf)
+        : (Array[Byte] => (String, String), Array[Byte] => graft.cdc.ChangeRecord) =
+      wire match {
+        case "graft" =>
+          (graft.cdc.RecordCodec.headerTable(_), graft.cdc.RecordCodec.decode(_))
+        case "dts-avro" =>
+          (graft.cdc.AvroWire.headerTable(_), graft.cdc.AvroWire.decode(_))
+        case other => throw new IllegalArgumentException(
+          s"fromKafkaRecords wire must be graft|dts-avro, got '$other'")
+      }
+    bytes =>
+      if (bytes == null) None
+      else try {
+        if (sel.forall(headerTableOf(bytes) == _)) Some(decodeOf(bytes))
+        else None
+      } catch {
+        case e: Exception => if (permissive) None else throw e
+      }
+  }
 
   /** [[fromKafkaRecords]] CARRYING the transport's metadata columns —
     * the COMPLETE readable-metadata surface of the reference table
@@ -145,8 +149,8 @@ object CdcStreaming {
       wire: String = "graft"): DataFrame = {
     val spark = kafka.sparkSession
     import spark.implicits._
-    val sel = table.map(graft.sources.CdcSource.parseTableSelector)
-    val (headerTableOf, decodeOf) = wireCodec(wire)
+    val decode = wireDecoder(wire,
+      table.map(graft.sources.CdcSource.parseTableSelector), permissive)
     val headersCol =
       if (kafka.columns.contains("headers"))
         transform(col("headers"), h =>
@@ -163,19 +167,12 @@ object CdcStreaming {
       .as[(String, Int, Long, Long, Int,
         Seq[(String, Array[Byte])], Array[Byte])]
       .flatMap { case (topic, part, off, tsMs, tsType, hdrs, bytes) =>
-        if (bytes == null) None
-        else try {
-          if (!sel.forall(headerTableOf(bytes) == _)) None
-          else {
-            // last-wins flatten, the reference's header put loop
-            val hmap =
-              if (hdrs == null) null
-              else hdrs.foldLeft(Map.empty[String, Array[Byte]])(_ + _)
-            Some((decodeOf(bytes), topic, part, off, tsMs, hmap,
-              timestampTypeName(tsType)))
-          }
-        } catch {
-          case e: Exception => if (permissive) None else throw e
+        decode(bytes).map { r =>
+          // last-wins flatten, the reference's header put loop
+          val hmap =
+            if (hdrs == null) null
+            else hdrs.foldLeft(Map.empty[String, Array[Byte]])(_ + _)
+          (r, topic, part, off, tsMs, hmap, timestampTypeName(tsType))
         }
       }
       .toDF("r", "kafka_topic", "kafka_partition", "kafka_offset",

@@ -230,30 +230,39 @@ class CdcSourceSpec extends AnyFunSuite {
     // die on routine compaction
     val values = (recs :+ other).map(RecordCodec.encode) :+
       Array[Byte](1, 2, 3) :+ (null: Array[Byte])
-    val kafka = values.toDF("value")
+    def asKafka(vs: Seq[Array[Byte]]) = vs.toDF("value")
       .withColumn("topic", lit("dts-sub"))
       .withColumn("partition", lit(0))
       .withColumn("offset", monotonically_increasing_id())
+      .withColumn("timestamp", current_timestamp())
+    val kafka = asKafka(values)
     val decoded = CdcStreaming.fromKafkaRecords(kafka)
     // exact source-schema parity (names + types), so every downstream
     // pipeline runs unchanged on the wire path
     assert(decoded.schema.map(f => (f.name, f.dataType)) ==
       graft.sources.CdcSource.schema.map(f => (f.name, f.dataType)))
-    // corrupt payload dropped under permissive; all fields roundtrip
-    val got = decoded.as[ChangeRecord].collect().sortBy(_.id)
-    assert(got.toSeq == (recs :+ other).sortBy(_.id))
-    // per-table selection via the prefix-only header read
-    val sel = CdcStreaming.fromKafkaRecords(kafka, Some("otherdb.t2"))
-    assert(sel.as[ChangeRecord].collect().toSeq == Seq(other))
-    // strict mode surfaces the corrupt payload instead of dropping it
-    intercept[Exception] {
-      CdcStreaming.fromKafkaRecords(kafka, permissive = false).count()
+    // both decode APIs keep the same tombstone/selection/mode rule;
+    // the metadata form is read back through the record columns
+    val recordCols = graft.sources.CdcSource.schema.fieldNames.map(col)
+    val decoders = Seq[(DataFrame, Option[String], Boolean) => DataFrame](
+      CdcStreaming.fromKafkaRecords(_, _, _),
+      CdcStreaming.fromKafkaRecordsWithMeta(_, _, _).select(recordCols: _*))
+    decoders.foreach { decode =>
+      // corrupt payload dropped under permissive; all fields roundtrip
+      val got = decode(kafka, None, true).as[ChangeRecord].collect()
+        .sortBy(_.id)
+      assert(got.toSeq == (recs :+ other).sortBy(_.id))
+      // per-table selection via the prefix-only header read
+      val sel = decode(kafka, Some("otherdb.t2"), true)
+      assert(sel.as[ChangeRecord].collect().toSeq == Seq(other))
+      // strict mode surfaces the corrupt payload instead of dropping it
+      intercept[Exception] {
+        decode(kafka, None, false).count()
+      }
+      // ...but a tombstone alone never trips strict mode
+      val tombOnly = asKafka(Seq(RecordCodec.encode(other), null: Array[Byte]))
+      assert(decode(tombOnly, None, false).count() == 1)
     }
-    // ...but a tombstone alone never trips strict mode
-    val tombOnly = Seq(RecordCodec.encode(other), null: Array[Byte])
-      .toDF("value")
-    assert(CdcStreaming.fromKafkaRecords(tombOnly, permissive = false)
-      .count() == 1)
     // and the decode is stream-capable: same plan over MemoryStream
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -87,7 +87,7 @@ object CdcQueries {
     * DtsExample.java filter on OperationType. The shared fixture's
     * CASE emits only four ops today, but cdc31 proves marker-bearing
     * chunks exist in this codebase — a marker must never count as a
-    * data row even if the fixture grows one (ADVICE r14 #4; CdcSpec
+    * data row even if the fixture grows one (ADVICE r14 #4; CdcSourceSpec
     * pins the exclusion with an injected marker). */
   private[graft] def dataOpsOf(log: DataFrame): DataFrame =
     log.filter(col("op") =!= Op.Heartbeat && !col("op").isin(Op.markers: _*))
@@ -1153,7 +1153,7 @@ object CdcQueries {
   /** CHANGE-DATA-FEED over the sink (round 12) — the row-level change
     * SUBSCRIPTION an incremental consumer runs against the landed
     * table (Delta CDF / `table_changes` over every published version):
-    * for each published version in publication order, the typed diff
+    * for each published version in version order, the typed diff
     * from its predecessor (insert / update / delete, post-image for
     * insert/update, pre-image for delete), version-tagged; the first
     * version reads as pure inserts from empty — the bootstrap a new
@@ -2070,7 +2070,7 @@ object CdcQueries {
       // admission cap = 2 over three one-chunk writes: triggers [2,1];
       // complete-mode output is the final trigger's full snapshot, so
       // the rank result is trigger-granularity-independent, and the
-      // CdcSpec trail assertions (first-vs-final displacement) see
+      // CdcSourceSpec trail assertions (first-vs-final displacement) see
       // exactly 2 epochs (oracle re-proven at both SFs)
       val stream = graft.streaming.CdcStreaming.readStream(
         StreamGate.gateSession(s), chunkDir, maxChunksPerTrigger = Some(2))
@@ -2176,7 +2176,7 @@ object CdcQueries {
     * row, -D displaced/superseded row), Flink's rank-operator emission
     * contract (its retraction stream carries a DELETE for the
     * displaced row so downstream state can follow) — appended per
-    * epoch under the retract dir ([[cdc34Retracts]]); CdcSpec replays
+    * epoch under the retract dir ([[cdc34Retracts]]); CdcSourceSpec replays
     * it and must land exactly the final rank state, with every
     * displacement = one -D + one +I. */
   /** Last run's trail dir per input dir (the cdc32 exposure pattern). */
@@ -2316,7 +2316,7 @@ object CdcQueries {
 
   // -------------------------------------------------------------- cdc35
   /** PER-PARTITION IDLENESS under the oracle gate (round 15, VERDICT
-    * r14 #8 — promoting the CdcSpec withIdleness pin to a hash-gated
+    * r14 #8 — promoting the CdcSourceSpec withIdleness pin to a hash-gated
     * key): one table goes SILENT after the first sixth of the event
     * span while another keeps producing, and every window of BOTH
     * tables still finalizes in append mode. The reference needs

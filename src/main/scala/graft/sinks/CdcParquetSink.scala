@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
@@ -66,12 +66,22 @@ import scala.jdk.CollectionConverters._
   * compaction RETAINS tombstones (stale records may still arrive);
   * only [[compact]] with a horizon drops them.
   *
-  * Exactly-once: the per-version manifest is written AFTER the data
-  * and `_LATEST` swaps atomically; a replayed micro-batch (foreachBatch
-  * is at-least-once) skips the data write when its manifest already
-  * exists, and COMPLETES the publish idempotently if the crash fell
-  * between the manifest write and the `_LATEST` swap (ADVICE r11 —
-  * a bare short-circuit there silently lost the batch).
+  * Exactly-once: the version names are the one record of version
+  * order. Batch N publishes version `v<N>` and the k-th [[compact]] of
+  * its state publishes `v<N>-c<k>`; each names its data dir and its
+  * manifest (`manifest-<version>.tsv`), and versions order by (N, k).
+  * A version is published iff it orders at or before the one `_LATEST`
+  * names. Each manifest and the `_LATEST` pointer are written to a
+  * hidden temp file and atomically moved into place, the manifest
+  * AFTER the data, so an existing manifest proves its batch's data
+  * landed. A replayed micro-batch (foreachBatch is at-least-once)
+  * whose manifest exists skips the data write; if a crash fell between
+  * the manifest write and the `_LATEST` swap, `_LATEST` still orders
+  * before it and the replay completes the swap (ADVICE r11 — a bare
+  * short-circuit there silently lost the batch). Otherwise a later
+  * batch or a compaction of this one is live and the replay does
+  * nothing. A compaction run inside that window orders before the
+  * unpublished batch, so the replay still publishes it.
   */
 object CdcParquetSink {
 
@@ -82,11 +92,37 @@ object CdcParquetSink {
   private def bucketCol(n: Int) =
     pmod(crc32(col("key")), lit(n)).cast("int").as("bucket")
 
-  private def versionName(batchId: Long) = f"v$batchId%012d"
-  private def manifestName(version: String) = s"manifest-$version.tsv"
-  /** A batch version's manifest name ([[manifestName]] of
-    * [[versionName]]), capturing the batch id. */
-  private val VersionedManifest = "manifest-v(\\d{12})\\.tsv".r
+  /** One table version: batch `batchId`'s publish (`compaction` 0) or
+    * the `compaction`-th [[compact]] of it. Its name is its data dir. */
+  private[graft] case class Version(batchId: Long, compaction: Int)
+    extends Ordered[Version] {
+    def name: String =
+      if (compaction == 0) f"v$batchId%012d" else f"v$batchId%012d-c$compaction"
+    def manifest: String = s"manifest-$name.tsv"
+    def compare(o: Version): Int = {
+      val c = java.lang.Long.compare(batchId, o.batchId)
+      if (c != 0) c else Integer.compare(compaction, o.compaction)
+    }
+  }
+
+  private val ManifestName = "manifest-v(\\d{12})(?:-c(\\d+))?\\.tsv".r
+
+  private def parseManifest(name: String): Option[Version] = name match {
+    case ManifestName(n, k) => Some(Version(n.toLong, Option(k).fold(0)(_.toInt)))
+    case _                  => None
+  }
+
+  /** The versions whose manifests are in the table dir, in version
+    * order, split at `_LATEST`: (published, pending). Pending versions
+    * order after `_LATEST` — written batches whose replay publishes
+    * them. A leftover temp manifest is a hidden name and no version. */
+  private[graft] def versions(tableDir: String): (Seq[Version], Seq[Version]) = {
+    val dir = Paths.get(tableDir)
+    val all = if (!Files.isDirectory(dir)) Nil else graft.Fs.listDir(dir)
+      .flatMap(p => parseManifest(p.getFileName.toString)).sorted
+    val latest = latestManifestFile(tableDir).flatMap(parseManifest)
+    all.span(v => latest.exists(v <= _))
+  }
 
   /** Last-DML-wins (ties by record id) over any mix of base and delta
     * rows; DELETE survives as a tombstone row. `clusterBy` columns
@@ -184,7 +220,7 @@ object CdcParquetSink {
     latestManifestFile(tableDir).map(readManifest(tableDir, _))
 
   /** Identifier of the current published version (manifest file name);
-    * changes iff a micro-batch committed. */
+    * changes iff a micro-batch committed or [[compact]] ran. */
   def latestSnapshot(tableDir: String): Option[String] =
     latestManifestFile(tableDir).map(n => Paths.get(tableDir, n).toString)
 
@@ -200,7 +236,8 @@ object CdcParquetSink {
     * publish — the snapshot a reproducible training run pins ("read
     * the corpus as of snapshot v", Delta/Iceberg's `VERSION AS OF`).
     * Every batch publishes an immutable manifest; the read resolves
-    * the newest v-manifest ≤ batchId and merges ITS chains. Snapshots
+    * the newest published version of a batch ≤ batchId (a compaction
+    * of batch N has N's live rows) and merges ITS chains. Snapshots
     * stay readable while their files are inside the GC retention
     * window ([[RetainVersions]] manifests — folds/compactions rewrite
     * chains, so older snapshots' inputs eventually age out); an
@@ -213,31 +250,19 @@ object CdcParquetSink {
     manifestAsOf(tableDir, batchId)
       .map(m => liveRows(spark, tableDir, m.values.flatten.toSeq))
 
-  /** The newest versioned manifest ≤ `batchId`, as bucket → chain —
-    * None when the table dir is missing (a bare Files.list would
-    * throw, unlike readTable's missing-table contract — ADVICE r10),
-    * when no such version was ever published, or when any referenced
-    * bucket dir has been GC'd (aged-out snapshots must read as None,
-    * never silently partial). */
+  /** The newest published version of a batch ≤ `batchId`, as bucket →
+    * chain — None when the table dir is missing (readTable's
+    * missing-table contract — ADVICE r10), when no such version was
+    * ever published, or when any referenced bucket dir has been GC'd
+    * (aged-out snapshots must read as None, never silently partial). */
   private[graft] def manifestAsOf(
-      tableDir: String, batchId: Long): Option[Map[Int, Seq[String]]] = {
-    if (!Files.isDirectory(Paths.get(tableDir))) return None
-    val cands = graft.Fs.listDir(Paths.get(tableDir))
-      .flatMap { p =>
-        p.getFileName.toString match {
-          case VersionedManifest(v) => Some(v.toLong -> p.getFileName.toString)
-          case _     => None
-        }
-      }
-      .filter(_._1 <= batchId)
-    cands.sortBy(_._1).lastOption.flatMap { case (_, name) =>
-      val m = readManifest(tableDir, name)
-      val rels = m.values.flatten.toSeq.distinct.sorted
+      tableDir: String, batchId: Long): Option[Map[Int, Seq[String]]] =
+    versions(tableDir)._1.filter(_.batchId <= batchId).lastOption.flatMap { v =>
+      val m = readManifest(tableDir, v.manifest)
       if (m.isEmpty ||
-        !rels.forall(rel => Files.exists(Paths.get(tableDir, rel)))) None
+        !m.values.flatten.forall(rel => Files.exists(Paths.get(tableDir, rel)))) None
       else Some(m)
     }
-  }
 
   /** The buckets whose chains DIFFER between the two resolved
     * snapshots — the manifest-level pruning [[tableChanges]] reads:
@@ -303,16 +328,16 @@ object CdcParquetSink {
   /** CHANGE-DATA-FEED read (round 12) — the contract an incremental
     * consumer actually subscribes to (Delta's CDF / `table_changes`
     * over EVERY published version, not one pair): for each published
-    * batch version in publication order, the row-level diff from its
+    * batch in version order, the row-level diff from its
     * predecessor, tagged with the version. The first version reads as
     * pure inserts from empty (the bootstrap a new consumer replays);
     * every later leg is [[tableChanges]] — changed-bucket pruned, so
     * the whole feed costs O(Σ per-version deltas), never
     * O(table × versions): at 100 TB a subscriber pays for the changes,
-    * not the store. `compact()` manifests are EXCLUDED by construction
-    * (layout-only versions publish no changes — compaction is
-    * state-invisible, so its feed leg would be empty by the compaction
-    * invariant anyway; excluding it keeps feed versions = batch ids).
+    * not the store. `compact()` versions add no leg by construction:
+    * a compaction carries the batch id it compacts, and compaction is
+    * state-invisible, so its leg would be empty anyway; feed versions
+    * stay = batch ids.
     *
     * `sinceBatchId` resumes a checkpointed consumer: only versions
     * strictly after it are emitted. A resume point that is not a
@@ -322,8 +347,7 @@ object CdcParquetSink {
     * readTableAsOf aged-out contract applied to the feed). */
   def changeFeed(spark: SparkSession, tableDir: String,
       sinceBatchId: Long = Long.MinValue): Option[DataFrame] = {
-    val ids = publicationOrder(tableDir)
-      .collect { case VersionedManifest(v) => v.toLong }
+    val ids = versions(tableDir)._1.map(_.batchId).distinct
     if (ids.isEmpty) return None
     if (sinceBatchId != Long.MinValue && !ids.contains(sinceBatchId))
       return None
@@ -386,25 +410,17 @@ object CdcParquetSink {
     // rewrite (ADVICE r3); 1 is the legitimate floor (fold each batch)
     require(maxDeltas >= 1, s"maxDeltas must be >= 1, got $maxDeltas")
     Files.createDirectories(Paths.get(tableDir))
-    val version = versionName(batchId)
+    val version = Version(batchId, 0)
+    val vdir = version.name
     // at-least-once replay: the manifest is written after the data, so
     // its existence means the batch's DATA fully landed and re-applying
-    // would double-count — but publish itself may not have completed
-    // (crash between the manifest write and the _LATEST swap would
-    // otherwise LOSE the batch: the short-circuit returned, _LATEST
-    // stayed on the old version, and GC reaped the orphaned delta —
-    // ADVICE r11). Single writer + monotone batchIds: a replay of this
-    // batch means no LATER batch committed its offset, so completing
-    // the publish can only move _LATEST forward, never roll it back;
-    // the later-published guard covers a manifest that IS already in
-    // the log with successors (fully committed long ago).
-    if (Files.exists(Paths.get(tableDir, manifestName(version)))) {
-      val mName = manifestName(version)
-      val logged = publicationOrder(tableDir)
-      val idx = logged.indexOf(mName)
-      val laterPublished = idx >= 0 && idx < logged.size - 1
-      if (!laterPublished && !latestManifestFile(tableDir).contains(mName))
-        publish(tableDir, version, readManifest(tableDir, mName))
+    // would double-count — but the _LATEST swap may not have happened
+    // (a bare short-circuit there LOST the batch — ADVICE r11). If
+    // _LATEST orders before this batch, complete the swap; if it names
+    // this batch, a compaction of it or a later batch, do nothing.
+    if (Files.exists(Paths.get(tableDir, version.manifest))) {
+      if (latestManifestFile(tableDir).flatMap(parseManifest).forall(_ < version))
+        swapLatest(tableDir, version)
       return
     }
 
@@ -416,16 +432,16 @@ object CdcParquetSink {
       .select(
         graft.streaming.CdcStreaming.keyExpr.as("key"),
         col("tsUs"), col("id").as("recordId"), col("op"),
-        col("after")), nBuckets), s"$tableDir/$version")
+        col("after")), nBuckets), s"$tableDir/$vdir")
 
     // touched set from the written partition dirs — directory listing,
     // bounded by nBuckets, no extra job
-    val touched = graft.Fs.listDir(Paths.get(tableDir, version))
+    val touched = graft.Fs.listDir(Paths.get(tableDir, vdir))
       .map(_.getFileName.toString)
       .filter(_.startsWith("bucket="))
       .map(_.stripPrefix("bucket=").toInt).sorted
     if (touched.isEmpty) {
-      graft.Fs.deleteRecursively(Paths.get(tableDir, version))
+      graft.Fs.deleteRecursively(Paths.get(tableDir, vdir))
       return
     }
 
@@ -438,34 +454,39 @@ object CdcParquetSink {
     if (folded.nonEmpty) {
       // chain = previous manifest entries + the delta written above
       val chain = chainFrame(spark, tableDir,
-        folded.flatMap(b => prev.getOrElse(b, Nil) :+ s"$version/bucket=$b"))
+        folded.flatMap(b => prev.getOrElse(b, Nil) :+ s"$vdir/bucket=$b"))
       // per-bucket fold RETAINS tombstones: stale records may still
       // arrive and must lose against them
-      writeBuckets(mergeByBucket(chain, nBuckets), s"$tableDir/$version-base")
+      writeBuckets(mergeByBucket(chain, nBuckets), s"$tableDir/$vdir-base")
     }
 
     val manifest = prev ++
       appended.map(b =>
-        b -> (prev.getOrElse(b, Nil) :+ s"$version/bucket=$b")) ++
-      folded.map(b => b -> Seq(s"$version-base/bucket=$b"))
+        b -> (prev.getOrElse(b, Nil) :+ s"$vdir/bucket=$b")) ++
+      folded.map(b => b -> Seq(s"$vdir-base/bucket=$b"))
     publish(tableDir, version, manifest)
   }
 
   /** Full rewrite folding every chain and dropping tombstones older
     * than `horizonUs` (pass Long.MaxValue to drop all) — run
-    * periodically once replay that far back is no longer possible. */
+    * periodically once replay that far back is no longer possible.
+    * Publishes `v<N>-c<k>`, the k-th compaction of `_LATEST`'s batch N,
+    * so it orders after `_LATEST` and before batch N + 1. */
   def compact(spark: SparkSession, tableDir: String,
       horizonUs: Long = Long.MaxValue,
       nBuckets: Int = DefaultBuckets): Unit = {
-    latestManifest(tableDir).foreach { m =>
+    val (published, pending) = versions(tableDir)
+    published.lastOption.foreach { at =>
+      val m = readManifest(tableDir, at.manifest)
       val kept = mergeByBucket(
         chainFrame(spark, tableDir, m.values.flatten.toSeq), nBuckets)
         .filter(col("op") =!= Op.Delete || col("tsUs") > horizonUs)
-      val version = s"compact-${m.hashCode.toHexString}"
-      writeBuckets(kept, s"$tableDir/$version")
+      val version = Version(at.batchId, 1 + (published ++ pending)
+        .filter(_.batchId == at.batchId).map(_.compaction).max)
+      writeBuckets(kept, s"$tableDir/${version.name}")
       // buckets emptied by tombstone removal write no dir — drop them
       val manifest = (0 until nBuckets)
-        .map(b => b -> Seq(s"$version/bucket=$b"))
+        .map(b => b -> Seq(s"${version.name}/bucket=$b"))
         .filter { case (_, rel) =>
           Files.isDirectory(Paths.get(tableDir, rel.head)) }
         .toMap
@@ -473,63 +494,39 @@ object CdcParquetSink {
     }
   }
 
-  /** Append-only PUBLICATION LOG: one manifest name per line, in
-    * publish order — the canonical version ordering (what Delta's
-    * `_delta_log` sequence numbers provide). Retention reads THIS, not
-    * file mtimes: on a coarse-mtime filesystem or a copied/restored
-    * table dir an mtime sort could age out the live manifest (a
-    * compact manifest name sorts before every versioned one on a tie —
-    * ADVICE r10). O(publishes) lines, never data-sized. */
-  private val Published = "_PUBLISHED"
-
-  private def publish(tableDir: String, version: String,
+  private def publish(tableDir: String, version: Version,
       manifest: Map[Int, Seq[String]]): Unit = {
-    val mName = manifestName(version)
-    val body = manifest.toSeq.sortBy(_._1)
+    writeAtomically(tableDir, version.manifest, manifest.toSeq.sortBy(_._1)
       .map { case (b, chain) => s"$b\t${chain.mkString(",")}" }
-      .mkString("\n")
-    Files.writeString(Paths.get(tableDir, mName), body,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    // log BEFORE the pointer swap: a crash between the two leaves an
-    // extra retained entry (safe direction), never an unlogged live one
-    Files.writeString(Paths.get(tableDir, Published), mName + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    // atomic publish: tmp file + move
-    val tmp = Paths.get(tableDir, s".$Latest.tmp")
-    Files.writeString(tmp, mName, StandardOpenOption.CREATE,
-      StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, Paths.get(tableDir, Latest),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      .mkString("\n"))
+    swapLatest(tableDir, version)
+  }
+
+  /** Point `_LATEST` at `version`'s manifest, then GC. */
+  private def swapLatest(tableDir: String, version: Version): Unit = {
+    writeAtomically(tableDir, Latest, version.manifest)
     gcUnreferenced(tableDir)
   }
 
-  /** Manifest names in publication order (oldest first), deduplicated
-    * (an at-least-once replay can log a name twice), restricted to
-    * manifests still on disk. Falls back to an mtime sort for a table
-    * dir written before the log existed. */
-  private def publicationOrder(tableDir: String): Seq[String] = {
-    val log = Paths.get(tableDir, Published)
-    val logged =
-      if (Files.exists(log))
-        Files.readAllLines(log).asScala.toSeq.map(_.trim).filter(_.nonEmpty)
-          .distinct
-      else
-        graft.Fs.listDir(Paths.get(tableDir))
-          .filter(_.getFileName.toString.startsWith("manifest-"))
-          .sortBy(p => (Files.getLastModifiedTime(p).toMillis,
-            p.getFileName.toString))
-          .map(_.getFileName.toString)
-    logged.filter(n => Files.exists(Paths.get(tableDir, n)))
+  /** Replace `name` in the table dir with `body`: write a hidden temp
+    * file, then atomically move it into place. A kill leaves the old
+    * file or the new one, never a truncated one; a leftover temp file
+    * is hidden, so no reader takes it for a manifest. */
+  private def writeAtomically(tableDir: String, name: String, body: String): Unit = {
+    val tmp = Paths.get(tableDir, s".$name.tmp")
+    Files.writeString(tmp, body)
+    Files.move(tmp, Paths.get(tableDir, name),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Snapshot retention: GC keeps every file referenced by the last
-    * RetainVersions PUBLISHED manifests (not just the newest), so
+    * RetainVersions PUBLISHED versions (not just the newest), so
     * [[readTableAsOf]] can serve recent snapshots; disk stays bounded
     * at ≤ RetainVersions chains (chains share deltas, so the overlap
-    * usually makes it far less). Publication order = the `_PUBLISHED`
-    * append log (see [[publicationOrder]]); the `_LATEST` target is
-    * always retained regardless. */
+    * usually makes it far less). Version order is the manifest names'
+    * ([[versions]]), so the `_LATEST` target is always the newest
+    * published version and always retained; so are the files of every
+    * pending version, which its replay will publish. */
   val RetainVersions = 2
 
   /** Delete bucket dirs no RETAINED manifest references —
@@ -540,19 +537,15 @@ object CdcParquetSink {
     * store: a reader racing the fold may need a retry, same contract
     * as any non-snapshot-isolated table store. */
   private def gcUnreferenced(tableDir: String): Unit = {
-    // last RetainVersions of the publication LOG, plus — always — the
-    // manifest _LATEST points to (ADVICE r10: the live manifest must
-    // never fall out of the retained set, whatever the ordering says)
-    val retained = (publicationOrder(tableDir)
-      .takeRight(math.max(1, RetainVersions)) ++
-      latestManifestFile(tableDir).toSeq).distinct
-    val referenced = retained
-      .flatMap(readManifest(tableDir, _).values.flatten)
+    val (published, pending) = versions(tableDir)
+    val referenced = (published.takeRight(math.max(1, RetainVersions)) ++ pending)
+      .flatMap(v => readManifest(tableDir, v.manifest).values.flatten)
       .toSet
+    // the name test first: a table dir keeps every manifest ever
+    // written, and a stat per manifest would grow with table age
     val dirs = graft.Fs.listDir(Paths.get(tableDir))
+      .filter(_.getFileName.toString.startsWith("v"))
       .filter(Files.isDirectory(_))
-      .filter { d => val n = d.getFileName.toString
-        n.startsWith("v") || n.startsWith("compact-") }
     dirs.foreach { vdir =>
       val vname = vdir.getFileName.toString
       graft.Fs.listDir(vdir)

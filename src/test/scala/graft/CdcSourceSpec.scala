@@ -11,181 +11,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-object CdcFixtures {
-  def rec(id: Long, tsUs: Long, op: String, pk: String,
-      v: String): ChangeRecord =
-    ChangeRecord(id, s"tx-${id / 10}", tsUs, tsUs - 1000L, op,
-      "appdb", "users", Seq("uid"),
-      if (op == Op.Insert) null else Map("uid" -> pk, "v" -> "old"),
-      if (op == Op.Delete) null else Map("uid" -> pk, "v" -> v))
-
-  /** 30 records over 3 chunks, time-ordered, 3 keys. */
-  def writeChunks(dir: String): Seq[ChangeRecord] = {
-    val recs = (0 until 30).map { i =>
-      val op = i % 10 match {
-        case 0     => Op.Insert
-        case 9     => Op.Delete
-        case 5     => Op.Heartbeat
-        case _     => Op.Update
-      }
-      rec(i.toLong, 1000000L * (i + 1), op, s"k${i % 3}", s"v$i")
-    }
-    recs.grouped(10).zipWithIndex.foreach { case (g, i) =>
-      CdcChunkFile.write(f"$dir/chunk-$i%05d${CdcChunkFile.Extension}", g)
-    }
-    recs
-  }
-}
-
-class CodecSpec extends AnyFunSuite {
-  test("codec roundtrip preserves every field") {
-    val r = CdcFixtures.rec(42L, 1234567890123456L, Op.Update, "k1", "hello")
-    assert(RecordCodec.decode(RecordCodec.encode(r)) == r)
-  }
-
-  test("codec roundtrip: null maps, null tx, empty pk, unicode") {
-    val r = ChangeRecord(7L, null, 55L, 54L, Op.Delete, "db", "t",
-      Seq.empty, null, Map("x" -> null, "émoji→" -> "值"))
-    assert(RecordCodec.decode(RecordCodec.encode(r)) == r)
-  }
-
-  test("lazy header reads match full decode without tail parse") {
-    val r = CdcFixtures.rec(99L, 777777L, Op.Insert, "k", "v")
-    val b = RecordCodec.encode(r)
-    assert(RecordCodec.headerId(b) == 99L)
-    assert(RecordCodec.headerTsUs(b) == 777777L)
-    assert(RecordCodec.headerOp(b) == Op.Insert)
-    // header readable even when the tail is truncated (lazy promise)
-    val headOnly = java.util.Arrays.copyOf(b, RecordCodec.HeaderLen)
-    assert(RecordCodec.headerTsUs(headOnly) == 777777L)
-  }
-
-  test("codec v2 carries extended props + source; v1 segments still decode") {
-    val r = ChangeRecord(11L, "tx", 100L, 99L, Op.Update, "db", "t",
-      Seq("pk"), Map("pk" -> "1"), Map("pk" -> "1", "v" -> "x"),
-      props = Map("tag" -> "blue", "shard" -> "7"),
-      sourceType = "MySQL", sourceVersion = "8.0.36")
-    val round = RecordCodec.decode(RecordCodec.encode(r))
-    assert(round == r)
-    assert(round.props("tag") == "blue" && round.sourceType == "MySQL")
-    // a round-1 (v1) segment: same record minus the v2 tail
-    val v1 = RecordCodec.encode(r, 1.toByte)
-    val legacy = RecordCodec.decode(v1)
-    assert(legacy == r.copy(props = null, sourceType = null, sourceVersion = null))
-    // lazy reads are version-blind (fixed header + tail prefix)
-    assert(RecordCodec.headerId(v1) == 11L)
-    assert(RecordCodec.headerTable(v1) == (("db", "t")))
-    assert(RecordCodec.headerTable(RecordCodec.encode(r)) == (("db", "t")))
-  }
-
-  test("op codes are stable and total") {
-    Op.all.foreach(op => assert(Op.fromCode(Op.code(op)) == op))
-    assert(Op.fromCode(127) == Op.Unknown)
-  }
-}
-
-class ValuesSpec extends AnyFunSuite {
-  test("unsigned-safe integer numerics") {
-    assert(Values.parseIntegerNumeric("18446744073709551615")
-      == new java.math.BigDecimal("18446744073709551615"))
-  }
-  test("datetime with fractional seconds roundtrips") {
-    val us = Values.dateTimeToMicros("2024-01-02 03:04:05.678901")
-    assert(Values.microsToDateTime(us) == "2024-01-02 03:04:05.678901")
-    assert(Values.dateTimeToMicros("2024-01-02") ==
-      Values.dateTimeToMicros("2024-01-02 00:00:00"))
-  }
-  test("unix timestamp to micros") {
-    assert(Values.unixTimestampToMicros(10L, 5) == 10000005L)
-  }
-  test("bit bytes to long") {
-    assert(Values.bitToLong(Array(0x01.toByte, 0xff.toByte)) == 511L)
-  }
-  test("charset mapping decodes mysql names") {
-    val b = "héllo".getBytes("ISO-8859-1")
-    assert(Values.decodeString(b, "latin1") == "héllo")
-    assert(Values.decodeString("好".getBytes("UTF-8"), "utf8mb4") == "好")
-    // full reference alias table (ref: JDKCharsetMapper.java): MySQL's
-    // latin1 is windows-1252 — 0x80 decodes to €, not a C1 control
-    assert(Values.decodeString(Array(0x80.toByte), "latin1") == "€")
-    assert(Values.decodeString("中文".getBytes("GBK"), "gbk") == "中文")
-    assert(Values.decodeString("中文".getBytes("Big5"), "big5") == "中文")
-    assert(Values.decodeString("日本".getBytes("EUC-JP"), "ujis") == "日本")
-    assert(Values.decodeString("한국".getBytes("EUC-KR"), "euckr") == "한국")
-    assert(Values.decodeString("abc".getBytes("windows-1251"), "cp1251") == "abc")
-    assert(Values.charsetFor("koi8u").name() == "KOI8-R")
-    assert(Values.charsetFor("tis620").name() == "TIS-620")
-  }
-  test("special float spellings") {
-    assert(Values.parseFloat("NaN").isNaN)
-    assert(Values.parseFloat("-Infinity").isNegInfinity)
-  }
-  test("wkb point roundtrip, srid prefix, non-point rejected") {
-    assert(Values.parsePointWkb(Values.pointToWkb(1.5, -2.25))
-      == Some((1.5, -2.25)))
-    // big-endian WKB
-    val be = java.nio.ByteBuffer.allocate(21)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    be.put(0.toByte).putInt(1).putDouble(3.0).putDouble(4.0)
-    assert(Values.parsePointWkb(be.array()) == Some((3.0, 4.0)))
-    // MySQL internal form: 4-byte SRID prefix
-    val srid = java.nio.ByteBuffer.allocate(25)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    srid.putInt(4326).put(1.toByte).putInt(1).putDouble(9.0).putDouble(-9.0)
-    assert(Values.parsePointWkb(srid.array()) == Some((9.0, -9.0)))
-    // linestring (type 2) and garbage rejected
-    val ls = java.nio.ByteBuffer.allocate(21)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    ls.put(1.toByte).putInt(2).putDouble(0.0).putDouble(0.0)
-    assert(Values.parsePointWkb(ls.array()) == None)
-    assert(Values.parsePointWkb(Array[Byte](1, 2, 3)) == None)
-    assert(Values.parsePointWkb(null) == None)
-  }
-
-  test("wkt point roundtrip") {
-    assert(Values.parsePointWkt("POINT (1.5 -2.25)") == Some((1.5, -2.25)))
-    assert(Values.parsePointWkt(Values.pointToWkt(3.0, 4.0)) == Some((3.0, 4.0)))
-    assert(Values.parsePointWkt("LINESTRING (0 0, 1 1)") == None)
-  }
-
-  test("wkbToWkt: srid/length collision prefers the mysql form (pinned)") {
-    // 21-byte MySQL internal form: SRID 0 + LE POLYGON with two empty
-    // rings — the SAME total length as a standard WKB POINT, and the
-    // zero SRID bytes misread as a big-endian POINT header at offset 0.
-    // Both offsets fully consume; the mysql (offset-4) parse must win.
-    // Pinned from the r6 falsifying seed
-    // K3TrjetB9x2-cRJzDG7bCWy280wjBIS8_cVvREF9EEO=
-    val collide = Array[Byte](0, 0, 0, 0, 1, 3, 0, 0, 0, 2, 0, 0, 0,
-      0, 0, 0, 0, 0, 0, 0, 0)
-    assert(Values.wkbToWkt(collide) == Some("POLYGON (EMPTY, EMPTY)"))
-    // same collision with SRID 1 (LE prefix 01 00 00 00)
-    val collide1 = Array[Byte](1, 0, 0, 0, 1, 3, 0, 0, 0, 2, 0, 0, 0,
-      0, 0, 0, 0, 0, 0, 0, 0)
-    assert(Values.wkbToWkt(collide1) == Some("POLYGON (EMPTY, EMPTY)"))
-    // a genuine standard 21-byte POINT still decodes as itself
-    assert(Values.wkbToWkt(Values.pointToWkb(1.5, -2.25))
-      == Some("POINT (1.5 -2.25)"))
-    // and a genuine big-endian standard POINT too (first byte 0, like
-    // an SRID prefix's low byte — offset-4 must NOT steal this one)
-    val be = java.nio.ByteBuffer.allocate(21)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    be.put(0.toByte).putInt(1).putDouble(3.0).putDouble(4.0)
-    assert(Values.wkbToWkt(be.array()) == Some("POINT (3.0 4.0)"))
-    // the CHOSEN side of the inherent ambiguity (see wkbToWkt's
-    // comment): a standard LE POINT whose x mantissa spells a polygon
-    // type word and whose y = +0.0 supplies zero ring counts is
-    // byte-identical to a MySQL SRID + BE empty-ring polygon; the
-    // domain prior (MySQL wire bytes always carry the prefix) decodes
-    // it as the polygon BY DESIGN
-    val amb = java.nio.ByteBuffer.allocate(21)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    amb.put(1.toByte).putInt(1)
-      .putDouble(java.lang.Double.longBitsToDouble(0x0200000003000000L))
-      .putDouble(0.0)
-    assert(Values.wkbToWkt(amb.array()) == Some("POLYGON (EMPTY, EMPTY)"))
-  }
-}
-
 class CdcSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

@@ -8,7 +8,7 @@ import org.scalacheck.Prop.forAll
   * shape the generators produce — unicode keys, empty/null maps, null
   * columns, extreme timestamps, every op code — encode→decode must be
   * the identity, and the lazy header/prefix reads must agree with the
-  * full decode without parsing the tail. The example-based CdcSpec
+  * full decode without parsing the tail. The example-based CodecSpec
   * cases pin known shapes; this hunts the shapes nobody thought of.
   */
 object CodecProps extends Properties("RecordCodec") {

@@ -198,7 +198,8 @@ class SinkSpec extends AnyFunSuite {
     assertOneFileEach(folded, "fold")
     CdcParquetSink.compact(s, tableDir, nBuckets = 4)
     val compacted = CdcParquetSink.latestManifest(tableDir).get
-    assert(compacted.values.forall(_.head.startsWith("compact-")), compacted)
+    // the compaction of batch 1 (the last of the two triggers)
+    assert(compacted.values.forall(_.head.startsWith("v000000000001-c1/")), compacted)
     assertOneFileEach(compacted, "compact")
     // the clustered merge is still last-DML-wins per key
     val table = CdcParquetSink.readTable(s, tableDir).get
@@ -326,18 +327,22 @@ class SinkSpec extends AnyFunSuite {
       CdcParquetSink.applyBatch(spark, oneRec(10 + b, 5 + b, "k1", s"u$b"),
         tableDir, b, nBuckets = 2, maxDeltas = 1)
     }
-    // a compact publishes a hash-named manifest; ADVICE r10: on an
-    // mtime tie its name sorts BEFORE every versioned manifest, which
-    // used to let the just-published live manifest's data get GC'd.
-    // The publication log orders by publish, not mtime — so the
-    // compact IS the newest entry and its data survives, and _LATEST
-    // resolves to a readable table whatever the filesystem's mtime
-    // granularity.
+    // ADVICE r10: an mtime sort once put a compaction's manifest
+    // BEFORE every batch manifest on an mtime tie and let the
+    // just-published live manifest's data get GC'd. Version order now
+    // comes from the manifest names alone: the compaction of batch 2
+    // is v2-c1, it orders last, _LATEST names it and its data survives
+    // the GC its own publish ran, whatever the filesystem's mtimes.
     CdcParquetSink.compact(spark, tableDir, nBuckets = 2)
-    val pub = Files.readAllLines(Paths.get(tableDir, "_PUBLISHED"))
-    assert(pub.size() == 4 && pub.get(3).startsWith("manifest-compact-"))
+    val (published, pending) = CdcParquetSink.versions(tableDir)
+    assert(published.map(_.manifest) == Seq("manifest-v000000000000.tsv",
+      "manifest-v000000000001.tsv", "manifest-v000000000002.tsv",
+      "manifest-v000000000002-c1.tsv") && pending.isEmpty)
     val latest = Files.readString(Paths.get(tableDir, "_LATEST")).trim
-    assert(latest.startsWith("manifest-compact-"))
+    assert(latest == "manifest-v000000000002-c1.tsv")
+    val live = CdcParquetSink.latestManifest(tableDir).get.values.flatten
+    assert(live.nonEmpty && live.forall(rel => rel.startsWith("v000000000002-c1/") &&
+      Files.isDirectory(Paths.get(tableDir, rel))), live)
     val df = CdcParquetSink.readTable(spark, tableDir).get
     assert(df.filter(col("key").endsWith("|k1")).count() == 1)
     assert(df.select(element_at(col("after"), "v")).head().getString(0) == "u2")
@@ -384,15 +389,10 @@ class SinkSpec extends AnyFunSuite {
       .getFileName.toString
     CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
     val v1 = CdcParquetSink.latestSnapshot(tableDir).get
-    val v1Name = Paths.get(v1).getFileName.toString
     val rows = CdcParquetSink.readTable(spark, tableDir).get.collect().toSet
     // simulate the ADVICE r11 crash window: batch 1's manifest landed
-    // but the publish never completed — _LATEST still points at v0 and
-    // the publication log never saw v1
+    // but the publish never completed — _LATEST still points at v0
     Files.writeString(Paths.get(tableDir, "_LATEST"), v0Name)
-    val log = Paths.get(tableDir, "_PUBLISHED")
-    Files.writeString(log, Files.readString(log).linesIterator
-      .filterNot(_.trim == v1Name).mkString("", "\n", "\n"))
     assert(CdcParquetSink.latestSnapshot(tableDir).get != v1)
     // the at-least-once replay of batch 1 must COMPLETE the publish
     // instead of short-circuiting (which silently lost the batch)
@@ -404,6 +404,68 @@ class SinkSpec extends AnyFunSuite {
     // _LATEST back past its successors
     CdcParquetSink.applyBatch(spark, all.filter(col("id") < 25), tableDir, 0L)
     assert(CdcParquetSink.latestSnapshot(tableDir).get == v1)
+    // nor past a compaction of the replayed batch or an older one
+    CdcParquetSink.compact(spark, tableDir)
+    val c1 = CdcParquetSink.latestSnapshot(tableDir).get
+    assert(Paths.get(c1).getFileName.toString == "manifest-v000000000001-c1.tsv")
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") < 25), tableDir, 0L)
+    assert(CdcParquetSink.latestSnapshot(tableDir).get == c1)
+    assert(CdcParquetSink.readTable(spark, tableDir).get
+      .collect().toSet == rows)
+  }
+
+  test("a compaction between a crashed publish and its replay loses no batch") {
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val recs = CdcFixtures.writeChunks(dir)
+    val all = CdcStreaming.readBatch(spark, dir)
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") < 25), tableDir, 0L)
+    val v0Name = Paths.get(CdcParquetSink.latestSnapshot(tableDir).get)
+      .getFileName.toString
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
+    // batch 1's manifest landed, its _LATEST swap did not; a compaction
+    // runs before the replay and compacts v0
+    Files.writeString(Paths.get(tableDir, "_LATEST"), v0Name)
+    CdcParquetSink.compact(spark, tableDir)
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
+    assert(SinkSpec.live(CdcParquetSink.readTable(spark, tableDir).get) ==
+      SinkSpec.model(recs.filter(_.op != Op.Heartbeat)))
+    assert(Paths.get(CdcParquetSink.latestSnapshot(tableDir).get).getFileName
+      .toString == "manifest-v000000000001.tsv")
+  }
+
+  test("a leftover temp manifest is no version; the replay writes and " +
+      "publishes it") {
+    val dir = TestDirs.tmp("gcl")
+    val tableDir = TestDirs.tmp("tbl")
+    val recs = CdcFixtures.writeChunks(dir).filter(_.op != Op.Heartbeat)
+    val all = CdcStreaming.readBatch(spark, dir)
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") < 25), tableDir, 0L)
+    val v0Name = Paths.get(CdcParquetSink.latestSnapshot(tableDir).get)
+      .getFileName.toString
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
+    // a kill inside batch 1's manifest write: the manifest is still its
+    // hidden temp file and _LATEST names v0
+    val m1 = Paths.get(tableDir, "manifest-v000000000001.tsv")
+    val tmp = Paths.get(tableDir, ".manifest-v000000000001.tsv.tmp")
+    Files.move(m1, tmp)
+    Files.writeString(Paths.get(tableDir, "_LATEST"), v0Name)
+    assert(CdcParquetSink.versions(tableDir) ==
+      ((Seq(CdcParquetSink.Version(0L, 0)), Nil)))
+    val model0 = SinkSpec.model(recs.filter(_.id < 25))
+    assert(SinkSpec.live(CdcParquetSink.readTableAsOf(spark, tableDir, 1L).get) == model0)
+    assert(CdcParquetSink.changeFeed(spark, tableDir).get
+      .select("version").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+    // the replay finds no manifest: it writes the batch and publishes it
+    CdcParquetSink.applyBatch(spark, all.filter(col("id") >= 25), tableDir, 1L)
+    assert(Files.exists(m1) && !Files.exists(tmp))
+    assert(CdcParquetSink.latestSnapshot(tableDir).get == m1.toString)
+    assert(SinkSpec.live(CdcParquetSink.readTable(spark, tableDir).get) ==
+      SinkSpec.model(recs))
+    assert(CdcParquetSink.changeFeed(spark, tableDir).get
+      .select("version").distinct().collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(0L, 1L))
   }
 
   test("stale pre-delete record cannot resurrect a deleted key") {

@@ -14,7 +14,7 @@ object ValueProps extends Properties("Values") {
   // 500 cases/property: the r6 WKB srid-collision bug hid for rounds
   // behind rotating seeds at the default 100 (falsifying seed
   // K3TrjetB9x2-cRJzDG7bCWy280wjBIS8_cVvREF9EEO=, now pinned as a
-  // deterministic CdcSpec case). ScalaCheck prints the seed on failure.
+  // deterministic ValuesSpec case). ScalaCheck prints the seed on failure.
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
       : org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(500)
